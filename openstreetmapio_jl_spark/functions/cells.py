@@ -9,7 +9,11 @@ broadcast-or-shuffle hash join").
   vectorized over NumPy arrays. Level 12 ≈ 3-6 km cells.
 - **XYZ**: standard Web-Mercator slippy tiles (z/x/y + quadkey). Exactly
   SQL-expressible (floor/log formulas), so XYZ-keyed operators are DuckDB-oracle
-  checkable end-to-end.
+  checkable end-to-end. This module is the ONLY engine module that knows the
+  tile math and the packed key layout ``z·2^58 + x·2^29 + y``: operators
+  build on :func:`xyz_cols`, :func:`tile_key_col`, :func:`tile_xy_cols`,
+  :func:`tile_keys_col` and :func:`tile_key_offset` (a source-reading test
+  guards this).
 - **Hex**: H3-style hexagonal binning. If the real ``h3`` wheel is importable it is
   used (bit-compatible ids for res 7/9); otherwise a deterministic vendored
   fallback bins into a flat-top hex lattice on Web-Mercator meters with
@@ -244,6 +248,9 @@ def s2_parent(cell_id: np.ndarray, level: int) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 MERCATOR_LAT_LIMIT = 85.05112878
+# packed key layout (z·2^58 + x·2^29 + y): x, y < 2^29 at every zoom ≤ 29
+_Z_STRIDE = 1 << 58
+_X_STRIDE = 1 << 29
 
 
 def xyz_tile(lat: np.ndarray, lon: np.ndarray, z: int) -> tuple[np.ndarray, np.ndarray]:
@@ -257,12 +264,6 @@ def xyz_tile(lat: np.ndarray, lon: np.ndarray, z: int) -> tuple[np.ndarray, np.n
         (1.0 - np.log(np.tan(lat_rad) + 1.0 / np.cos(lat_rad)) / math.pi) / 2.0 * n
     ).astype(np.int64)
     return np.clip(x, 0, (1 << z) - 1), np.clip(y, 0, (1 << z) - 1)
-
-
-def xyz_tile_key(lat, lon, z: int) -> np.ndarray:
-    """Single int64 key: (z << 58) | (x << 29) | y — join-friendly."""
-    x, y = xyz_tile(lat, lon, z)
-    return (np.int64(z) << np.int64(58)) | (x << np.int64(29)) | y
 
 
 def mercator_unit_cols(lat: Column, lon: Column, z: int) -> tuple[Column, Column]:
@@ -288,7 +289,7 @@ def mercator_unit_cols(lat: Column, lon: Column, z: int) -> tuple[Column, Column
     return u, m
 
 
-def _xyz_cols(lat: Column, lon: Column, z: int) -> tuple[Column, Column]:
+def xyz_cols(lat: Column, lon: Column, z: int) -> tuple[Column, Column]:
     """(x, y) tile index Columns at zoom z (clamped; pure Catalyst)."""
     u, m = mercator_unit_cols(lat, lon, z)
     x = F.floor(u).cast("long")
@@ -298,13 +299,45 @@ def _xyz_cols(lat: Column, lon: Column, z: int) -> tuple[Column, Column]:
     return x, y
 
 
+def tile_key_col(x: Column, y: Column, z: int | Column) -> Column:
+    """Pack tile indexes into the engine's single key layout,
+    ``z·2^58 + x·2^29 + y``. ``z`` is a zoom int or a per-row zoom Column
+    (the adaptive cover keys every polygon at its own level)."""
+    zc = z if isinstance(z, Column) else F.lit(z)
+    return (
+        zc.cast("long") * F.lit(_Z_STRIDE).cast("long")
+        + x * F.lit(_X_STRIDE).cast("long")
+        + y
+    )
+
+
+def tile_xy_cols(tile: Column, z: int) -> tuple[Column, Column]:
+    """Inverse of :func:`tile_key_col` at zoom ``z``: (x, y) LONG Columns."""
+    x = ((tile - z * _Z_STRIDE) / _X_STRIDE).cast("long")
+    y = tile % _X_STRIDE
+    return x, y
+
+
+def tile_key_offset(dx: int, dy: int) -> int:
+    """Key difference between tiles (x+dx, y+dy) and (x, y) at one zoom, so a
+    tile neighborhood is a set of constant key deltas (no unpack needed)."""
+    return dx * _X_STRIDE + dy
+
+
+def tile_keys_col(xs: Column, ys: Column, z: int | Column) -> Column:
+    """ARRAY<BIGINT> keys of every tile in ``xs × ys`` (two index arrays),
+    x-major — the explode key of a tile cover or neighborhood."""
+    return F.flatten(
+        F.transform(xs, lambda xx: F.transform(ys, lambda yy: tile_key_col(xx, yy, z)))
+    )
+
+
 def xyz_tile_key_col(lat: Column, lon: Column, z: int) -> Column:
-    """Pure-Catalyst twin of :func:`xyz_tile_key` (stays in codegen; identical
-    formula is used in DuckDB oracle SQL)."""
-    x, y = _xyz_cols(lat, lon, z)
-    return (F.lit(z).cast("long") * F.lit(1 << 58).cast("long")) + (
-        x * F.lit(1 << 29).cast("long")
-    ) + y
+    """Packed tile key of a point at zoom z, as pure Catalyst (stays in
+    codegen). :func:`xyz_tile_key_sql` is the same formula in DuckDB SQL; the
+    NumPy reference is :func:`xyz_tile` packed the same way."""
+    x, y = xyz_cols(lat, lon, z)
+    return tile_key_col(x, y, z)
 
 
 def xyz_tile_key_sql(lat_expr: str, lon_expr: str, z: int) -> str:
@@ -342,7 +375,7 @@ def quadkey_col(lat: Column, lon: Column, z: int) -> Column:
     (MSB-first), digit = x_bit + 2·y_bit, looked up from '0123'. Quadkeys carry
     the hierarchical prefix property (parent = prefix), which makes multi-zoom
     rollups plain ``substring`` + groupBy. SQL twin: :func:`quadkey_sql`."""
-    x, y = _xyz_cols(lat, lon, z)
+    x, y = xyz_cols(lat, lon, z)
     digits = []
     for i in range(z, 0, -1):
         mask = 1 << (i - 1)

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from openstreetmapio_jl_spark.functions import geo
-from openstreetmapio_jl_spark.operators.spatial_join import _tile_of, _tile_row_of, tile_key
+from openstreetmapio_jl_spark.functions.cells import tile_keys_col, xyz_cols, xyz_tile_key_col
 
 EQUATOR_M = 40_075_016.686
 
@@ -38,18 +38,10 @@ def _neighbor_tiles(lat_col, lon_col, z: int, r: int):
     """ARRAY<BIGINT> tile keys of the (2r+1)^2 neighborhood (x wraps around the
     antimeridian via pmod; y clamps at the poles)."""
     n = 1 << z
-    x = _tile_of(lon_col, z)
-    y = _tile_row_of(lat_col, z)
-    xs = F.sequence(x - r, x + r)
+    x, y = xyz_cols(lat_col, lon_col, z)
+    xs = F.transform(F.sequence(x - r, x + r), lambda xx: F.pmod(xx, F.lit(n)))
     ys = F.sequence(F.greatest(y - r, F.lit(0)), F.least(y + r, F.lit(n - 1)))
-    return F.flatten(
-        F.transform(
-            xs,
-            lambda xx: F.transform(
-                ys, lambda yy: tile_key(F.pmod(xx, F.lit(n)), yy, z)
-            ),
-        )
-    )
+    return tile_keys_col(xs, ys, z)
 
 
 def _safe_radius_m(lat_col, z: int, r: int):
@@ -98,7 +90,7 @@ def knn_join(
         F.col(corpus_id).alias("neighbor_id"),
         F.col(lat_col).alias("c_lat"),
         F.col(lon_col).alias("c_lon"),
-    ).withColumn("tile", tile_key(_tile_of(F.col("c_lon"), zoom), _tile_row_of(F.col("c_lat"), zoom), zoom))
+    ).withColumn("tile", xyz_tile_key_col(F.col("c_lat"), F.col("c_lon"), zoom))
     c = c.persist()
     if handles is not None:
         handles.append(c)

@@ -11,9 +11,9 @@ Scale design:
   every tile its bbox touches — candidate pairs are bounded by tile granularity;
 - small polygon sides broadcast (``broadcast=True`` or Spark's auto threshold);
   planet-scale sides shuffle on the tile key;
-- hot cells (dense urban tiles) get explicit **salting** (:func:`salted_join`) —
-  AQE skew-split can divide a skewed *partition* but not a single hot *key*;
-  salting can (SURVEY.md §4).
+- hot cells (dense urban tiles) get explicit **salting** (``nsalt=`` of
+  :func:`point_in_polygon_join`) — AQE skew-split can divide a skewed
+  *partition* but not a single hot *key*; salting can (SURVEY.md §4).
 
 The reference never joins (SURVEY.md §2 Table B); its member/refs resolution
 semantics (``test/test_load_pbf.jl:698-725``) define the explode→join→reassemble
@@ -26,18 +26,19 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from openstreetmapio_jl_spark.functions import geo
-from openstreetmapio_jl_spark.functions.cells import MERCATOR_LAT_LIMIT, xyz_tile_key_col
-
-import math
+from openstreetmapio_jl_spark.functions.cells import (
+    tile_key_col,
+    tile_keys_col,
+    xyz_cols,
+    xyz_tile_key_col,
+)
 
 
 # ---------------------------------------------------------------------------
 # polygon assembly
 # ---------------------------------------------------------------------------
 
-def assemble_polygon_rings(
-    ways: DataFrame, nodes: DataFrame | None = None, *, broadcast_nodes: bool = False
-) -> DataFrame:
+def assemble_polygon_rings(ways: DataFrame, nodes: DataFrame | None = None) -> DataFrame:
     """Closed ways → (id, tags, ring ARRAY<STRUCT<lat,lon>>).
 
     Ways with embedded LocationsOnWays positions use them directly; otherwise the
@@ -58,8 +59,6 @@ def assemble_polygon_rings(
     node_pos = nodes.select(
         F.col("id").alias("ref"), F.col("lat").alias("n_lat"), F.col("lon").alias("n_lon")
     )
-    if broadcast_nodes:
-        node_pos = F.broadcast(node_pos)
     exploded = without.select(
         "id", "tags", F.size("refs").alias("n_refs"), F.posexplode("refs").alias("seq", "ref")
     )
@@ -402,58 +401,31 @@ def polygons_with_edges(rings: DataFrame) -> DataFrame:
 # tile cover
 # ---------------------------------------------------------------------------
 
-def _tile_of(lon: Column, z: int) -> Column:
-    n = float(1 << z)
-    return F.greatest(
-        F.least(
-            F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(n)).cast("long"),
-            F.lit((1 << z) - 1),
-        ),
-        F.lit(0),
-    )
-
-
-def _tile_row_of(lat: Column, z: int) -> Column:
-    n = float(1 << z)
-    lat_c = F.greatest(
-        F.least(lat, F.lit(MERCATOR_LAT_LIMIT)), F.lit(-MERCATOR_LAT_LIMIT)
-    )
-    rad = F.radians(lat_c)
-    return F.greatest(
-        F.least(
-            F.floor(
-                (F.lit(1.0) - F.log(F.tan(rad) + F.lit(1.0) / F.cos(rad)) / F.lit(math.pi))
-                / F.lit(2.0)
-                * F.lit(n)
-            ).cast("long"),
-            F.lit((1 << z) - 1),
-        ),
-        F.lit(0),
-    )
-
-
-def tile_key(x: Column, y: Column, z: int) -> Column:
-    return (
-        F.lit(z).cast("long") * F.lit(1 << 58).cast("long")
-        + x * F.lit(1 << 29).cast("long")
-        + y
-    )
-
-
-def tile_key_col(x: Column, y: Column, z: Column) -> Column:
-    """tile_key with a per-row zoom column (adaptive-cover path)."""
-    return (
-        z.cast("long") * F.lit(1 << 58).cast("long")
-        + x * F.lit(1 << 29).cast("long")
-        + y
-    )
-
-
 def _shift_right(col: Column, d: Column) -> Column:
     """col >> d with a COLUMN shift amount (Spark's shiftright needs a literal).
     Exact for tile indexes: values < 2^29 and 2^d are both exactly representable
     as doubles."""
     return F.floor(col / F.pow(F.lit(2.0), d)).cast("long")
+
+
+def _bbox_keys(
+    x_lo: Column, x_hi: Column, y0: Column, y1: Column, crosses: Column,
+    n: Column, z: int | Column,
+) -> Column:
+    """Keys of the tiles between west column ``x_lo``, east column ``x_hi`` and
+    rows ``y0..y1`` on a grid ``n`` tiles wide. A wrapped bbox (``crosses``)
+    takes the two x-arcs through the antimeridian; wrapped arcs that meet
+    inside one tile column cover the full row."""
+    zero = F.lit(0).cast("long")
+    xs = (
+        F.when(
+            crosses & (x_lo > x_hi),
+            F.concat(F.sequence(x_lo, n - 1), F.sequence(zero, x_hi)),
+        )
+        .when(crosses, F.sequence(zero, n - 1))
+        .otherwise(F.sequence(x_lo, x_hi))
+    )
+    return tile_keys_col(xs, F.sequence(y0, y1), z)
 
 
 def tile_cover_bbox(
@@ -470,27 +442,9 @@ def tile_cover_bbox(
     (plain bbox with lon span > 180°) keeps the single full x-range — the
     old raw-span heuristic covered its complement and silently lost interior
     hits."""
-    n = 1 << z
-    y0 = _tile_row_of(max_lat, z)  # north edge → smaller row
-    y1 = _tile_row_of(min_lat, z)
-    x_lo = _tile_of(min_lon, z)
-    x_hi = _tile_of(max_lon, z)
-    crosses = min_lon > max_lon
-    xs = (
-        F.when(
-            crosses & (x_lo > x_hi),
-            F.concat(F.sequence(x_lo, F.lit(n - 1)), F.sequence(F.lit(0), x_hi)),
-        )
-        # wrapped arcs that meet inside one tile column cover the full ring
-        .when(crosses, F.sequence(F.lit(0), F.lit(n - 1)))
-        .otherwise(F.sequence(x_lo, x_hi))
-    )
-    return F.flatten(
-        F.transform(
-            xs,
-            lambda xx: F.transform(F.sequence(y0, y1), lambda yy: tile_key(xx, yy, z)),
-        )
-    )
+    x_lo, y0 = xyz_cols(max_lat, min_lon, z)  # north-west corner: smallest row
+    x_hi, y1 = xyz_cols(min_lat, max_lon, z)
+    return _bbox_keys(x_lo, x_hi, y0, y1, min_lon > max_lon, F.lit(1 << z), z)
 
 
 def adaptive_cover_cols(
@@ -507,10 +461,8 @@ def adaptive_cover_cols(
     polygons (the overwhelming majority) keep the full-resolution level — their
     candidate sets stay tight."""
     n = 1 << z
-    y0 = _tile_row_of(max_lat, z)
-    y1 = _tile_row_of(min_lat, z)
-    x_lo = _tile_of(min_lon, z)
-    x_hi = _tile_of(max_lon, z)
+    x_lo, y0 = xyz_cols(max_lat, min_lon, z)
+    x_hi, y1 = xyz_cols(min_lat, max_lon, z)
     # wrapped bbox convention (min_lon > max_lon): min = west bound (high x),
     # max = east bound (low x) — same convention as tile_cover_bbox
     crosses = min_lon > max_lon
@@ -524,25 +476,12 @@ def adaptive_cover_cols(
     )
     d = F.least(d, F.lit(z))
     lvl = (F.lit(z) - d).cast("int")
-    nl = _shift_right(F.lit(n).cast("long"), d)  # tiles per axis at lvl
-    xl_lo, xl_hi = _shift_right(x_lo, d), _shift_right(x_hi, d)
-    yl0, yl1 = _shift_right(y0, d), _shift_right(y1, d)
-    xs = (
-        F.when(
-            crosses & (xl_lo > xl_hi),
-            F.concat(
-                F.sequence(xl_lo, nl - 1), F.sequence(F.lit(0).cast("long"), xl_hi)
-            ),
-        )
-        # wrapped arcs that merge at this coarse level cover the full ring
-        .when(crosses, F.sequence(F.lit(0).cast("long"), nl - 1))
-        .otherwise(F.sequence(xl_lo, xl_hi))
-    )
-    keys = F.flatten(
-        F.transform(
-            xs,
-            lambda xx: F.transform(F.sequence(yl0, yl1), lambda yy: tile_key_col(xx, yy, lvl)),
-        )
+    keys = _bbox_keys(
+        _shift_right(x_lo, d), _shift_right(x_hi, d),
+        _shift_right(y0, d), _shift_right(y1, d),
+        crosses,
+        _shift_right(F.lit(n).cast("long"), d),  # tiles per axis at lvl
+        lvl,
     )
     return lvl, keys
 
@@ -620,8 +559,7 @@ def point_in_polygon_join(
         # distinct levels as a lazy broadcast frame (≤ zoom+1 rows), NOT a
         # collect during plan build: constructing the join must be action-free
         levels_df = with_lvl.select("_lvl").distinct()
-        x13 = _tile_of(lon, zoom)
-        y13 = _tile_row_of(lat, zoom)
+        x13, y13 = xyz_cols(lat, lon, zoom)
         d = F.lit(zoom) - F.col("_lvl")
         pts = (
             points.crossJoin(F.broadcast(levels_df))
@@ -683,24 +621,6 @@ def point_in_polygon_join(
     if nsalt > 0:
         drop.append("_salt")
     return hit.drop(*drop)
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    nsalt: int,
-    *,
-    how: str = "inner",
-) -> DataFrame:
-    """Generic hot-key salting: ``big`` rows get ``pmod(hash(<all cols>), n)``;
-    ``small`` explodes the full salt range. Correctness: every (big,small) key pair
-    meets in exactly one (key, salt) bucket."""
-    b = big.withColumn("_salt", F.pmod(F.hash(*big.columns), F.lit(nsalt)).cast("int"))
-    s = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(nsalt - 1)))
-    )
-    return b.join(s, [key, "_salt"], how).drop("_salt")
 
 
 def bbox_intersection_join(

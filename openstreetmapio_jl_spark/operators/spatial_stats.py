@@ -40,8 +40,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# the 3x3 neighborhood INCLUDING self, as XYZ-key deltas (x stride 2^29)
-GI_DELTAS = [dx * (1 << 29) + dy for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
+from openstreetmapio_jl_spark.functions.cells import tile_key_offset
+
+# the 3x3 neighborhood INCLUDING self, as XYZ-key deltas
+GI_DELTAS = [tile_key_offset(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
 
 
 def gi_star(tile_counts: DataFrame, *, key_col: str = "tile", x_col: str = "n") -> DataFrame:

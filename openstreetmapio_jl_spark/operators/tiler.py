@@ -1,10 +1,10 @@
 """XYZ raster↔vector tiler.
 
-Vector→raster: points binned into z/x/y tiles and 256×256 in-tile pixels, counts
-aggregated per pixel (sparse representation — dense tiles at planet scale would be
-256KB each; sparse keeps shuffle volume proportional to occupied pixels).
+Vector→raster: points binned into z/x/y tiles, counts aggregated per tile (sparse
+representation — only occupied tiles carry rows, so shuffle volume stays
+proportional to them).
 
-Raster→vector: tiles (or pixels) back to bbox rings compatible with the PIP join's
+Raster→vector: tiles back to bbox rings compatible with the PIP join's
 polygon format.
 
 Pyramid rollup: child→parent tile aggregation is pure integer arithmetic
@@ -21,14 +21,11 @@ from pyspark.sql import functions as F
 
 from openstreetmapio_jl_spark.functions import geo
 from openstreetmapio_jl_spark.functions.cells import (
-    MERCATOR_LAT_LIMIT,
     mercator_unit_cols,
-    tile_bounds,
+    tile_xy_cols,
+    xyz_cols,
 )
 from openstreetmapio_jl_spark.functions.geo import M2_PER_DEG2
-from openstreetmapio_jl_spark.operators.spatial_join import _tile_of, _tile_row_of
-
-TILE_PX = 256
 
 # Web-Mercator ground resolution at z0 for a 256px tile: 2*pi*R_earth / 256.
 WEBMERC_M_PER_PX_Z0 = 156543.03392804097
@@ -46,54 +43,11 @@ def tile_tolerance_m2(z: int, *, px_tol: float = 1.0, ref_lat: float = 0.0) -> f
     return (px_tol * m_per_px) ** 2
 
 
-def rasterize_points(
-    points: DataFrame,
-    z: int,
-    *,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    value_col: str | None = None,
-    px: int = TILE_PX,
-) -> DataFrame:
-    """→ (z, x, y, pixel_x, pixel_y, n[, sum_value]) sparse raster."""
-    lat = F.greatest(
-        F.least(F.col(lat_col), F.lit(MERCATOR_LAT_LIMIT)), F.lit(-MERCATOR_LAT_LIMIT)
-    )
-    lon = F.col(lon_col)
-    n = float(1 << z)
-    fx = (lon + F.lit(180.0)) / F.lit(360.0) * F.lit(n)
-    rad = F.radians(lat)
-    fy = (
-        (F.lit(1.0) - F.log(F.tan(rad) + F.lit(1.0) / F.cos(rad)) / F.lit(math.pi))
-        / F.lit(2.0)
-        * F.lit(n)
-    )
-    x = F.least(F.floor(fx).cast("long"), F.lit((1 << z) - 1))
-    y = F.least(F.floor(fy).cast("long"), F.lit((1 << z) - 1))
-    pixel_x = F.least(F.floor((fx - x) * px).cast("int"), F.lit(px - 1))
-    pixel_y = F.least(F.floor((fy - y) * px).cast("int"), F.lit(px - 1))
-    base = points.select(
-        F.lit(z).alias("z"),
-        x.alias("x"),
-        y.alias("y"),
-        pixel_x.alias("pixel_x"),
-        pixel_y.alias("pixel_y"),
-        *( [F.col(value_col).alias("_v")] if value_col else [] ),
-    )
-    aggs = [F.count("*").alias("n")]
-    if value_col:
-        aggs.append(F.sum("_v").alias("sum_value"))
-    return base.groupBy("z", "x", "y", "pixel_x", "pixel_y").agg(*aggs)
-
-
 def tile_counts(points: DataFrame, z: int, *, lat_col="lat", lon_col="lon") -> DataFrame:
     """Tile-level aggregation (no pixels): (z, x, y, n)."""
+    x, y = xyz_cols(F.col(lat_col), F.col(lon_col), z)
     return (
-        points.select(
-            F.lit(z).alias("z"),
-            _tile_of(F.col(lon_col), z).alias("x"),
-            _tile_row_of(F.col(lat_col), z).alias("y"),
-        )
+        points.select(F.lit(z).alias("z"), x.alias("x"), y.alias("y"))
         .groupBy("z", "x", "y")
         .count()
         .withColumnRenamed("count", "n")
@@ -444,11 +398,6 @@ def encode_tile_lines(clipped: DataFrame, *, extent: int = ENCODE_EXTENT) -> Dat
     )
 
 
-def tile_bounds_py(x: int, y: int, z: int):
-    """Python twin (tests): (south, west, north, east)."""
-    return tile_bounds(x, y, z)
-
-
 def tile_center_cols(tile, z: int):
     """(center_lat, center_lon) of a packed XYZ tile key — the inverse
     Web-Mercator transform at the tile midpoint (the standard rasterization
@@ -456,8 +405,7 @@ def tile_center_cols(tile, z: int):
     EXPLICITLY so the DuckDB oracle (which has no sinh) can run the
     byte-identical expression."""
     n = float(1 << z)
-    x = ((tile - z * (1 << 58)) / (1 << 29)).cast("long").cast("double")
-    y = (tile % (1 << 29)).cast("double")
+    x, y = (c.cast("double") for c in tile_xy_cols(tile, z))
     clon = (x + 0.5) / n * 360.0 - 180.0
     tcol = F.lit(math.pi) * (1.0 - 2.0 * (y + 0.5) / n)
     clat = F.degrees(F.atan((F.exp(tcol) - F.exp(-tcol)) / 2.0))

@@ -34,6 +34,7 @@ from openstreetmapio_jl_spark import model
 from openstreetmapio_jl_spark.operators.predicates import ElementPredicate, ElementTransform
 from openstreetmapio_jl_spark.pbf import blocks, decode
 
+_KINDS = ("nodes", "ways", "relations")
 _KIND_SCHEMA = {
     "nodes": (model.NODES_ARROW, model.NODES_DDL),
     "ways": (model.WAYS_ARROW, model.WAYS_DDL),
@@ -129,35 +130,48 @@ def blob_index_df(
     return df.repartition(target, "blob_seq"), meta
 
 
+def _decode_blobs(
+    batches: Iterator[pa.RecordBatch],
+    kinds: tuple[str, ...],
+    predicates: dict,
+    transforms: dict,
+) -> Iterator[tuple[str, pa.RecordBatch]]:
+    """The one blob-decode loop: per blob descriptor, read → decompress →
+    decode only ``kinds`` → per-kind predicate → transform; yields
+    ``(kind, batch)`` for non-empty results."""
+    for batch in batches:
+        paths = batch.column("path").to_pylist()
+        seqs = batch.column("blob_seq").to_pylist()
+        offs = batch.column("data_offset").to_pylist()
+        sizes = batch.column("data_size").to_pylist()
+        for path, seq, off, size in zip(paths, seqs, offs, sizes):
+            payload = blocks.decompress_blob(blocks.read_blob_payload(path, off, size))
+            out = decode.decode_primitive_block(
+                payload, want=kinds, stats=decode.BlockStats()
+            )
+            for kind in kinds:
+                parts = out.get(kind)
+                if not parts:
+                    continue
+                rb = decode.parts_to_batch(parts, _KIND_SCHEMA[kind][0], seq)
+                pred = predicates.get(kind)
+                if pred is not None:
+                    rb = pred.apply_arrow(rb)
+                tf = transforms.get(kind)
+                if tf is not None:
+                    rb = tf.apply_arrow(rb)
+                if rb.num_rows:
+                    yield kind, rb
+
+
 def _decode_kernel(
     kind: str,
     predicate: ElementPredicate | None,
     transform: ElementTransform | None = None,
 ):
-    schema, _ = _KIND_SCHEMA[kind]
-
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            paths = batch.column("path").to_pylist()
-            seqs = batch.column("blob_seq").to_pylist()
-            offs = batch.column("data_offset").to_pylist()
-            sizes = batch.column("data_size").to_pylist()
-            for path, seq, off, size in zip(paths, seqs, offs, sizes):
-                payload = blocks.decompress_blob(
-                    blocks.read_blob_payload(path, off, size)
-                )
-                stats = decode.BlockStats()
-                out = decode.decode_primitive_block(payload, want=(kind,), stats=stats)
-                parts = out.get(kind)
-                if not parts:
-                    continue
-                rb = decode.parts_to_batch(parts, schema, seq)
-                if predicate is not None:
-                    rb = predicate.apply_arrow(rb)
-                if transform is not None:
-                    rb = transform.apply_arrow(rb)
-                if rb.num_rows:
-                    yield rb
+        for _, rb in _decode_blobs(batches, (kind,), {kind: predicate}, {kind: transform}):
+            yield rb
 
     return kernel
 
@@ -179,35 +193,9 @@ def _union_batch(rb: pa.RecordBatch, kind: str) -> pa.RecordBatch:
 
 
 def _decode_union_kernel(predicates: dict, transforms: dict | None = None):
-    transforms = transforms or {}
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            paths = batch.column("path").to_pylist()
-            seqs = batch.column("blob_seq").to_pylist()
-            offs = batch.column("data_offset").to_pylist()
-            sizes = batch.column("data_size").to_pylist()
-            for path, seq, off, size in zip(paths, seqs, offs, sizes):
-                payload = blocks.decompress_blob(
-                    blocks.read_blob_payload(path, off, size)
-                )
-                stats = decode.BlockStats()
-                out = decode.decode_primitive_block(
-                    payload, want=("nodes", "ways", "relations"), stats=stats
-                )
-                for kind in ("nodes", "ways", "relations"):
-                    parts = out.get(kind)
-                    if not parts:
-                        continue
-                    schema, _ = _KIND_SCHEMA[kind]
-                    rb = decode.parts_to_batch(parts, schema, seq)
-                    pred = predicates.get(kind)
-                    if pred is not None:
-                        rb = pred.apply_arrow(rb)
-                    tf = transforms.get(kind)
-                    if tf is not None:
-                        rb = tf.apply_arrow(rb)
-                    if rb.num_rows:
-                        yield _union_batch(rb, kind)
+        for kind, rb in _decode_blobs(batches, _KINDS, predicates, transforms or {}):
+            yield _union_batch(rb, kind)
 
     return kernel
 
@@ -255,7 +243,7 @@ def split_union(union: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     canonical per-kind schemas."""
     return tuple(
         union.filter(F.col("kind") == kind).select(*model.UNION_KIND_COLUMNS[kind])
-        for kind in ("nodes", "ways", "relations")
+        for kind in _KINDS
     )
 
 
@@ -333,11 +321,6 @@ def read_pbf(
             for df in (nodes, ways, relations)
         )
     return OSMBundle(nodes=nodes, ways=ways, relations=relations, meta=meta, union=union)
-
-
-def read_pbf_single_pass(spark, paths, **kw) -> OSMBundle:
-    """Convenience alias for ``read_pbf(..., single_pass=True)``."""
-    return read_pbf(spark, paths, single_pass=True, **kw)
 
 
 def pbf_to_parquet(

@@ -188,20 +188,72 @@ def test_quadkey_col_matches_numpy_and_prefix_property(spark):
     from openstreetmapio_jl_spark.functions import cells
 
     rng = np.random.default_rng(3)
-    lats = np.round(rng.uniform(-80, 80, 50), 6)
-    lons = np.round(rng.uniform(-179, 179, 50), 6)
+    # clamp edges: the Mercator limit itself, just past it, the poles, and
+    # the antimeridian from both sides
+    edge_lats = [85.05112878, -85.05112878, 85.06, -85.06, 90.0, -90.0, 0.0]
+    edge_lons = [-180.0, 180.0, 10.0]
+    lats = np.concatenate(
+        [np.round(rng.uniform(-80, 80, 50), 6), np.repeat(edge_lats, len(edge_lons))]
+    )
+    lons = np.concatenate(
+        [np.round(rng.uniform(-179, 179, 50), 6), np.tile(edge_lons, len(edge_lats))]
+    )
     df = spark.createDataFrame(
         [(float(a), float(o)) for a, o in zip(lats, lons)], "lat double, lon double"
     )
-    got = [
-        (r.q11, r.q9)
-        for r in df.select(
-            cells.quadkey_col(F.col("lat"), F.col("lon"), 11).alias("q11"),
-            cells.quadkey_col(F.col("lat"), F.col("lon"), 9).alias("q9"),
-        ).collect()
-    ]
+    lat, lon = F.col("lat"), F.col("lon")
+    zooms = (0, 11, 13)
+    cols = []
+    for z in zooms:
+        key = cells.xyz_tile_key_col(lat, lon, z)
+        x, y = cells.tile_xy_cols(key, z)
+        cols += [key.alias(f"k{z}"), x.alias(f"x{z}"), y.alias(f"y{z}")]
+    rows = df.select(
+        cells.quadkey_col(lat, lon, 11).alias("q11"),
+        cells.quadkey_col(lat, lon, 9).alias("q9"),
+        *cols,
+    ).collect()
     x11, y11 = cells.xyz_tile(lats, lons, 11)
     want11 = cells.quadkey(x11, y11, 11)
-    for (q11, q9), w in zip(got, want11):
-        assert q11 == w
-        assert q9 == q11[:9]  # the hierarchical prefix property
+    for r, w in zip(rows, want11):
+        assert r.q11 == w
+        assert r.q9 == r.q11[:9]  # the hierarchical prefix property
+    for z in zooms:
+        xs, ys = cells.xyz_tile(lats, lons, z)
+        want = [(z << 58) + (int(x) << 29) + int(y) for x, y in zip(xs, ys)]
+        assert [r[f"k{z}"] for r in rows] == want
+        assert [(r[f"x{z}"], r[f"y{z}"]) for r in rows] == list(
+            zip(xs.tolist(), ys.tolist())
+        )
+
+
+def test_tile_codec_has_one_home():
+    """Only ``functions/cells.py`` knows the Web-Mercator tile math and the
+    packed key layout. The DuckDB-oracle SQL emitters (``_sql*`` functions in
+    ``plans/entry_queries.py``) are the independent reference and exempt."""
+    import ast
+    import re
+    from pathlib import Path
+
+    import openstreetmapio_jl_spark
+
+    root = Path(openstreetmapio_jl_spark.__file__).parent
+    banned = re.compile(r"1\s*<<\s*(58|29)\b|F\.tan\(|(?<!\w)_tile_(row_)?of(?!\w)")
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "functions/cells.py":
+            continue
+        lines = path.read_text().splitlines()
+        if rel == "plans/entry_queries.py":
+            for node in ast.parse(path.read_text()).body:
+                if isinstance(node, ast.FunctionDef) and node.name.startswith("_sql"):
+                    lines[node.lineno - 1 : node.end_lineno] = [""] * (
+                        node.end_lineno - node.lineno + 1
+                    )
+        offenders += [
+            f"{rel}:{i}: {line.strip()}"
+            for i, line in enumerate(lines, 1)
+            if banned.search(line)
+        ]
+    assert not offenders, "tile math outside functions/cells.py:\n" + "\n".join(offenders)
