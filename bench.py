@@ -2,10 +2,14 @@
 
 Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 ``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` and prints exactly ONE
-JSON line::
+compact JSON line, as the LAST line of the combined stdout and stderr::
 
     {"metric": "...", "value": <total_sec>, "unit": "sec",
      "queries": {"q1": sec, ...}, "sf": 0.1, ...}
+
+The full record, with the per-pass ``samples``, goes to ``BENCH_detail.json`` next
+to this file (git-ignored); the per-query delta table against the newest
+``BENCH_r*.json`` goes to stderr before the JSON line.
 
 Each query is forced end-to-end with the ``noop`` sink (full materialization, no
 collect-to-driver), mirroring how the job would run on a cluster. Extra fields
@@ -287,14 +291,22 @@ def run_scale_one(fx_dir: str, master: str) -> None:
     spark.stop()
 
 
+def _load_record(path: str) -> dict | None:
+    """A bench JSON record; the per-round BENCH_r*.json files wrap it in
+    ``parsed``, which is null when that run's line could not be parsed."""
+    with open(path) as f:
+        base = json.load(f)
+    return base["parsed"] if "parsed" in base else base
+
+
 def print_compare(result: dict, baseline_path: str) -> None:
     """Per-query delta table vs a previous BENCH_r*.json — makes round-over-round
-    regressions visible in one look (stderr, so the stdout JSON-line contract
-    holds)."""
-    with open(baseline_path) as f:
-        base = json.load(f)
-    if "parsed" in base:  # driver-recorded BENCH_r*.json wraps the JSON line
-        base = base["parsed"]
+    regressions visible in one look (stderr, printed before the JSON line so
+    that line stays last)."""
+    base = _load_record(baseline_path)
+    if base is None:
+        print(f"# {os.path.basename(baseline_path)} has no parsed record", file=sys.stderr)
+        return
     bq = base.get("queries", {})
     lines = [f"# vs {os.path.basename(baseline_path)} (negative = faster now)"]
     for name, sec in result["queries"].items():
@@ -328,13 +340,16 @@ if __name__ == "__main__":
         if args:
             sf_dir = args[0]
         result = run_bench(sf_dir)
-        print(json.dumps(result))
-        if compare_to is None:  # default: newest driver-recorded round file
+        here = os.path.dirname(os.path.abspath(__file__))
+        with open(os.path.join(here, "BENCH_detail.json"), "w") as f:
+            json.dump(result, f, indent=1)
+        del result["samples"]
+        if compare_to is None:  # default: newest round file that has a record
             import glob
 
-            recorded = sorted(glob.glob(
-                os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_r*.json")
-            ))
-            compare_to = recorded[-1] if recorded else None
+            recorded = sorted(glob.glob(os.path.join(here, "BENCH_r*.json")))
+            compare_to = next((p for p in reversed(recorded) if _load_record(p)), None)
         if compare_to:
             print_compare(result, compare_to)
+        sys.stderr.flush()
+        print(json.dumps(result), flush=True)

@@ -18,9 +18,10 @@ independence).
 
 from __future__ import annotations
 
+import lzma
+import os
 import struct
 import zlib
-import lzma
 from dataclasses import dataclass
 
 from openstreetmapio_jl_spark.pbf import proto
@@ -65,51 +66,46 @@ def parse_blob_header(buf) -> tuple[str, int]:
     return blob_type, datasize
 
 
+def _read_frame(f, path: str, seq: int, fsize: int) -> BlobDescriptor:
+    """Frame blob ``seq`` at the current position of open file ``f`` (``fsize``
+    bytes): length prefix, header-size guard, BlobHeader, data-size guards, blob
+    type, truncation. Leaves ``f`` at the next blob."""
+    len_bytes = f.read(4)
+    if len(len_bytes) != 4:
+        raise ValueError(f"{path}: truncated blob length prefix at blob {seq}")
+    header_len = struct.unpack(">I", len_bytes)[0]
+    if header_len > MAX_HEADER_SIZE:
+        raise ValueError(f"{path}: BlobHeader size {header_len} exceeds {MAX_HEADER_SIZE}")
+    header_bytes = f.read(header_len)
+    if len(header_bytes) != header_len:
+        raise ValueError(f"{path}: truncated BlobHeader at blob {seq}")
+    blob_type, datasize = parse_blob_header(header_bytes)
+    if datasize > MAX_BLOB_SIZE:
+        raise ValueError(f"{path}: blob data size {datasize} exceeds {MAX_BLOB_SIZE}")
+    if datasize < 0:
+        raise ValueError(f"{path}: negative blob data size at blob {seq}")
+    offset = f.tell()
+    expected = "OSMHeader" if seq == 0 else "OSMData"
+    if blob_type != expected:
+        raise ValueError(f"{path}: blob {seq} has type {blob_type!r}, expected {expected!r}")
+    if offset + datasize > fsize:
+        # seek past EOF "succeeds", so check against the real file size
+        raise ValueError(f"{path}: truncated blob payload at blob {seq}")
+    f.seek(offset + datasize)
+    return BlobDescriptor(path, seq, blob_type, offset, datasize)
+
+
 def scan_blob_index(path: str) -> list[BlobDescriptor]:
     """Metadata-only pass over a .pbf file: framing + headers, payloads skipped.
 
     Raises ValueError on malformed framing (mirrors the reference's ArgumentError
     wrapping at ``src/load_pbf.jl:78-84``).
     """
-    import os
-
     out: list[BlobDescriptor] = []
     fsize = os.path.getsize(path)
     with open(path, "rb") as f:
-        seq = 0
-        while True:
-            len_bytes = f.read(4)
-            if not len_bytes:
-                break
-            if len(len_bytes) != 4:
-                raise ValueError(f"{path}: truncated blob length prefix at blob {seq}")
-            header_len = struct.unpack(">I", len_bytes)[0]
-            if header_len > MAX_HEADER_SIZE:
-                raise ValueError(
-                    f"{path}: BlobHeader size {header_len} exceeds {MAX_HEADER_SIZE}"
-                )
-            header_bytes = f.read(header_len)
-            if len(header_bytes) != header_len:
-                raise ValueError(f"{path}: truncated BlobHeader at blob {seq}")
-            blob_type, datasize = parse_blob_header(header_bytes)
-            if datasize > MAX_BLOB_SIZE:
-                raise ValueError(
-                    f"{path}: blob data size {datasize} exceeds {MAX_BLOB_SIZE}"
-                )
-            if datasize < 0:
-                raise ValueError(f"{path}: negative blob data size at blob {seq}")
-            offset = f.tell()
-            expected = "OSMHeader" if seq == 0 else "OSMData"
-            if blob_type != expected:
-                raise ValueError(
-                    f"{path}: blob {seq} has type {blob_type!r}, expected {expected!r}"
-                )
-            if offset + datasize > fsize:
-                # seek past EOF "succeeds", so check against the real file size
-                raise ValueError(f"{path}: truncated blob payload at blob {seq}")
-            out.append(BlobDescriptor(path, seq, blob_type, offset, datasize))
-            f.seek(offset + datasize)
-            seq += 1
+        while f.tell() < fsize:
+            out.append(_read_frame(f, path, len(out), fsize))
     if not out:
         raise ValueError(f"{path}: no blobs found (not a PBF file?)")
     return out
@@ -121,30 +117,8 @@ def scan_first_blob(path: str) -> BlobDescriptor:
     The distributed index path needs per-file meta on the driver without paying
     the full framing scan there; full framing then runs cluster-side
     (one task per file in ``pbf_source.blob_index_df``)."""
-    import os
-
-    fsize = os.path.getsize(path)
     with open(path, "rb") as f:
-        len_bytes = f.read(4)
-        if len(len_bytes) != 4:
-            raise ValueError(f"{path}: truncated blob length prefix at blob 0")
-        header_len = struct.unpack(">I", len_bytes)[0]
-        if header_len > MAX_HEADER_SIZE:
-            raise ValueError(
-                f"{path}: BlobHeader size {header_len} exceeds {MAX_HEADER_SIZE}"
-            )
-        header_bytes = f.read(header_len)
-        if len(header_bytes) != header_len:
-            raise ValueError(f"{path}: truncated BlobHeader at blob 0")
-        blob_type, datasize = parse_blob_header(header_bytes)
-        if blob_type != "OSMHeader":
-            raise ValueError(f"{path}: blob 0 has type {blob_type!r}, expected 'OSMHeader'")
-        if datasize < 0 or datasize > MAX_BLOB_SIZE:
-            raise ValueError(f"{path}: bad blob data size {datasize} at blob 0")
-        offset = f.tell()
-        if offset + datasize > fsize:
-            raise ValueError(f"{path}: truncated blob payload at blob 0")
-        return BlobDescriptor(path, 0, blob_type, offset, datasize)
+        return _read_frame(f, path, 0, os.path.getsize(path))
 
 
 def read_blob_payload(path: str, offset: int, size: int) -> bytes:

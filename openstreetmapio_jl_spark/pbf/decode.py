@@ -4,6 +4,11 @@ Re-implements the reference's extraction semantics (``/root/reference/src/load_p
 as whole-column NumPy operations producing ``pyarrow.RecordBatch`` outputs — this is
 the function that runs inside ``mapInArrow`` tasks, one call per blob.
 
+Rule: every Arrow builder works on whole columns (NumPy masks, ``np.repeat``,
+offsets built from counts). The only per-element Python is the protobuf walk over
+each Node/Way/Relation message (and the Info inside it) and the stateful walk of a
+malformed dense ``keys_vals`` stream.
+
 Reference semantics preserved exactly (SURVEY.md §7 "hard parts"):
 
 - coordinates ``1e-9 * (offset + granularity * v)`` rounded to 7 digits with
@@ -58,9 +63,9 @@ _MEMBER_TYPES = np.array(["node", "way", "relation"], dtype=object)
 
 @dataclass
 class LatLonParams:
-    lat_offset: int = 0
-    lon_offset: int = 0
-    granularity: int = 100
+    lat_offset: int
+    lon_offset: int
+    granularity: int
 
 
 @dataclass
@@ -101,7 +106,7 @@ def build_string_table(payload) -> list[str]:
     return out
 
 
-def _concat_packed(chunks: list) -> bytes:
+def _concat_packed(chunks) -> bytes:
     if not chunks:
         return b""
     if len(chunks) == 1:
@@ -109,21 +114,31 @@ def _concat_packed(chunks: list) -> bytes:
     return b"".join(bytes(c) for c in chunks)
 
 
+def _packed(f: dict, fno: int, *, zigzag: bool, delta: bool) -> np.ndarray:
+    """Packed field ``fno`` of a walked message as one int64 column (proto2 lets
+    a packed field repeat; its chunks concatenate). ``delta`` undoes DELTA coding."""
+    chunks = f.get(fno)
+    if not chunks:
+        return np.empty(0, np.int64)
+    values = proto.decode_packed(_concat_packed(chunks), zigzag=zigzag)
+    return np.cumsum(values) if delta else values
+
+
 def decode_packed_group(
     payloads: list[bytes], *, zigzag: bool, delta: bool
 ) -> tuple[np.ndarray, np.ndarray]:
     """Decode N packed-varint payloads in ONE vectorized pass.
 
-    Returns (values int64, offsets int64[N+1]) — ``values[offsets[i]:offsets[i+1]]``
-    is payload i's column. ``delta`` applies per-segment cumulative sum (the OSM
-    DELTA coding, e.g. ``Way.refs``, ``osmformat.proto:231``).
+    Returns (values int64, counts int64[N]) — payload i's column is the i-th
+    run of ``counts[i]`` values. ``delta`` applies per-segment cumulative sum
+    (the OSM DELTA coding, e.g. ``Way.refs``, ``osmformat.proto:231``).
     """
     n = len(payloads)
     byte_lens = np.fromiter((len(p) for p in payloads), dtype=np.int64, count=n)
     concat = b"".join(payloads)
     buf = np.frombuffer(concat, dtype=np.uint8)
     if buf.size == 0:
-        return np.empty(0, np.int64), np.zeros(n + 1, np.int64)
+        return np.empty(0, np.int64), np.zeros(n, np.int64)
     ends = (buf & 0x80) == 0
     # value count per payload = count of terminal bytes within its byte range
     cum_ends = np.concatenate(([0], np.cumsum(ends)))
@@ -131,32 +146,42 @@ def decode_packed_group(
     counts = cum_ends[byte_bounds[1:]] - cum_ends[byte_bounds[:-1]]
     raw = proto.decode_varints(concat)
     values = proto.varints_zigzag(raw) if zigzag else proto.varints_to_int64(raw)
-    offsets = np.concatenate(([0], np.cumsum(counts)))
     if delta and values.size:
         c = np.cumsum(values)
-        starts = offsets[:-1]
+        starts = np.cumsum(counts) - counts
         base = np.where(starts > 0, c[np.maximum(starts - 1, 0)], 0)
         values = c - np.repeat(base, counts)
-    return values, offsets
+    return values, counts
 
 
-def _segment_cumsum(values: np.ndarray) -> np.ndarray:
-    return np.cumsum(values) if values.size else values
+def _head_mask(counts: np.ndarray, keep: np.ndarray) -> np.ndarray:
+    """Mask over a segmented stream (segment i has ``counts[i]`` values) that
+    keeps the first ``keep[i]`` values of each segment."""
+    starts = np.cumsum(counts) - counts
+    rank = np.arange(int(counts.sum())) - np.repeat(starts, counts)
+    return rank < np.repeat(keep, counts)
 
 
-def _take_strings(string_table: list[str], sids: np.ndarray) -> np.ndarray:
-    st = np.asarray(string_table, dtype=object)
-    return st[sids]
+def _keep_rows(cols: dict, keep: np.ndarray) -> dict:
+    """Drop the rows where ``keep`` is False from a dict of equal-length columns."""
+    if keep.all():
+        return cols
+    sel = np.flatnonzero(keep)
+    return {
+        name: col[sel] if isinstance(col, np.ndarray) else col.take(pa.array(sel))
+        for name, col in cols.items()
+    }
 
 
 # ---------------------------------------------------------------------------
-# message walkers (low-frequency Python; heavy columns decode vectorized)
+# message walkers (the only per-element Python; columns decode vectorized)
 # ---------------------------------------------------------------------------
 
 def _collect_message(buf, spec: dict[int, str]) -> dict:
     """Generic single-message walk. spec: field_no → kind
-    ('varint','zigzag','bytes','packed','string'). 'packed' accumulates payload
-    chunks (proto2 allows repeated occurrences of a packed field)."""
+    ('varint','int','zigzag','bytes','packed','string'); 'int' is a varint read as
+    proto int32/int64 (two's complement). 'packed' accumulates payload chunks
+    (proto2 allows repeated occurrences of a packed field)."""
     out: dict = {}
     for fno, wt, val in proto.iter_fields(buf):
         kind = spec.get(fno)
@@ -164,6 +189,8 @@ def _collect_message(buf, spec: dict[int, str]) -> dict:
             continue
         if kind == "varint":
             out[fno] = val
+        elif kind == "int":
+            out[fno] = _to_signed(val)
         elif kind == "zigzag":
             out[fno] = proto.zigzag_decode(val)
         elif kind == "bytes":
@@ -175,179 +202,144 @@ def _collect_message(buf, spec: dict[int, str]) -> dict:
     return out
 
 
-_INFO_SPEC = {1: "varint", 2: "varint", 3: "varint", 4: "varint", 5: "varint", 6: "varint"}
-
-
-def _to_signed(v: int, bits: int = 64) -> int:
+def _to_signed(v: int) -> int:
     """proto int32/int64 negative values arrive as 64-bit two's complement."""
-    if v >= 1 << (bits - 1):
-        v -= 1 << 64
-    return v
+    return v - (1 << 64) if v >= 1 << 63 else v
 
 
-@dataclass
-class SparseInfo:
-    """Decoded sparse Info values per element (None = Info message absent)."""
-
-    version: int | None = None
-    timestamp_us: int | None = None
-    changeset: int | None = None
-    uid: int | None = None
-    user: str | None = None
-    visible: bool | None = None
+_INFO_SPEC = {1: "int", 2: "int", 3: "int", 4: "int", 5: "int", 6: "varint"}
 
 
-def decode_sparse_info(
-    buf, string_table: list[str], date_granularity: int
-) -> SparseInfo:
-    """Sparse Info semantics (``src/load_pbf.jl:436-486``): version −1 ⇒ null,
-    ts/changeset/uid 0 ⇒ null, user_sid 1-based in-range lookup, visible always set
-    (proto2 default false)."""
-    f = _collect_message(buf, _INFO_SPEC)
-    version = _to_signed(f.get(1, -1))
-    version = None if version == -1 else version
-    ts = _to_signed(f.get(2, 0))
-    timestamp_us = None if ts == 0 else ts * date_granularity * 1000
-    changeset = _to_signed(f.get(3, 0)) or None
-    uid = _to_signed(f.get(4, 0)) or None
-    user_sid = f.get(5, 0)
-    user = (
-        string_table[user_sid - 1] if 0 < user_sid <= len(string_table) else None
-    )
-    visible = bool(f.get(6, 0))
-    return SparseInfo(version, timestamp_us, changeset, uid, user, visible)
+def _walk_messages(
+    bufs: list, spec: dict[int, str], scalars: tuple[int, ...], packed: tuple[int, ...]
+) -> tuple[np.ndarray, dict[int, list[bytes]], np.ndarray, np.ndarray]:
+    """Walk repeated Node/Way/Relation messages, the one per-element loop of
+    these paths. Returns:
+
+    - int64[len(scalars), n]: the ``scalars`` fields (0 when unset);
+    - {fno: per-message payload} for the ``packed`` fields;
+    - int64[6, n] raw Info: version (−1 when unset), timestamp, changeset, uid,
+      user_sid (0 when unset) and visible (proto2 default false); all 0 where
+      the message has no Info;
+    - the Info-absent mask.
+    """
+    n = len(bufs)
+    cols = np.zeros((len(scalars), n), np.int64)
+    payloads: dict[int, list[bytes]] = {fno: [] for fno in packed}
+    info = np.zeros((6, n), np.int64)
+    absent = np.ones(n, dtype=bool)
+    for i, b in enumerate(bufs):
+        f = _collect_message(b, spec)
+        cols[:, i] = [f.get(fno, 0) for fno in scalars]
+        for fno, out in payloads.items():
+            out.append(_concat_packed(f.get(fno)))
+        if 4 in f:
+            g = _collect_message(f[4], _INFO_SPEC)
+            absent[i] = False
+            info[:, i] = [
+                g.get(1, -1), g.get(2, 0), g.get(3, 0), g.get(4, 0), g.get(5, 0),
+                bool(g.get(6, 0)),
+            ]
+    return cols, payloads, info, absent
 
 
 # ---------------------------------------------------------------------------
-# Arrow builders
+# Arrow builders (whole-column)
 # ---------------------------------------------------------------------------
+
+def _offsets(counts: np.ndarray, null: np.ndarray | None) -> pa.Array:
+    """int32 list/map offsets from per-element counts. Arrow marks element i
+    null by a null at ``offsets[i]``; the final offset is never null."""
+    offsets = np.concatenate(([0], np.cumsum(counts))).astype(np.int32)
+    mask = None if null is None else np.append(null, False)
+    return pa.array(offsets, type=pa.int32(), mask=mask)
+
+
+def _build_list_array(
+    values: pa.Array, counts: np.ndarray, null: np.ndarray | None
+) -> pa.Array:
+    return pa.ListArray.from_arrays(_offsets(counts, null), values)
+
 
 def _build_tags_array(
     n: int,
-    node_idx: np.ndarray,
-    keys: np.ndarray,
-    vals: np.ndarray,
+    elem_idx: np.ndarray,
+    k_sid: np.ndarray,
+    v_sid: np.ndarray,
+    string_table: list[str],
+    stats: BlockStats,
+    invalid_warning: str,
 ) -> pa.Array:
-    """MAP<STRING,STRING> column for n elements from (element_idx, key, val) triples.
+    """MAP<STRING,STRING> column for n elements from (element, key sid, val sid)
+    triples. A triple with a sid outside the string table or an element past
+    n is skipped with ``invalid_warning`` (``src/load_pbf.jl:563-567``).
 
     Elements with zero pairs get a NULL map (reference: no tags ⇒ ``nothing``,
     ``src/load_pbf.jl:558-560``). Duplicate keys per element: last wins.
     """
-    if len(node_idx) == 0:
+    stlen = len(string_table)
+    ok = (k_sid >= 0) & (k_sid < stlen) & (v_sid >= 0) & (v_sid < stlen) & (elem_idx < n)
+    if not ok.all():
+        _warn(stats, invalid_warning)
+        elem_idx, k_sid, v_sid = elem_idx[ok], k_sid[ok], v_sid[ok]
+    if elem_idx.size == 0:
         return pa.nulls(n, type=model.TAGS_ARROW)
-    # last-wins dedup per (element, key)
-    if len(node_idx):
-        import pandas as pd
+    import pandas as pd
 
-        df = pd.DataFrame({"i": node_idx, "k": keys, "v": vals})
-        df = df.drop_duplicates(subset=["i", "k"], keep="last")
-        df = df.sort_values("i", kind="stable")
-        node_idx = df["i"].to_numpy()
-        keys = df["k"].to_numpy()
-        vals = df["v"].to_numpy()
-    counts = np.bincount(node_idx, minlength=n)
-    offsets_np = np.concatenate(([0], np.cumsum(counts))).astype(np.int32)
-    null_mask = counts == 0
-    # Arrow: a null at offsets[i] marks list element i null; final offset non-null
-    offsets = pa.array(
-        [None if null_mask[i] else int(offsets_np[i]) for i in range(n)]
-        + [int(offsets_np[n])],
-        type=pa.int32(),
-    )
+    st = np.asarray(string_table, dtype=object)
+    df = pd.DataFrame({"i": elem_idx, "k": st[k_sid], "v": st[v_sid]})
+    df = df.drop_duplicates(subset=["i", "k"], keep="last")
+    df = df.sort_values("i", kind="stable")
+    counts = np.bincount(df["i"].to_numpy(), minlength=n)
     return pa.MapArray.from_arrays(
-        offsets, pa.array(keys, type=pa.string()), pa.array(vals, type=pa.string())
+        _offsets(counts, counts == 0),
+        pa.array(df["k"].to_numpy(), type=pa.string()),
+        pa.array(df["v"].to_numpy(), type=pa.string()),
     )
 
 
-def _build_info_array(
-    n: int,
-    version: np.ndarray | None = None,
-    version_mask: np.ndarray | None = None,
-    timestamp_us: np.ndarray | None = None,
-    timestamp_mask: np.ndarray | None = None,
-    changeset: np.ndarray | None = None,
-    changeset_mask: np.ndarray | None = None,
-    uid: np.ndarray | None = None,
-    uid_mask: np.ndarray | None = None,
-    user: np.ndarray | None = None,
-    user_mask: np.ndarray | None = None,
-    visible: np.ndarray | None = None,
-    visible_mask: np.ndarray | None = None,
-) -> pa.Array:
-    """Info struct column; masks are True where the field is NULL. Whole struct is
-    NULL where every field is null (``src/load_pbf.jl:480-483``)."""
+def _user_column(
+    user_sid: np.ndarray, missing: np.ndarray, string_table: list[str]
+) -> tuple[np.ndarray, np.ndarray]:
+    """Info user: Julia ``sid > 0 && sid <= length(st) → st[sid]`` — 1-based,
+    unlike tag sids (``src/load_pbf.jl:469-474``) ⇒ python ``st[sid-1]``."""
+    null = missing | (user_sid <= 0) | (user_sid > len(string_table))
+    st = np.asarray(string_table + [""], dtype=object)
+    return st[np.where(null, len(string_table), user_sid - 1)], null
 
-    def arr(values, mask, typ, default):
-        if values is None:
-            return pa.nulls(n, type=typ), np.ones(n, dtype=bool)
-        m = mask if mask is not None else np.zeros(n, dtype=bool)
-        if typ == pa.string():
-            out = pa.array(values, type=typ, mask=m, from_pandas=True)
-        else:
-            safe = np.where(m, default, values)
-            out = pa.array(safe, type=typ, mask=m)
-        return out, m
 
-    v_arr, v_m = arr(version, version_mask, pa.int32(), 0)
-    t_arr, t_m = arr(timestamp_us, timestamp_mask, pa.timestamp("us"), 0)
-    c_arr, c_m = arr(changeset, changeset_mask, pa.int64(), 0)
-    u_arr, u_m = arr(uid, uid_mask, pa.int32(), 0)
-    s_arr, s_m = arr(user, user_mask, pa.string(), None)
-    b_arr, b_m = arr(visible, visible_mask, pa.bool_(), False)
-    struct_null = v_m & t_m & c_m & u_m & s_m & b_m
+def _build_info_array(version, timestamp_us, changeset, uid, user, visible) -> pa.Array:
+    """Info struct column from six (values, null mask) pairs in ``INFO_ARROW``
+    field order. Whole struct is NULL where every field is null
+    (``src/load_pbf.jl:480-483``)."""
+    pairs = (version, timestamp_us, changeset, uid, user, visible)
+    arrays = []
+    for (values, null), fld in zip(pairs, model.INFO_ARROW):
+        if values.dtype != object:
+            values = np.where(null, np.zeros_like(values), values)
+        arrays.append(pa.array(values, type=fld.type, mask=null))
     return pa.StructArray.from_arrays(
-        [v_arr, t_arr, c_arr, u_arr, s_arr, b_arr],
+        arrays,
         fields=list(model.INFO_ARROW),
-        mask=pa.array(struct_null),
+        mask=pa.array(np.logical_and.reduce([null for _, null in pairs])),
     )
 
 
-def _sparse_infos_to_array(infos: list[SparseInfo | None]) -> pa.Array:
-    n = len(infos)
-    if all(i is None for i in infos):
-        return pa.nulls(n, type=model.INFO_ARROW)
-    absent = np.array([i is None for i in infos], dtype=bool)
-
-    def col(attr, dtype):
-        vals = [getattr(i, attr) if i is not None else None for i in infos]
-        mask = np.array([v is None for v in vals], dtype=bool)
-        return vals, mask
-
-    ver, ver_m = col("version", None)
-    ts, ts_m = col("timestamp_us", None)
-    cs, cs_m = col("changeset", None)
-    uid, uid_m = col("uid", None)
-    usr, usr_m = col("user", None)
-    vis, vis_m = col("visible", None)
+def _sparse_info_array(
+    info: np.ndarray, absent: np.ndarray, string_table: list[str], date_granularity: int
+) -> pa.Array:
+    """Sparse Info semantics (``src/load_pbf.jl:436-486``) over the walker's raw
+    columns: version −1 ⇒ null, ts/changeset/uid 0 ⇒ null, user_sid 1-based
+    in-range lookup, visible set whenever Info is present (proto2 default false)."""
+    version, ts, changeset, uid, user_sid, visible = info
     return _build_info_array(
-        n,
-        np.array([v if v is not None else 0 for v in ver], dtype=np.int64),
-        ver_m,
-        np.array([v if v is not None else 0 for v in ts], dtype=np.int64),
-        ts_m,
-        np.array([v if v is not None else 0 for v in cs], dtype=np.int64),
-        cs_m,
-        np.array([v if v is not None else 0 for v in uid], dtype=np.int64),
-        uid_m,
-        usr,
-        usr_m,
-        np.array([bool(v) for v in vis], dtype=bool),
-        vis_m,
+        (version, absent | (version == -1)),
+        (ts * date_granularity * 1000, absent | (ts == 0)),
+        (changeset, absent | (changeset == 0)),
+        (uid, absent | (uid == 0)),
+        _user_column(user_sid, absent, string_table),
+        (visible.astype(bool), absent),
     )
-
-
-def _build_list_array(values: pa.Array, offsets_np: np.ndarray, null_mask=None) -> pa.Array:
-    offsets_np = offsets_np.astype(np.int32)
-    if null_mask is not None and null_mask.any():
-        n = len(offsets_np) - 1
-        offsets = pa.array(
-            [None if null_mask[i] else int(offsets_np[i]) for i in range(n)]
-            + [int(offsets_np[n])],
-            type=pa.int32(),
-        )
-    else:
-        offsets = pa.array(offsets_np, type=pa.int32())
-    return pa.ListArray.from_arrays(offsets, values)
 
 
 # ---------------------------------------------------------------------------
@@ -358,68 +350,42 @@ _DENSE_SPEC = {1: "packed", 5: "bytes", 8: "packed", 9: "packed", 10: "packed"}
 _DENSEINFO_SPEC = {1: "packed", 2: "packed", 3: "packed", 4: "packed", 5: "packed", 6: "packed"}
 
 
-def _dense_tags(
-    kv: np.ndarray, string_table: list[str], n: int, stats: BlockStats
+def _dense_tag_sids(
+    kv: np.ndarray, stats: BlockStats
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """keys_vals sentinel stream → (node_idx, key_str, val_str) triples.
+    """keys_vals sentinel stream → (node_idx, key sid, val sid) triples.
 
-    Fast path: treat every 0 as a sentinel and verify each segment has even length;
-    falls back to the reference's stateful walk (``src/load_pbf.jl:803-865``) when
-    the stream is malformed.
+    Fast path: treat every 0 as a sentinel when every segment has even length;
+    otherwise the reference's stateful walk (``src/load_pbf.jl:803-865``), in
+    which a 0 in value position is a value.
     """
-    empty = (np.empty(0, np.int64), np.empty(0, object), np.empty(0, object))
+    empty = np.empty(0, np.int64)
     if kv.size == 0:
-        return empty
+        return empty, empty, empty
     if kv[-1] != 0:
         _warn(stats, "dense keys_vals missing trailing sentinel; skipping tags")
-        return empty
+        return empty, empty, empty
     zeros = np.flatnonzero(kv == 0)
-    seg_starts = np.concatenate(([0], zeros[:-1] + 1))
-    seg_lens = zeros - seg_starts
+    seg_lens = np.diff(zeros, prepend=-1) - 1
     if (seg_lens % 2 == 0).all():
-        # vectorized path: all zeros are sentinels
-        node_of_seg = np.arange(len(zeros))
-        nonzero_pos = np.flatnonzero(kv != 0)
-        if nonzero_pos.size == 0:
-            return empty
-        # map each nonzero position to its segment id
-        seg_of_pos = np.searchsorted(zeros, nonzero_pos, side="left")
-        k_pos = nonzero_pos[0::2]
-        v_pos = nonzero_pos[1::2]
-        node_idx = seg_of_pos[0::2]
-        k_sid = kv[k_pos]
-        v_sid = kv[v_pos]
-    else:
-        # scalar fallback: stateful walk, 0 in value position is a value
-        ks, vs, ni = [], [], []
-        i = 0
-        pos = 0
-        L = kv.size
-        while pos < L:
-            k = kv[pos]
-            if k == 0:
-                i += 1
-                pos += 1
-            else:
-                if pos + 1 >= L:
-                    _warn(stats, "dense keys_vals truncated; skipping remaining tags")
-                    break
-                ks.append(k)
-                vs.append(kv[pos + 1])
-                ni.append(i)
-                pos += 2
-        node_idx = np.array(ni, dtype=np.int64)
-        k_sid = np.array(ks, dtype=np.int64)
-        v_sid = np.array(vs, dtype=np.int64)
-    stlen = len(string_table)
-    ok = (k_sid < stlen) & (v_sid < stlen) & (k_sid >= 0) & (v_sid >= 0) & (node_idx < n)
-    if not ok.all():
-        _warn(stats, "dense node tag with invalid string/node index skipped")
-        node_idx, k_sid, v_sid = node_idx[ok], k_sid[ok], v_sid[ok]
-    return node_idx, _take_strings(string_table, k_sid), _take_strings(string_table, v_sid)
+        pos = np.flatnonzero(kv)
+        return np.searchsorted(zeros, pos[0::2]), kv[pos[0::2]], kv[pos[1::2]]
+    # stateful walk; kv ends in a sentinel, so every nonzero key has a value
+    ks, vs, ni = [], [], []
+    i = pos = 0
+    while pos < kv.size:
+        if kv[pos] == 0:
+            i += 1
+            pos += 1
+        else:
+            ks.append(kv[pos])
+            vs.append(kv[pos + 1])
+            ni.append(i)
+            pos += 2
+    return np.array(ni, np.int64), np.array(ks, np.int64), np.array(vs, np.int64)
 
 
-def _dense_info_arrays(
+def _dense_info_array(
     di_buf,
     string_table: list[str],
     date_granularity: int,
@@ -429,48 +395,26 @@ def _dense_info_arrays(
     shorter than n: out-of-range ⇒ null. Delta-coded ts/changeset/uid/user_sid."""
     f = _collect_message(di_buf, _DENSEINFO_SPEC)
 
-    def packed(fno, zigzag):
-        chunks = f.get(fno)
-        if not chunks:
-            return np.empty(0, np.int64)
-        return proto.decode_packed(_concat_packed(chunks), zigzag=zigzag)
-
-    versions = packed(1, False)
-    ts = _segment_cumsum(packed(2, True))
-    cs = _segment_cumsum(packed(3, True))
-    uids = _segment_cumsum(packed(4, True))
-    user_sids = _segment_cumsum(packed(5, True))
-    visibles = packed(6, False)
-
-    def pad(a, fill=0):
-        out = np.full(n, fill, dtype=np.int64)
-        m = np.ones(n, dtype=bool)  # True = null
+    def pad(a):
+        out = np.zeros(n, dtype=np.int64)
         k = min(len(a), n)
         out[:k] = a[:k]
-        m[:k] = False
-        return out, m
+        return out, np.arange(n) >= k  # True = null
 
-    ver, ver_oob = pad(versions)
-    ver_m = ver_oob | (ver == -1)
-    tsv, ts_m = pad(ts)  # NB: no !=0 check on the dense path (src/load_pbf.jl:751)
-    csv, cs_oob = pad(cs)
-    cs_m = cs_oob | (csv == 0)
-    uidv, uid_oob = pad(uids)
-    uid_m = uid_oob | (uidv == 0)
-    usidv, usid_oob = pad(user_sids)
-    # Julia: sid > 0 && sid <= length(st) → st[sid] (1-based ⇒ python st[sid-1])
-    usr_m = usid_oob | (usidv <= 0) | (usidv > len(string_table))
-    st = np.asarray(string_table + [""], dtype=object)
-    usr = st[np.where(usr_m, len(string_table), usidv - 1)]
-    visv, vis_m = pad(visibles)
+    ver, ver_oob = pad(_packed(f, 1, zigzag=False, delta=False))
+    ts, ts_oob = pad(_packed(f, 2, zigzag=True, delta=True))
+    cs, cs_oob = pad(_packed(f, 3, zigzag=True, delta=True))
+    uid, uid_oob = pad(_packed(f, 4, zigzag=True, delta=True))
+    usid, usid_oob = pad(_packed(f, 5, zigzag=True, delta=True))
+    vis, vis_oob = pad(_packed(f, 6, zigzag=False, delta=False))
     return _build_info_array(
-        n,
-        ver, ver_m,
-        tsv * date_granularity * 1000, ts_m,
-        csv, cs_m,
-        uidv, uid_m,
-        usr, usr_m,
-        visv.astype(bool), vis_m,
+        (ver, ver_oob | (ver == -1)),
+        # NB: no !=0 check on the dense timestamp (src/load_pbf.jl:751)
+        (ts * date_granularity * 1000, ts_oob),
+        (cs, cs_oob | (cs == 0)),
+        (uid, uid_oob | (uid == 0)),
+        _user_column(usid, usid_oob, string_table),
+        (vis.astype(bool), vis_oob),
     )
 
 
@@ -483,37 +427,25 @@ def decode_dense_nodes(
 ) -> dict | None:
     """DenseNodes group → columnar node arrays (``src/load_pbf.jl:637-718``)."""
     f = _collect_message(buf, _DENSE_SPEC)
-
-    def packed(fno):
-        chunks = f.get(fno)
-        return (
-            proto.decode_packed(_concat_packed(chunks), zigzag=True)
-            if chunks
-            else np.empty(0, np.int64)
-        )
-
-    ids = _segment_cumsum(packed(1))
+    ids = _packed(f, 1, zigzag=True, delta=True)
     if ids.size == 0:
         return None
-    lats_raw = _segment_cumsum(packed(8))
-    lons_raw = _segment_cumsum(packed(9))
+    lats_raw = _packed(f, 8, zigzag=True, delta=True)
+    lons_raw = _packed(f, 9, zigzag=True, delta=True)
     if not (ids.size == lats_raw.size == lons_raw.size):
         _warn(stats, "dense nodes have inconsistent id/lat/lon lengths; group skipped")
         return None
     lat = scale_coords(lats_raw, ll.lat_offset, ll.granularity)
     lon = scale_coords(lons_raw, ll.lon_offset, ll.granularity)
     # NOTE: no range filter on the dense path — reference asymmetry preserved.
-    kv_chunks = f.get(10)
-    kv = (
-        proto.decode_packed(_concat_packed(kv_chunks), zigzag=False)
-        if kv_chunks
-        else np.empty(0, np.int64)
-    )
     n = ids.size
-    node_idx, keys, vals = _dense_tags(kv, string_table, n, stats)
-    tags = _build_tags_array(n, node_idx, keys, vals)
+    node_idx, k_sid, v_sid = _dense_tag_sids(_packed(f, 10, zigzag=False, delta=False), stats)
+    tags = _build_tags_array(
+        n, node_idx, k_sid, v_sid, string_table, stats,
+        "dense node tag with invalid string/node index skipped",
+    )
     if f.get(5) is not None:
-        info = _dense_info_arrays(f[5], string_table, date_granularity, n)
+        info = _dense_info_array(f[5], string_table, date_granularity, n)
     else:
         info = pa.nulls(n, type=model.INFO_ARROW)
     return {"id": ids, "lat": lat, "lon": lon, "tags": tags, "info": info}
@@ -524,70 +456,36 @@ def decode_dense_nodes(
 # ---------------------------------------------------------------------------
 
 _NODE_SPEC = {1: "zigzag", 2: "packed", 3: "packed", 4: "bytes", 8: "zigzag", 9: "zigzag"}
-_WAY_SPEC = {
-    1: "varint", 2: "packed", 3: "packed", 4: "bytes",
-    8: "packed", 9: "packed", 10: "packed",
-}
-_REL_SPEC = {
-    1: "varint", 2: "packed", 3: "packed", 4: "bytes",
+# Way and Relation share a layout: id, keys, vals, info, three packed arrays
+_WAY_REL_SPEC = {
+    1: "int", 2: "packed", 3: "packed", 4: "bytes",
     8: "packed", 9: "packed", 10: "packed",
 }
 
 
-def _resolve_tags_per_element(
-    key_payloads: list[bytes],
-    val_payloads: list[bytes],
-    string_table: list[str],
-    stats: BlockStats,
-    kind: str,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """(element_idx, key, val) triples + keep-mask from per-element packed key/val
-    payload lists. Elements with len(keys) != len(vals) are dropped entirely
-    (``src/load_pbf.jl:552-555``); individual out-of-range sids are skipped
-    (``src/load_pbf.jl:563-567``)."""
-    k_vals, k_off = decode_packed_group(key_payloads, zigzag=False, delta=False)
-    v_vals, v_off = decode_packed_group(val_payloads, zigzag=False, delta=False)
-    k_counts = np.diff(k_off)
-    v_counts = np.diff(v_off)
+def _element_tags(
+    payloads: dict[int, list[bytes]], string_table: list[str], stats: BlockStats, kind: str
+) -> tuple[pa.Array, np.ndarray]:
+    """Tags column + keep-mask from each message's packed keys (2) / vals (3). Elements
+    with len(keys) != len(vals) are dropped entirely (``src/load_pbf.jl:552-555``);
+    individual out-of-range sids are skipped (``src/load_pbf.jl:563-567``)."""
+    k_sid, k_counts = decode_packed_group(payloads[2], zigzag=False, delta=False)
+    v_sid, v_counts = decode_packed_group(payloads[3], zigzag=False, delta=False)
     keep = k_counts == v_counts
     if not keep.all():
         _warn(stats, f"{kind} with inconsistent tag keys/values skipped")
-    n = len(key_payloads)
-    elem_idx = np.repeat(np.arange(n), k_counts)
-    pair_keep = np.repeat(keep, k_counts)
-    # align values: when counts differ the element is dropped anyway; build val
-    # stream per element by truncating/padding is unnecessary — only kept elements
-    # contribute, and for those k_counts == v_counts so streams align after
-    # filtering per element.
-    if keep.all():
-        v_aligned = v_vals
-    else:
-        v_parts = [
-            v_vals[v_off[i] : v_off[i] + k_counts[i]] if keep[i] else np.empty(0, np.int64)
-            for i in range(n)
-        ]
-        v_aligned = np.concatenate(v_parts) if v_parts else np.empty(0, np.int64)
-        k_parts = [
-            k_vals[k_off[i] : k_off[i + 1]] if keep[i] else np.empty(0, np.int64)
-            for i in range(n)
-        ]
-        k_vals = np.concatenate(k_parts) if k_parts else np.empty(0, np.int64)
-        elem_idx = np.repeat(np.arange(n), np.where(keep, k_counts, 0))
-        pair_keep = np.ones(len(k_vals), dtype=bool)
-    k_sid = k_vals[pair_keep] if keep.all() else k_vals
-    v_sid = v_aligned[pair_keep] if keep.all() else v_aligned
-    e_idx = elem_idx[pair_keep] if keep.all() else elem_idx
-    stlen = len(string_table)
-    ok = (k_sid >= 0) & (k_sid < stlen) & (v_sid >= 0) & (v_sid < stlen)
-    if not ok.all():
-        _warn(stats, f"{kind} tag with invalid string index skipped")
-        e_idx, k_sid, v_sid = e_idx[ok], k_sid[ok], v_sid[ok]
-    return (
-        e_idx,
-        _take_strings(string_table, k_sid),
-        _take_strings(string_table, v_sid),
-        keep,
+    n = len(keep)
+    elem_idx = np.repeat(np.arange(n), np.where(keep, k_counts, 0))
+    tags = _build_tags_array(
+        n,
+        elem_idx,
+        k_sid[np.repeat(keep, k_counts)],
+        v_sid[np.repeat(keep, v_counts)],
+        string_table,
+        stats,
+        f"{kind} tag with invalid string index skipped",
     )
+    return tags, keep
 
 
 def decode_regular_nodes(
@@ -601,44 +499,18 @@ def decode_regular_nodes(
     zigzag coords, coordinate RANGE FILTER applied (drop+warn), tags/info as usual."""
     if not bufs:
         return None
-    n = len(bufs)
-    ids = np.empty(n, np.int64)
-    lat_raw = np.empty(n, np.int64)
-    lon_raw = np.empty(n, np.int64)
-    key_payloads: list[bytes] = []
-    val_payloads: list[bytes] = []
-    infos: list[SparseInfo | None] = []
-    for i, b in enumerate(bufs):
-        f = _collect_message(b, _NODE_SPEC)
-        ids[i] = f.get(1, 0)
-        lat_raw[i] = f.get(8, 0)
-        lon_raw[i] = f.get(9, 0)
-        key_payloads.append(_concat_packed(f.get(2, [])))
-        val_payloads.append(_concat_packed(f.get(3, [])))
-        infos.append(
-            decode_sparse_info(f[4], string_table, date_granularity) if 4 in f else None
-        )
+    (ids, lat_raw, lon_raw), payloads, info_raw, info_absent = _walk_messages(
+        bufs, _NODE_SPEC, (1, 8, 9), (2, 3)
+    )
     lat = scale_coords(lat_raw, ll.lat_offset, ll.granularity)
     lon = scale_coords(lon_raw, ll.lon_offset, ll.granularity)
-    e_idx, keys, vals, tag_keep = _resolve_tags_per_element(
-        key_payloads, val_payloads, string_table, stats, "node"
-    )
+    tags, tag_keep = _element_tags(payloads, string_table, stats, "node")
     in_range = (lat >= -90.0) & (lat <= 90.0) & (lon >= -180.0) & (lon <= 180.0)
-    keep = in_range & tag_keep
     if not in_range.all():
         _warn(stats, "node with invalid coordinates skipped")
-    tags = _build_tags_array(n, e_idx, keys, vals)
-    info = _sparse_infos_to_array(infos)
-    if not keep.all():
-        sel = np.flatnonzero(keep)
-        return {
-            "id": ids[sel],
-            "lat": lat[sel],
-            "lon": lon[sel],
-            "tags": tags.take(pa.array(sel)),
-            "info": info.take(pa.array(sel)),
-        }
-    return {"id": ids, "lat": lat, "lon": lon, "tags": tags, "info": info}
+    info = _sparse_info_array(info_raw, info_absent, string_table, date_granularity)
+    cols = {"id": ids, "lat": lat, "lon": lon, "tags": tags, "info": info}
+    return _keep_rows(cols, in_range & tag_keep)
 
 
 def decode_ways(
@@ -652,72 +524,32 @@ def decode_ways(
     optional LocationsOnWays positions when len(lat)==len(lon)==len(refs)."""
     if not bufs:
         return None
-    n = len(bufs)
-    ids = np.empty(n, np.int64)
-    key_payloads, val_payloads = [], []
-    ref_payloads, lat_payloads, lon_payloads = [], [], []
-    infos: list[SparseInfo | None] = []
-    for i, b in enumerate(bufs):
-        f = _collect_message(b, _WAY_SPEC)
-        ids[i] = _to_signed(f.get(1, 0))
-        key_payloads.append(_concat_packed(f.get(2, [])))
-        val_payloads.append(_concat_packed(f.get(3, [])))
-        ref_payloads.append(_concat_packed(f.get(8, [])))
-        lat_payloads.append(_concat_packed(f.get(9, [])))
-        lon_payloads.append(_concat_packed(f.get(10, [])))
-        infos.append(
-            decode_sparse_info(f[4], string_table, date_granularity) if 4 in f else None
-        )
-    refs, ref_off = decode_packed_group(ref_payloads, zigzag=True, delta=True)
-    lats, lat_off = decode_packed_group(lat_payloads, zigzag=True, delta=True)
-    lons, lon_off = decode_packed_group(lon_payloads, zigzag=True, delta=True)
-    ref_counts = np.diff(ref_off)
-    lat_counts = np.diff(lat_off)
-    lon_counts = np.diff(lon_off)
-
-    refs_arr = _build_list_array(pa.array(refs, type=pa.int64()), ref_off)
+    (ids,), payloads, info_raw, info_absent = _walk_messages(
+        bufs, _WAY_REL_SPEC, (1,), (2, 3, 8, 9, 10)
+    )
+    refs, ref_counts = decode_packed_group(payloads[8], zigzag=True, delta=True)
+    lats, lat_counts = decode_packed_group(payloads[9], zigzag=True, delta=True)
+    lons, lon_counts = decode_packed_group(payloads[10], zigzag=True, delta=True)
 
     # LocationsOnWays: per-way validity (src/load_pbf.jl:925-940)
     has_pos = (lat_counts > 0) & (lat_counts == lon_counts) & (lat_counts == ref_counts)
-    if has_pos.any():
-        lat_deg_all = scale_coords(lats, ll.lat_offset, ll.granularity)
-        lon_deg_all = scale_coords(lons, ll.lon_offset, ll.granularity)
-        # gather only valid ways' coords, keep alignment of lat/lon streams per way
-        sel_lat = np.concatenate(
-            [np.arange(lat_off[i], lat_off[i + 1]) for i in np.flatnonzero(has_pos)]
-        )
-        sel_lon = np.concatenate(
-            [np.arange(lon_off[i], lon_off[i + 1]) for i in np.flatnonzero(has_pos)]
-        )
-        pos_struct = pa.StructArray.from_arrays(
-            [
-                pa.array(lat_deg_all[sel_lat], type=pa.float64()),
-                pa.array(lon_deg_all[sel_lon], type=pa.float64()),
-            ],
-            fields=list(model.POSITION_ARROW),
-        )
-        pos_counts = np.where(has_pos, ref_counts, 0)
-        pos_off = np.concatenate(([0], np.cumsum(pos_counts)))
-        positions = _build_list_array(pos_struct, pos_off, null_mask=~has_pos)
-    else:
-        positions = pa.nulls(n, type=pa.list_(model.POSITION_ARROW))
-
-    e_idx, keys, vals, tag_keep = _resolve_tags_per_element(
-        key_payloads, val_payloads, string_table, stats, "way"
+    lat_deg = scale_coords(lats[np.repeat(has_pos, lat_counts)], ll.lat_offset, ll.granularity)
+    lon_deg = scale_coords(lons[np.repeat(has_pos, lon_counts)], ll.lon_offset, ll.granularity)
+    pos_struct = pa.StructArray.from_arrays(
+        [pa.array(lat_deg, type=pa.float64()), pa.array(lon_deg, type=pa.float64())],
+        fields=list(model.POSITION_ARROW),
     )
-    tags = _build_tags_array(n, e_idx, keys, vals)
-    info = _sparse_infos_to_array(infos)
-    out = {"id": ids, "refs": refs_arr, "tags": tags, "info": info, "positions": positions}
-    if not tag_keep.all():
-        sel = pa.array(np.flatnonzero(tag_keep))
-        out = {
-            "id": ids[np.flatnonzero(tag_keep)],
-            "refs": refs_arr.take(sel),
-            "tags": tags.take(sel),
-            "info": info.take(sel),
-            "positions": positions.take(sel),
-        }
-    return out
+    tags, tag_keep = _element_tags(payloads, string_table, stats, "way")
+    cols = {
+        "id": ids,
+        "refs": _build_list_array(pa.array(refs, type=pa.int64()), ref_counts, None),
+        "tags": tags,
+        "info": _sparse_info_array(info_raw, info_absent, string_table, date_granularity),
+        "positions": _build_list_array(
+            pos_struct, np.where(has_pos, ref_counts, 0), ~has_pos
+        ),
+    }
+    return _keep_rows(cols, tag_keep)
 
 
 def decode_relations(
@@ -731,28 +563,12 @@ def decode_relations(
     with OOB⇒'' (``:1106-1121``), members zipped to ARRAY<STRUCT>."""
     if not bufs:
         return None
-    n = len(bufs)
-    ids = np.empty(n, np.int64)
-    key_payloads, val_payloads = [], []
-    role_payloads, memid_payloads, type_payloads = [], [], []
-    infos: list[SparseInfo | None] = []
-    for i, b in enumerate(bufs):
-        f = _collect_message(b, _REL_SPEC)
-        ids[i] = _to_signed(f.get(1, 0))
-        key_payloads.append(_concat_packed(f.get(2, [])))
-        val_payloads.append(_concat_packed(f.get(3, [])))
-        role_payloads.append(_concat_packed(f.get(8, [])))
-        memid_payloads.append(_concat_packed(f.get(9, [])))
-        type_payloads.append(_concat_packed(f.get(10, [])))
-        infos.append(
-            decode_sparse_info(f[4], string_table, date_granularity) if 4 in f else None
-        )
-    memids, mem_off = decode_packed_group(memid_payloads, zigzag=True, delta=True)
-    roles_sid, role_off = decode_packed_group(role_payloads, zigzag=False, delta=False)
-    types_raw, type_off = decode_packed_group(type_payloads, zigzag=False, delta=False)
-    mem_counts = np.diff(mem_off)
-    role_counts = np.diff(role_off)
-    type_counts = np.diff(type_off)
+    (ids,), payloads, info_raw, info_absent = _walk_messages(
+        bufs, _WAY_REL_SPEC, (1,), (2, 3, 8, 9, 10)
+    )
+    roles_sid, role_counts = decode_packed_group(payloads[8], zigzag=False, delta=False)
+    memids, mem_counts = decode_packed_group(payloads[9], zigzag=True, delta=True)
+    types_raw, type_counts = decode_packed_group(payloads[10], zigzag=False, delta=False)
     if not ((mem_counts == role_counts) & (mem_counts == type_counts)).all():
         _warn(stats, "relation with mismatched member arrays; zipping to min length")
 
@@ -760,55 +576,35 @@ def decode_relations(
     t_clamped = np.where((types_raw >= 0) & (types_raw <= 2), types_raw, 0)
     if (t_clamped != types_raw).any():
         _warn(stats, "unknown relation member type defaulted to 'node'")
-    type_strs = _MEMBER_TYPES[t_clamped]
     # roles: sid in range else '' (src/load_pbf.jl:1106-1121); Julia st[sid+1] ⇒ py st[sid]
     stlen = len(string_table)
     role_ok = (roles_sid >= 0) & (roles_sid < stlen)
     if not role_ok.all():
         _warn(stats, "invalid relation role string index; using empty string")
     st_ext = np.asarray(string_table + [""], dtype=object)
-    role_strs = st_ext[np.where(role_ok, roles_sid, stlen)]
 
-    # zip to per-relation min length
+    # zip each relation's three arrays to their shortest length
     zip_counts = np.minimum(np.minimum(mem_counts, role_counts), type_counts)
-    total = int(zip_counts.sum())
-    ref_flat = np.empty(total, np.int64)
-    type_flat = np.empty(total, object)
-    role_flat = np.empty(total, object)
-    pos = 0
-    for i in range(n):
-        c = zip_counts[i]
-        if c:
-            ref_flat[pos : pos + c] = memids[mem_off[i] : mem_off[i] + c]
-            type_flat[pos : pos + c] = type_strs[type_off[i] : type_off[i] + c]
-            role_flat[pos : pos + c] = role_strs[role_off[i] : role_off[i] + c]
-            pos += c
+    type_keep = _head_mask(type_counts, zip_counts)
+    role_keep = _head_mask(role_counts, zip_counts)
     member_struct = pa.StructArray.from_arrays(
         [
-            pa.array(ref_flat, type=pa.int64()),
-            pa.array(type_flat, type=pa.string()),
-            pa.array(role_flat, type=pa.string()),
+            pa.array(memids[_head_mask(mem_counts, zip_counts)], type=pa.int64()),
+            pa.array(_MEMBER_TYPES[t_clamped[type_keep]], type=pa.string()),
+            pa.array(
+                st_ext[np.where(role_ok, roles_sid, stlen)[role_keep]], type=pa.string()
+            ),
         ],
         fields=list(model.MEMBER_ARROW),
     )
-    members = _build_list_array(
-        member_struct, np.concatenate(([0], np.cumsum(zip_counts)))
-    )
-    e_idx, keys, vals, tag_keep = _resolve_tags_per_element(
-        key_payloads, val_payloads, string_table, stats, "relation"
-    )
-    tags = _build_tags_array(n, e_idx, keys, vals)
-    info = _sparse_infos_to_array(infos)
-    if not tag_keep.all():
-        sel_np = np.flatnonzero(tag_keep)
-        sel = pa.array(sel_np)
-        return {
-            "id": ids[sel_np],
-            "members": members.take(sel),
-            "tags": tags.take(sel),
-            "info": info.take(sel),
-        }
-    return {"id": ids, "members": members, "tags": tags, "info": info}
+    tags, tag_keep = _element_tags(payloads, string_table, stats, "relation")
+    cols = {
+        "id": ids,
+        "members": _build_list_array(member_struct, zip_counts, None),
+        "tags": tags,
+        "info": _sparse_info_array(info_raw, info_absent, string_table, date_granularity),
+    }
+    return _keep_rows(cols, tag_keep)
 
 
 # ---------------------------------------------------------------------------
@@ -892,9 +688,7 @@ def decode_primitive_block(
             lon_offset = _to_signed(val)
     ll = LatLonParams(lat_offset, lon_offset, granularity)
 
-    node_parts: list[dict] = []
-    way_parts: list[dict] = []
-    rel_parts: list[dict] = []
+    parts: dict[str, list] = {"nodes": [], "ways": [], "relations": []}
     for grp in groups:
         try:
             node_bufs, way_bufs, rel_bufs, dense_buf = [], [], [], None
@@ -909,38 +703,30 @@ def decode_primitive_block(
                     rel_bufs.append(val)
                 # _PG_CHANGESETS ignored (reference ignores them too)
             if "nodes" in want:
-                if node_bufs:
-                    part = decode_regular_nodes(
-                        node_bufs, string_table, ll, date_granularity, stats
-                    )
-                    if part:
-                        node_parts.append(part)
+                parts["nodes"].append(
+                    decode_regular_nodes(node_bufs, string_table, ll, date_granularity, stats)
+                )
                 if dense_buf is not None:
-                    part = decode_dense_nodes(
-                        dense_buf, string_table, ll, date_granularity, stats
+                    parts["nodes"].append(
+                        decode_dense_nodes(dense_buf, string_table, ll, date_granularity, stats)
                     )
-                    if part:
-                        node_parts.append(part)
-            if "ways" in want and way_bufs:
-                part = decode_ways(way_bufs, string_table, ll, date_granularity, stats)
-                if part:
-                    way_parts.append(part)
-            if "relations" in want and rel_bufs:
-                part = decode_relations(rel_bufs, string_table, date_granularity, stats)
-                if part:
-                    rel_parts.append(part)
+            if "ways" in want:
+                parts["ways"].append(
+                    decode_ways(way_bufs, string_table, ll, date_granularity, stats)
+                )
+            if "relations" in want:
+                parts["relations"].append(
+                    decode_relations(rel_bufs, string_table, date_granularity, stats)
+                )
         except Exception as exc:  # group-level isolation (src/load_pbf.jl:403-406)
             stats.corrupt_groups += 1
             _warn(stats, f"corrupt primitive group skipped: {exc}")
-    out: dict[str, dict] = {}
-    if node_parts:
-        out["nodes"] = node_parts
-    if way_parts:
-        out["ways"] = way_parts
-    if rel_parts:
-        out["relations"] = rel_parts
-    for parts, key in ((node_parts, "nodes"), (way_parts, "ways"), (rel_parts, "relations")):
-        setattr(stats, key, sum(len(p["id"]) for p in parts))
+    out: dict[str, list[dict]] = {}
+    for kind, kind_parts in parts.items():
+        kind_parts = [p for p in kind_parts if p is not None]
+        setattr(stats, kind, sum(len(p["id"]) for p in kind_parts))
+        if kind_parts:
+            out[kind] = kind_parts
     return out
 
 

@@ -16,9 +16,6 @@ Scale notes:
   callback-during-parse model: filtered elements never materialize.
 - ``want`` pruning decodes only the requested entity kind — the analog of
   registering only the callbacks you need.
-- Id dedup across blobs (reference ``merge!`` last-wins, ``src/load_pbf.jl:385-401``)
-  is OFF by default (planet extracts don't duplicate ids); ``dedup_ids=True`` adds a
-  ``row_number() over (partition by id order by blob_seq desc)`` pass.
 """
 
 from __future__ import annotations
@@ -27,7 +24,7 @@ from dataclasses import dataclass
 from typing import Iterator
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from openstreetmapio_jl_spark import model
@@ -58,6 +55,14 @@ class OSMBundle:
     union: DataFrame | None = None
 
 
+def _header_meta(header: blocks.BlobDescriptor) -> dict:
+    """A file's OSMHeader blob → its meta dict."""
+    payload = blocks.decompress_blob(
+        blocks.read_blob_payload(header.path, header.data_offset, header.data_size)
+    )
+    return decode.decode_header_block(payload)
+
+
 def blob_index_df(
     spark: SparkSession,
     paths: str | list[str],
@@ -83,11 +88,7 @@ def blob_index_df(
         import pandas as pd
 
         for p in paths:
-            header = blocks.scan_first_blob(p)
-            payload = blocks.decompress_blob(
-                blocks.read_blob_payload(header.path, header.data_offset, header.data_size)
-            )
-            meta.update(decode.decode_header_block(payload))
+            meta.update(_header_meta(blocks.scan_first_blob(p)))
 
         def frame_file(batches):
             for pdf in batches:
@@ -115,11 +116,7 @@ def blob_index_df(
     rows = []
     for p in paths:
         descs = blocks.scan_blob_index(p)
-        header = descs[0]
-        payload = blocks.decompress_blob(
-            blocks.read_blob_payload(header.path, header.data_offset, header.data_size)
-        )
-        meta.update(decode.decode_header_block(payload))
+        meta.update(_header_meta(descs[0]))
         rows.extend(
             (d.path, d.blob_seq, d.blob_type, d.data_offset, d.data_size)
             for d in descs[1:]
@@ -272,7 +269,6 @@ def read_pbf(
     node_transform: ElementTransform | None = None,
     way_transform: ElementTransform | None = None,
     relation_transform: ElementTransform | None = None,
-    dedup_ids: bool = False,
     single_pass: bool = False,
 ) -> OSMBundle:
     """Full-container read — the ``read_pbf(filename; callbacks...)`` analog
@@ -283,8 +279,8 @@ def read_pbf(
     entity frames are cheap filter+project reads of the cache, and
     ``bundle.union`` holds the handle to ``unpersist()`` when done. The default
     three-scan path stays lazy (no persistence side effects)."""
+    index_df, meta = blob_index_df(spark, paths)
     if single_pass:
-        index_df, meta = blob_index_df(spark, paths)
         union, _ = read_pbf_union(
             spark,
             paths,
@@ -300,25 +296,14 @@ def read_pbf(
         nodes, ways, relations = split_union(union)
     else:
         union = None
-        index_df, meta = blob_index_df(spark, paths)
         index_df = index_df.cache()  # reused by all three scans
-        nodes = read_pbf_kind(
-            spark, paths, "nodes",
-            predicate=node_predicate, transform=node_transform, index_df=index_df,
-        )
-        ways = read_pbf_kind(
-            spark, paths, "ways",
-            predicate=way_predicate, transform=way_transform, index_df=index_df,
-        )
-        relations = read_pbf_kind(
-            spark, paths, "relations",
-            predicate=relation_predicate, transform=relation_transform, index_df=index_df,
-        )
-    if dedup_ids:
-        w = Window.partitionBy("id").orderBy(F.desc("blob_seq"))
         nodes, ways, relations = (
-            df.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
-            for df in (nodes, ways, relations)
+            read_pbf_kind(spark, paths, kind, predicate=pred, transform=tf, index_df=index_df)
+            for kind, pred, tf in zip(
+                _KINDS,
+                (node_predicate, way_predicate, relation_predicate),
+                (node_transform, way_transform, relation_transform),
+            )
         )
     return OSMBundle(nodes=nodes, ways=ways, relations=relations, meta=meta, union=union)
 
