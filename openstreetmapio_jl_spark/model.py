@@ -120,6 +120,15 @@ UNION_KIND_COLUMNS = {
     "relations": ["id", "members", "tags", "info", "blob_seq"],
 }
 
+BLOB_INDEX_ARROW = pa.schema(
+    [
+        pa.field("path", pa.string()),
+        pa.field("blob_seq", pa.int64()),
+        pa.field("blob_type", pa.string()),
+        pa.field("data_offset", pa.int64()),
+        pa.field("data_size", pa.int64()),
+    ]
+)
 BLOB_INDEX_DDL = (
     "path string, blob_seq bigint, blob_type string, data_offset bigint, data_size bigint"
 )

@@ -10,8 +10,16 @@ and runs the vectorized decode kernel — the reference's sequential loop
 (block independence guaranteed by ``osmformat.proto:39-44``).
 
 Scale notes:
-- Blob descriptors are tiny (5 fields/blob; a planet file is ~50k blobs) — the index
-  easily fits on the driver and parallelizes into ``4×cores`` partitions.
+- Blob descriptors are tiny (5 fields/blob; a planet file is ~50k blobs), so a
+  single file's index is built on the driver as an Arrow local relation: a JVM
+  ``LocalTableScan`` split into one partition per core
+  (``min(n_blobs, defaultParallelism)``), rows ordered so each partition carries
+  about the same compressed bytes. There is no Python index stage and no
+  ``Exchange``: decode → write is one Spark job of one stage with one
+  ``mapInArrow`` task per core. Every Python task has a fixed start-up cost
+  (about 200 ms of worker CPU on a 4-vCPU host, most of it in PySpark's
+  ``setup_spark_files`` → ``importlib.invalidate_caches``), which on a
+  ~20-blob extract outweighed the decode kernel itself.
 - Predicate pushdown INTO the kernel (``predicate=``) mirrors the reference's
   callback-during-parse model: filtered elements never materialize.
 - ``want`` pruning decodes only the requested entity kind — the analog of
@@ -20,6 +28,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import heapq
 from dataclasses import dataclass
 from typing import Iterator
 
@@ -72,21 +81,27 @@ def blob_index_df(
     """(data-blob descriptor DataFrame, merged meta from header blobs).
 
     Single file (the common planet-extract case): framing runs on the driver —
-    ~50k metadata-only seeks, trivially cheap. Multi-file corpora DISTRIBUTE the
-    framing: one Spark task per file emits that file's descriptors
-    (``distribute`` defaults to ``len(paths) > 1``), so the index pass scales
-    with the cluster instead of serializing a 100-TB corpus's framing on the
-    driver. Per-file meta still comes from the driver, but via
-    :func:`blocks.scan_first_blob` — a few hundred bytes per file, not a full
-    framing scan."""
+    ~50k metadata-only seeks, trivially cheap — and the descriptors go to Spark
+    as a ``pyarrow.Table``, i.e. a JVM ``LocalTableScan`` with no Python index
+    stage and no ``Exchange``. The scan splits its rows into
+    ``min(n_blobs, defaultParallelism)`` contiguous partitions; the rows are
+    ordered so each partition's ``data_size`` sum is balanced (largest blobs
+    placed first), giving one size-balanced decode task per core. One task per
+    core, not more: each Python task costs a fixed ~200 ms of worker start-up
+    CPU before the kernel runs (see the module docstring).
+
+    Multi-file corpora DISTRIBUTE the framing: one Spark task per file emits
+    that file's descriptors (``distribute`` defaults to ``len(paths) > 1``), so
+    the index pass scales with the cluster instead of serializing a 100-TB
+    corpus's framing on the driver. Per-file meta still comes from the driver,
+    but via :func:`blocks.scan_first_blob` — a few hundred bytes per file, not a
+    full framing scan. That path still hash-repartitions the descriptors."""
     if isinstance(paths, str):
         paths = [paths]
     if distribute is None:
         distribute = len(paths) > 1
     meta: dict = {}
     if distribute:
-        import pandas as pd
-
         for p in paths:
             meta.update(_header_meta(blocks.scan_first_blob(p)))
 
@@ -94,15 +109,7 @@ def blob_index_df(
             for pdf in batches:
                 for p in pdf["path"]:
                     descs = blocks.scan_blob_index(p)[1:]  # data blobs only
-                    yield pd.DataFrame(
-                        {
-                            "path": [d.path for d in descs],
-                            "blob_seq": [d.blob_seq for d in descs],
-                            "blob_type": [d.blob_type for d in descs],
-                            "data_offset": [d.data_offset for d in descs],
-                            "data_size": [d.data_size for d in descs],
-                        }
-                    )
+                    yield _index_table(descs).to_pandas()
 
         files = spark.createDataFrame([(p,) for p in paths], "path string")
         df = files.repartition(len(paths), "path").mapInPandas(
@@ -113,18 +120,44 @@ def blob_index_df(
             df.repartition(spark.sparkContext.defaultParallelism * 2, "path", "blob_seq"),
             meta,
         )
-    rows = []
+    descs: list[blocks.BlobDescriptor] = []
     for p in paths:
-        descs = blocks.scan_blob_index(p)
-        meta.update(_header_meta(descs[0]))
-        rows.extend(
-            (d.path, d.blob_seq, d.blob_type, d.data_offset, d.data_size)
-            for d in descs[1:]
-        )
-    df = spark.createDataFrame(rows, model.BLOB_INDEX_DDL)
-    # spread blobs across tasks; blob count is the parallelism unit
-    target = min(len(rows), spark.sparkContext.defaultParallelism * 2) or 1
-    return df.repartition(target, "blob_seq"), meta
+        file_descs = blocks.scan_blob_index(p)
+        meta.update(_header_meta(file_descs[0]))
+        descs.extend(file_descs[1:])  # data blobs only
+    # the slice count LocalTableScanExec uses for a local relation
+    conf = spark.conf.get("spark.sql.leafNodeDefaultParallelism", None)
+    n_parts = min(len(descs), int(conf or spark.sparkContext.defaultParallelism))
+    order = _size_balanced_order([d.data_size for d in descs], n_parts)
+    table = _index_table([descs[j] for j in order])
+    return spark.createDataFrame(table, model.BLOB_INDEX_DDL), meta
+
+
+def _index_table(descs: list[blocks.BlobDescriptor]) -> pa.Table:
+    """Blob descriptors → one index row each, in the given order."""
+    return pa.Table.from_pydict(
+        {f.name: [getattr(d, f.name) for d in descs] for f in model.BLOB_INDEX_ARROW},
+        schema=model.BLOB_INDEX_ARROW,
+    )
+
+
+def _size_balanced_order(sizes: list[int], n_parts: int) -> list[int]:
+    """Row order whose ``n_parts`` contiguous slices carry about equal total size.
+
+    A local relation of ``n`` rows is split into slice ``i`` =
+    ``[i*n // n_parts, (i+1)*n // n_parts)`` (``ParallelCollectionRDD``). Fill
+    those fixed-count slices largest item first, each into the least-loaded
+    slice that still has room; each slice keeps file order."""
+    n = len(sizes)
+    room = [(i + 1) * n // n_parts - i * n // n_parts for i in range(n_parts)]
+    slices: list[list[int]] = [[] for _ in range(n_parts)]
+    heap = [(0, i) for i in range(n_parts)]
+    for j in sorted(range(n), key=lambda j: -sizes[j]):
+        load, i = heapq.heappop(heap)
+        slices[i].append(j)
+        if len(slices[i]) < room[i]:
+            heapq.heappush(heap, (load + sizes[j], i))
+    return [j for part in slices for j in sorted(part)]
 
 
 def _decode_blobs(

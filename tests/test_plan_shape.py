@@ -8,6 +8,9 @@ pinned as tests so a refactor can't silently regress them.
 - The flagship PIP join ships the polygon side NARROW through the tile
   exchange: no ``edges`` column may appear in an Exchange below the final
   edges re-attach join.
+- A single-file PBF decode is one Spark job of one stage: the blob index is a
+  ``LocalTableScan`` under the decode's ``MapInArrow`` (no ``Exchange``),
+  split into one size-balanced partition per core.
 """
 
 from __future__ import annotations
@@ -136,3 +139,104 @@ def test_bucketed_entity_tables_join_without_shuffle(spark, fixture_pbf):
         assert joined.count() == n_refs
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+# ---------------------------------------------------------------------------
+# single-file PBF decode: one stage, one size-balanced Python task per core
+# ---------------------------------------------------------------------------
+
+@pytest.fixture(scope="module")
+def many_blob_pbf(tmp_path_factory, osm_data):
+    """The fixture split into 17 data blobs of uneven size (16 node blobs and
+    one larger ways+relations blob), more blobs than cores."""
+    from openstreetmapio_jl_spark.fixtures import generator as G
+
+    meta, nodes, ways, rels = osm_data
+    path = str(tmp_path_factory.mktemp("pbf") / "many.pbf")
+    G.write_fixture_pbf(path, meta, nodes, ways, rels, nodes_per_block=40)
+    return path
+
+
+def test_single_file_decode_plan_is_local_scan_with_balanced_partitions(
+    spark, many_blob_pbf
+):
+    """The index is a JVM local relation under the decode's MapInArrow: no
+    Exchange, no Python index stage. Its partitions are one per core, each
+    blob in exactly one of them, and balanced by compressed size."""
+    from pyspark.sql import functions as F
+
+    from openstreetmapio_jl_spark.pbf import blocks
+    from openstreetmapio_jl_spark.sources import pbf_source as PS
+
+    union, _ = PS.read_pbf_union(spark, many_blob_pbf)
+    plan = _plan(spark, union)
+    assert re.search(r"MapInArrow \(\d+\)\n\+- LocalTableScan \(\d+\)", plan), plan
+    assert "Exchange" not in plan, plan
+
+    sizes = {d.blob_seq: d.data_size for d in blocks.scan_blob_index(many_blob_pbf)[1:]}
+    n_parts = min(len(sizes), spark.sparkContext.defaultParallelism)
+    index_df, _ = PS.blob_index_df(spark, many_blob_pbf)
+    assert index_df.rdd.getNumPartitions() == n_parts
+    # spark_partition_id above an opaque MapInArrow: the optimizer cannot fold
+    # it into the local relation (where it would evaluate to 0 on the driver)
+    def _same(batches):
+        yield from batches
+
+    rows = (
+        index_df.mapInArrow(_same, index_df.schema)
+        .select(F.spark_partition_id().alias("part"), "blob_seq", "data_size")
+        .collect()
+    )
+    assert sorted(r.blob_seq for r in rows) == sorted(sizes)
+    assert all(r.data_size == sizes[r.blob_seq] for r in rows)
+    loads: dict[int, int] = {}
+    for r in rows:
+        loads[r.part] = loads.get(r.part, 0) + r.data_size
+    assert sorted(loads) == list(range(n_parts))
+    bound = sum(sizes.values()) / n_parts + max(sizes.values())
+    assert max(loads.values()) <= bound, (loads, bound)
+
+
+def test_size_balanced_order_bound():
+    """Every contiguous slice of the reordered rows sums to at most the mean
+    slice load plus the largest item, and keeps its rows in input order."""
+    import random
+
+    from openstreetmapio_jl_spark.sources.pbf_source import _size_balanced_order
+
+    rnd = random.Random(7)
+    for _ in range(2000):
+        n = rnd.randint(1, 40)
+        p = rnd.randint(1, n)
+        top = rnd.choice([3, 1000, 10**6])
+        sizes = [rnd.randint(1, top) for _ in range(n)]
+        order = _size_balanced_order(sizes, p)
+        assert sorted(order) == list(range(n))
+        for i in range(p):
+            part = order[i * n // p : (i + 1) * n // p]
+            assert part == sorted(part)
+            assert sum(sizes[j] for j in part) <= sum(sizes) / p + max(sizes)
+    assert _size_balanced_order([], 0) == []
+
+
+def test_single_file_decode_write_is_one_spark_job(spark, many_blob_pbf, tmp_path):
+    """Decode → parquet of one file is ONE Spark job, whole or restricted to a
+    blob_seq range as ``jobs/decode_job.py`` chunks it — the Exchange-free
+    chunk query ``lineage.run_resumable`` counts on."""
+    from pyspark.sql import functions as F
+
+    from openstreetmapio_jl_spark.sources import pbf_source as PS
+
+    sc = spark.sparkContext
+    index_df, _ = PS.blob_index_df(spark, many_blob_pbf)
+    chunk = index_df.filter(F.col("blob_seq").between(1, 5))
+    for i, kw in enumerate(({}, {"index_df": chunk})):
+        group = f"pbf-decode-write-{i}"
+        sc.setJobGroup(group, "decode write")
+        try:
+            union, _ = PS.read_pbf_union(spark, many_blob_pbf, **kw)
+            union.write.mode("overwrite").parquet(str(tmp_path / f"union{i}"))
+            jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setJobGroup("pbf-decode-post", "")
+        assert len(jobs) == 1, (kw, jobs)

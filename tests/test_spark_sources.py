@@ -120,3 +120,50 @@ def test_group_by_poi_type(pbf_bundle):
     )
     assert len(top) > 0
     assert top[0]["count"] >= top[-1]["count"]
+
+
+def test_header_only_pbf_reads_empty(spark, tmp_path, osm_data):
+    """A PBF with an OSMHeader and zero data blobs: empty index, empty union
+    with the union schema, empty entity frames, meta still read."""
+    from openstreetmapio_jl_spark import model
+    from openstreetmapio_jl_spark.sources.pbf_source import blob_index_df, read_pbf_union
+
+    meta = osm_data[0]
+    path = str(tmp_path / "header_only.pbf")
+    G.write_fixture_pbf(path, meta, [], [], [])
+    index_df, index_meta = blob_index_df(spark, path)
+    assert index_df.count() == 0 and index_meta["bbox"]
+    union, _ = read_pbf_union(spark, path)
+    union_schema = spark.createDataFrame([], model.UNION_DDL).schema
+    assert union.schema.simpleString() == union_schema.simpleString()
+    assert union.count() == 0
+    for single_pass in (False, True):
+        b = read_pbf(spark, path, single_pass=single_pass)
+        assert [b.nodes.count(), b.ways.count(), b.relations.count()] == [0, 0, 0]
+        assert b.meta == index_meta
+        if b.union is not None:
+            b.union.unpersist()
+
+
+def test_blob_seq_range_chunks_cover_every_blob_once(spark, tmp_path, osm_data):
+    """``jobs/decode_job.py`` splits the index into contiguous blob_seq ranges;
+    over the size-ordered index the ranges still cover every blob, and every
+    element, exactly once."""
+    from openstreetmapio_jl_spark.pbf import blocks
+    from openstreetmapio_jl_spark.sources.pbf_source import blob_index_df, read_pbf_union
+
+    meta, nodes, ways, rels = osm_data
+    path = str(tmp_path / "chunks.pbf")
+    G.write_fixture_pbf(path, meta, nodes, ways, rels, nodes_per_block=40)
+    index_df, _ = blob_index_df(spark, path)
+    max_seq = index_df.agg(F.max("blob_seq")).collect()[0][0]
+    n_chunks = 5
+    step = (max_seq + n_chunks) // n_chunks
+    seqs, elems = [], []
+    for i in range(n_chunks):
+        part = index_df.filter(F.col("blob_seq").between(i * step, (i + 1) * step - 1))
+        seqs += [r.blob_seq for r in part.collect()]
+        union, _ = read_pbf_union(spark, path, index_df=part)
+        elems += [(r.kind, r.id) for r in union.select("kind", "id").collect()]
+    assert sorted(seqs) == [d.blob_seq for d in blocks.scan_blob_index(path)[1:]]
+    assert len(elems) == len(set(elems)) == len(nodes) + len(ways) + len(rels)
