@@ -10,8 +10,9 @@ The full web-corpus preparation flow, each stage the scale-shaped operator the
 library provides:
 
 0. **cross-batch URL gate** (``--url-bloom PREFIX``) — urls already in the
-   persisted Bloom filter drop at load with certainty (no false negatives);
-   after the write, the survivors' urls OR-merge back (idempotent);
+   persisted Bloom filter drop at load with certainty (no false negatives),
+   and so do pages with a NULL url (counted as ``null_url_dropped``); after
+   the write, the survivors' urls OR-merge back (idempotent);
 1. **exact dedup** — md5 fingerprint of normalized text, keep the smallest
    url per group (deterministic survivor; one groupBy shuffle);
 1b. **near-dup cluster dedup** (``--near-dup-threshold`` > 0) — MinHash-LSH
@@ -90,6 +91,24 @@ def _default_batch_id(pages_path: str) -> str:
         st = os.stat(root)
         h.update(f"|{st.st_size}:{st.st_mtime_ns}".encode())
     return h.hexdigest()[:10]
+
+
+def _url_bloom_gate(pages, bloom_words, *, m: int):
+    """Pages whose url the persisted Bloom filter has (probably) not seen.
+
+    Pages with a NULL url cannot be checked against the filter: they drop
+    here, by an explicit filter (the caller counts them as
+    ``null_url_dropped``). The filter is probed once per DISTINCT url, so a
+    url repeated k times joins back as k rows, not k²."""
+    from pyspark.sql import functions as F
+
+    from openstreetmapio_jl_spark.operators.sketches import bloom_probe
+
+    pages = pages.filter(F.col("url").isNotNull())
+    verdicts = bloom_probe(
+        bloom_words, pages.select("url").distinct(), "url", probe_id="url", m=m
+    )
+    return pages.join(verdicts.filter(~F.col("might_contain")).select("url"), "url")
 
 
 def main() -> None:
@@ -213,15 +232,11 @@ def main() -> None:
     # 0. cross-batch URL rejection against the persisted bloom (certainty
     # for seen urls; the earliest, cheapest gate - one broadcast words join)
     bloom_table = f"{args.url_bloom}_url_bloom" if args.url_bloom else None
+    n_null_url = 0
     if bloom_table and spark.catalog.tableExists(bloom_table):
-        from openstreetmapio_jl_spark.operators.sketches import bloom_probe
-
-        verdicts = bloom_probe(
-            spark.table(bloom_table), pages.select("url"), "url",
-            probe_id="url", m=args.url_bloom_bits,
-        )
-        pages = pages.join(
-            verdicts.filter(~F.col("might_contain")).select("url"), "url"
+        n_null_url = pages.filter(F.col("url").isNull()).count()
+        pages = _url_bloom_gate(
+            pages, spark.table(bloom_table), m=args.url_bloom_bits
         )
 
     # 1. exact dedup: deterministic survivor per normalized-text fingerprint
@@ -476,6 +491,7 @@ def main() -> None:
             h.unpersist()
     stats["near_dup_dropped"] = n_near_dropped
     stats["chunk_boiler_dropped"] = n_chunk_boiler_dropped
+    stats["null_url_dropped"] = n_null_url
     print(json.dumps(stats))
     spark.stop()
 

@@ -8,7 +8,9 @@ whole-stage codegen) — no Python UDFs anywhere.
 
 Operators:
 - exact dedup (normalized-text fingerprint groupBy),
-- MinHash + LSH banding (shingle → H minhashes → B bands → bucket join),
+- MinHash + LSH banding (shingle → NUM_HASHES minhashes → N_BANDS bands →
+  bucket join): one signature step, one band-signature rule and one exact
+  verify feed every candidate path, with the shape fixed as module constants,
 - SimHash (32-bit, md5-prefix token hashes, per-bit majority vote),
 - n-gram Jaccard similarity (shingle-join candidate pairs, exact Jaccard),
 - embedding-cosine near-duplicates (see operators/similarity.py),
@@ -46,7 +48,19 @@ def fingerprint(col: Column) -> Column:
     return F.md5(F.encode(normalized_text(col), "UTF-8"))
 
 
-def char_shingles(col: Column, n: int = 5) -> Column:
+# MinHash-LSH shape, shared by every candidate path, the streaming prefilter and
+# both DuckDB twins (plans/entry_queries.py): 5-char shingles, 8 minhashes,
+# 4 bands of 2. Fixed, not options: a per-call value could only make the
+# engine and its oracle disagree.
+SHINGLE_N = 5
+NUM_HASHES = 8
+BAND_SIZE = 2
+N_BANDS = NUM_HASHES // BAND_SIZE
+# prime > 2^32 for Kirsch-Mitzenmacher double hashing: h_i(s) = (h1 + i*h2) mod P
+MINHASH_PRIME = 4294967311
+
+
+def char_shingles(col: Column, n: int = SHINGLE_N) -> Column:
     """ARRAY<STRING> of overlapping character n-grams of the normalized text.
 
     Texts shorter than ``n`` yield an EMPTY array. The length gate is load-bearing:
@@ -63,8 +77,106 @@ def char_shingles(col: Column, n: int = 5) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-# prime > 2^32 for Kirsch-Mitzenmacher double hashing: h_i(s) = (h1 + i*h2) mod P
-MINHASH_PRIME = 4294967311
+# ---------------------------------------------------------------------------
+# MinHash-LSH: one derivation for every candidate path
+# ---------------------------------------------------------------------------
+
+def _shingle_hash(s: Column, half: int) -> Column:
+    """32-bit half ``half`` (0 or 1) of a shingle's md5, as BIGINT. ONE md5 per
+    shingle feeds all NUM_HASHES minhash families via double hashing."""
+    return F.conv(F.substring(F.md5(s), 1 + 8 * half, 8), 16, 10).cast("long")
+
+
+def _minhash(h1: Column, h2: Column, i: int) -> Column:
+    return F.pmod(h1 + F.lit(i + 1) * h2, F.lit(MINHASH_PRIME))
+
+
+def _band_sig(mh: list[Column], b: int, width: int) -> Column:
+    """The one band-signature rule: md5 over ``width`` consecutive minhashes
+    from band ``b``'s first, wrapping. ``width == BAND_SIZE`` is the bucket
+    key; ``2 * BAND_SIZE`` is the finer hot-bucket sub-split signature."""
+    return F.md5(
+        F.concat_ws(
+            "_",
+            *[mh[(b * BAND_SIZE + j) % NUM_HASHES].cast("string") for j in range(width)],
+        )
+    )
+
+
+def _minhash_signatures(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """→ (id, mh0, mh1, …): the batch MinHash signature of each doc.
+
+    Explodes shingle POSITIONS (an int sequence) and slices inside the same
+    codegen stage rather than exploding a materialized ARRAY<STRING> of
+    n-grams: the string array allocates |text| small strings per doc before
+    the generate, which measured ~6x slower than substring-after-explode.
+    Repeated shingles leave the min unchanged. The length gate runs BEFORE the
+    explode: ``sequence(1, stop<=0)`` counts DOWN in Spark (``[1, 0]``) and
+    would fabricate truncated shingles; docs shorter than the shingle width
+    get no signature (they belong to the exact-dedup path). The
+    explode→groupBy aggregates map-side, so the shuffle carries only
+    NUM_HASHES longs per document."""
+    sh = (
+        docs.select(F.col(id_col).alias("id"), normalized_text(F.col(text_col)).alias("t"))
+        .filter(F.length("t") >= SHINGLE_N)
+        .select(
+            "id",
+            "t",
+            F.explode(F.sequence(F.lit(1), F.length("t") - (SHINGLE_N - 1))).alias("i"),
+        )
+        .select("id", F.substring(F.col("t"), F.col("i").cast("int"), SHINGLE_N).alias("s"))
+    )
+    hashed = sh.select(
+        "id",
+        _shingle_hash(F.col("s"), 0).alias("h1"),
+        _shingle_hash(F.col("s"), 1).alias("h2"),
+    )
+    return hashed.groupBy("id").agg(
+        *[
+            F.min(_minhash(F.col("h1"), F.col("h2"), i)).alias(f"mh{i}")
+            for i in range(NUM_HASHES)
+        ]
+    )
+
+
+def _band_rows(sigs: DataFrame, **widths: int) -> DataFrame:
+    """(id, mh…) → one row per (id, band): ``band_idx`` plus, per keyword, the
+    :func:`_band_sig` of that width (``band_sig=BAND_SIZE``, …)."""
+    mh = [F.col(f"mh{i}") for i in range(NUM_HASHES)]
+    bands = [
+        F.struct(
+            F.lit(b).alias("band_idx"),
+            *[_band_sig(mh, b, w).alias(name) for name, w in widths.items()],
+        )
+        for b in range(N_BANDS)
+    ]
+    return sigs.select("id", F.explode(F.array(*bands)).alias("band")).select(
+        "id", "band.*"
+    )
+
+
+def _verified_pairs(cand: DataFrame, texts: DataFrame, threshold: float) -> DataFrame:
+    """The one exact verify: (id_a, id_b) candidates + (id, text) → (id_a,
+    id_b, jaccard) for shingle-set Jaccard ≥ ``threshold``, rounded to 6
+    places as the oracle rounds. Shingle sets are built from ``texts`` only,
+    so a caller passing candidate texts keeps the verify candidate-bounded."""
+    shs = texts.select("id", F.array_distinct(char_shingles(F.col("text"))).alias("sh"))
+    sa = shs.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
+    sb = shs.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
+    return (
+        cand.join(sa, "id_a")
+        .join(sb, "id_b")
+        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
+        .withColumn(
+            "jaccard",
+            F.round(
+                F.col("inter") / (F.size("sh_a") + F.size("sh_b") - F.col("inter")),
+                6,
+            ),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -84,22 +196,13 @@ def exact_duplicates(
 
 
 def minhash_lsh_buckets(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 5,
-    num_hashes: int = 8,
-    band_size: int = 2,
-    rebalance: bool | None = None,
+    docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """→ (band_idx, band_sig, n_docs, min_id, max_id) for buckets with >= 2 docs —
-    the LSH candidate-duplicate groups. Bands are md5 over ``band_size``
+    the LSH candidate-duplicate groups. Bands are md5 over ``BAND_SIZE``
     consecutive minhashes. At scale this is one explode + one groupBy shuffle keyed
     by (band_idx, band_sig); hot buckets (boilerplate text) are the skew case the
     salting helper handles."""
-    assert num_hashes % band_size == 0
-    nbands = num_hashes // band_size
     # Shingling explodes each doc ~|text| ways, so the stage's cost is sized by
     # its OUTPUT, not its input — if the input arrives in fewer partitions than
     # cores (one small parquet file, a coalesced upstream), the whole expansion
@@ -115,84 +218,21 @@ def minhash_lsh_buckets(
     # the file count can't see without running the plan: a `.coalesce(n)`
     # upstream (files plentiful, runtime partitions few — under-rebalanced) and
     # a single LARGE splittable file (1 file, many maxPartitionBytes splits —
-    # needlessly rebalanced). ``rebalance`` overrides the heuristic for both:
-    # True forces the reshuffle, False forbids it, None (default) probes.
+    # one needless reshuffle).
     dp = docs.sparkSession.sparkContext.defaultParallelism
-    if rebalance is None:
-        try:
-            n_files = len(docs.inputFiles())
-        except Exception:  # non-file plans (streams, pure-local relations)
-            n_files = 0
-        rebalance = 0 < n_files < dp
-    if rebalance:
+    try:
+        n_files = len(docs.inputFiles())
+    except Exception:  # non-file plans (streams, pure-local relations)
+        n_files = 0
+    if 0 < n_files < dp:
         docs = docs.repartition(dp * 2, id_col)
-    # Explode POSITIONS (an int sequence) and slice inside the same codegen stage
-    # rather than exploding a materialized ARRAY<STRING> of n-grams: the string
-    # array allocates |text| small strings per doc before the generate, which
-    # measured ~6x slower than streaming substring-after-explode.
-    # Length gate BEFORE the explode: sequence(1, stop<=0) counts DOWN in Spark
-    # ([1, 0]), which would fabricate truncated shingles for sub-shingle-width
-    # texts; filtering them here is also the documented drop-short-docs contract.
-    txt = normalized_text(F.col(text_col))
-    sh = (
-        docs.select(F.col(id_col), txt.alias("t"))
-        .filter(F.length("t") >= shingle_n)
-        .select(
-            id_col,
-            "t",
-            F.explode(
-                F.sequence(F.lit(1), F.length("t") - (shingle_n - 1))
-            ).alias("i"),
-        )
-        .select(id_col, F.substring(F.col("t"), F.col("i").cast("int"), shingle_n).alias("s"))
-    )
-    # ONE md5 per shingle (not one per shingle per hash function): the H minhash
-    # families derive from the md5's two 32-bit halves via double hashing. Cuts
-    # the dominant cost H-fold; the explode→groupBy aggregates map-side, so the
-    # shuffle carries only H longs per document. Docs with no shingles (text
-    # shorter than the shingle width) have no signature and are dropped — they
-    # belong to the exact-dedup path.
-    hashed = sh.select(
-        id_col,
-        F.conv(F.substring(F.md5("s"), 1, 8), 16, 10).cast("long").alias("h1"),
-        F.conv(F.substring(F.md5("s"), 9, 8), 16, 10).cast("long").alias("h2"),
-    )
-    sigs = hashed.groupBy(id_col).agg(
-        *[
-            F.min(
-                F.pmod(F.col("h1") + F.lit(i + 1) * F.col("h2"), F.lit(MINHASH_PRIME))
-            ).alias(f"mh{i}")
-            for i in range(num_hashes)
-        ]
-    )
-    bands = sigs.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.md5(
-                            F.concat_ws(
-                                "_",
-                                *[
-                                    F.col(f"mh{b * band_size + j}").cast("string")
-                                    for j in range(band_size)
-                                ],
-                            )
-                        ).alias("band_sig"),
-                    )
-                    for b in range(nbands)
-                ]
-            )
-        ).alias("band"),
-    ).select(id_col, "band.band_idx", "band.band_sig")
+    bands = _band_rows(_minhash_signatures(docs, id_col, text_col), band_sig=BAND_SIZE)
     return (
         bands.groupBy("band_idx", "band_sig")
         .agg(
             F.count("*").alias("n_docs"),
-            F.min(id_col).alias("min_id"),
-            F.max(id_col).alias("max_id"),
+            F.min("id").alias("min_id"),
+            F.max("id").alias("max_id"),
         )
         .filter(F.col("n_docs") >= 2)
     )
@@ -275,71 +315,24 @@ def _cap_bucket_df(
 
 
 def minhash_band_memberships(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 5,
-    num_hashes: int = 8,
-    band_size: int = 2,
+    docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """→ (id, band_idx, band_sig, sub_sig): one row per (doc, LSH band).
 
-    ``band_sig`` is md5 over the band's ``band_size`` consecutive minhashes —
+    ``band_sig`` is md5 over the band's ``BAND_SIZE`` consecutive minhashes —
     the bucket key. ``sub_sig`` is md5 over the DOUBLE-width window starting at
     the same hash (wrapping): the finer signature the hot-bucket sub-split
     (:func:`_cap_bucket_df`) pieces over-cap buckets by — a pair with Jaccard s
-    collides on it with probability s^(2·band_size) instead of s^band_size, so
+    collides on it with probability s^(2·BAND_SIZE) instead of s^BAND_SIZE, so
     boilerplate-shell buckets scatter while true near-dups stay co-located.
 
     Shared by :func:`jaccard_via_lsh` (self-join corpus dedup) and the
     incremental path (:func:`build_dedup_index` persists exactly these rows)."""
-    nbands = num_hashes // band_size
-    d = docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
-    sh = d.select(
-        "id",
-        F.explode(F.array_distinct(char_shingles(F.col("text"), shingle_n))).alias("s"),
+    return _band_rows(
+        _minhash_signatures(docs, id_col, text_col),
+        band_sig=BAND_SIZE,
+        sub_sig=2 * BAND_SIZE,
     )
-    hashed = sh.select(
-        "id",
-        F.conv(F.substring(F.md5("s"), 1, 8), 16, 10).cast("long").alias("h1"),
-        F.conv(F.substring(F.md5("s"), 9, 8), 16, 10).cast("long").alias("h2"),
-    )
-    sigs = hashed.groupBy("id").agg(
-        *[
-            F.min(
-                F.pmod(F.col("h1") + F.lit(i + 1) * F.col("h2"), F.lit(MINHASH_PRIME))
-            ).alias(f"mh{i}")
-            for i in range(num_hashes)
-        ]
-    )
-
-    def _sig(b: int, width: int) -> Column:
-        return F.md5(
-            F.concat_ws(
-                "_",
-                *[
-                    F.col(f"mh{(b * band_size + j) % num_hashes}").cast("string")
-                    for j in range(width)
-                ],
-            )
-        )
-
-    return sigs.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        _sig(b, band_size).alias("band_sig"),
-                        _sig(b, 2 * band_size).alias("sub_sig"),
-                    )
-                    for b in range(nbands)
-                ]
-            )
-        ).alias("band"),
-    ).select("id", "band.band_idx", "band.band_sig", "band.sub_sig")
 
 
 def jaccard_via_lsh(
@@ -347,10 +340,7 @@ def jaccard_via_lsh(
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle_n: int = 5,
     threshold: float = 0.5,
-    num_hashes: int = 8,
-    band_size: int = 2,
     max_bucket_df: int | None = None,
 ) -> DataFrame:
     """→ (id_a, id_b, jaccard): the PLANET-SCALE composition the Jaccard
@@ -369,19 +359,11 @@ def jaccard_via_lsh(
     hard drop for pieces no signature can separate (byte-identical clones) —
     see :func:`_cap_bucket_df`. Without the guard one degenerate bucket
     produces O(n²) pairs at corpus scale."""
-    d = docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
-    # per-doc band memberships (same derivation as minhash_lsh_buckets, which
-    # returns bucket AGGREGATES — here the memberships themselves are needed)
-    bands = minhash_band_memberships(
-        docs,
-        id_col=id_col,
-        text_col=text_col,
-        shingle_n=shingle_n,
-        num_hashes=num_hashes,
-        band_size=band_size,
-    )
     bands = _cap_bucket_df(
-        bands, ["band_idx", "band_sig"], max_bucket_df, sub_col="sub_sig"
+        minhash_band_memberships(docs, id_col=id_col, text_col=text_col),
+        ["band_idx", "band_sig"],
+        max_bucket_df,
+        sub_col="sub_sig",
     )
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
@@ -395,27 +377,8 @@ def jaccard_via_lsh(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    # exact verify: shingle sets re-attached per candidate pair only
-    shs = d.select(
-        "id", F.array_distinct(char_shingles(F.col("text"), shingle_n)).alias("sh")
-    )
-    sa = shs.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    sb = shs.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter")
-                / (F.size("sh_a") + F.size("sh_b") - F.col("inter")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    texts = docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
+    return _verified_pairs(cand, texts, threshold)
 
 
 def simhash_neardup_pairs(
@@ -507,7 +470,6 @@ def ngram_jaccard_pairs(
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle_n: int = 5,
     threshold: float = 0.5,
     max_shingle_df: int | None = None,
 ) -> DataFrame:
@@ -526,7 +488,7 @@ def ngram_jaccard_pairs(
     identically in the DuckDB oracle). ``None`` disables the guard."""
     sh = docs.select(
         F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(char_shingles(F.col(text_col), shingle_n))).alias("s"),
+        F.explode(F.array_distinct(char_shingles(F.col(text_col)))).alias("s"),
     )
     if max_shingle_df is not None:
         # One extra groupBy on the shingle key; the join back is on the same key
@@ -559,53 +521,28 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_band_sig_cols(
-    text: Column,
-    *,
-    shingle_n: int = 5,
-    num_hashes: int = 8,
-    band_size: int = 2,
-) -> list[Column]:
-    """Per-ROW band signatures — the same md5/Kirsch-Mitzenmacher minhash math
-    as :func:`minhash_band_memberships`, computed entirely with higher-order
-    functions (``transform``/``zip_with``/``array_min``) instead of
-    explode+groupBy. Returns ``nbands`` Columns (band 0..n-1); each is NULL
-    for texts shorter than the shingle width (such docs have no memberships in
-    the batch derivation either).
+def minhash_band_sig_cols(text: Column) -> list[Column]:
+    """Per-ROW band signatures — the same md5/Kirsch-Mitzenmacher minhashes
+    and :func:`_band_sig` rule as :func:`minhash_band_memberships`, computed
+    entirely with higher-order functions (``transform``/``zip_with``/
+    ``array_min``) instead of explode+groupBy. Returns ``N_BANDS`` Columns
+    (band 0..n-1); each is NULL for texts shorter than the shingle width
+    (such docs have no memberships in the batch derivation either).
 
     The groupBy form is preferred for batch (map-side combine keeps the
-    shuffle at H longs/doc); this form exists because it is AGGREGATION-FREE —
-    legal inside Structured Streaming plans where a stream-side groupBy would
-    be a stateful operator (``streaming/pipelines.py:novel_pages_stream``).
-    Equality with the batch derivation is test-pinned."""
-    nbands = num_hashes // band_size
-    sh = F.array_distinct(char_shingles(text, shingle_n))
-    h1 = F.transform(
-        sh, lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
-    )
-    h2 = F.transform(
-        sh, lambda s: F.conv(F.substring(F.md5(s), 9, 8), 16, 10).cast("long")
-    )
+    shuffle at NUM_HASHES longs/doc); this form exists because it is
+    AGGREGATION-FREE — legal inside Structured Streaming plans where a
+    stream-side groupBy would be a stateful operator
+    (``streaming/pipelines.py:novel_pages_stream``). Equality with the batch
+    derivation is test-pinned."""
+    sh = F.array_distinct(char_shingles(text))
+    h1 = F.transform(sh, lambda s: _shingle_hash(s, 0))
+    h2 = F.transform(sh, lambda s: _shingle_hash(s, 1))
     mh = [
-        F.array_min(
-            F.zip_with(
-                h1,
-                h2,
-                lambda a, b: F.pmod(a + F.lit(i + 1) * b, F.lit(MINHASH_PRIME)),
-            )
-        )
-        for i in range(num_hashes)
+        F.array_min(F.zip_with(h1, h2, lambda a, b: _minhash(a, b, i)))
+        for i in range(NUM_HASHES)
     ]
-    out = []
-    for b in range(nbands):
-        sig = F.md5(
-            F.concat_ws(
-                "_",
-                *[mh[b * band_size + j].cast("string") for j in range(band_size)],
-            )
-        )
-        out.append(F.when(F.size(sh) >= 1, sig))
-    return out
+    return [F.when(F.size(sh) >= 1, _band_sig(mh, b, BAND_SIZE)) for b in range(N_BANDS)]
 
 
 def build_dedup_index(
@@ -616,9 +553,6 @@ def build_dedup_index(
     n_buckets: int = 16,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle_n: int = 5,
-    num_hashes: int = 8,
-    band_size: int = 2,
 ) -> None:
     """Persist a corpus's MinHash signature INDEX as bucketed tables so that
     incoming batches dedup against it WITHOUT rescanning the corpus
@@ -662,14 +596,7 @@ def build_dedup_index(
         loc = os.path.join(warehouse, name)
         if os.path.isdir(loc):
             shutil.rmtree(loc, ignore_errors=True)
-    m = minhash_band_memberships(
-        corpus_docs,
-        id_col=id_col,
-        text_col=text_col,
-        shingle_n=shingle_n,
-        num_hashes=num_hashes,
-        band_size=band_size,
-    )
+    m = minhash_band_memberships(corpus_docs, id_col=id_col, text_col=text_col)
     (
         m.write.mode("overwrite")
         .bucketBy(n_buckets, "band_sig")
@@ -711,9 +638,6 @@ def extend_dedup_index(
     n_buckets: int = 16,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle_n: int = 5,
-    num_hashes: int = 8,
-    band_size: int = 2,
     batch_key: str | None = None,
 ) -> str:
     """Append a processed batch to an existing signature index — the
@@ -757,12 +681,7 @@ def extend_dedup_index(
     # append) and the stats aggregate below reuses the checkpoint instead of
     # recomputing the minhash pass over the batch text
     m = minhash_band_memberships(
-        docs,
-        id_col=id_col,
-        text_col=text_col,
-        shingle_n=shingle_n,
-        num_hashes=num_hashes,
-        band_size=band_size,
+        docs, id_col=id_col, text_col=text_col
     ).localCheckpoint(eager=False)
     (
         m.write.mode("append")
@@ -814,9 +733,6 @@ def incremental_candidate_pairs(
     table_prefix: str = "dedup_idx",
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle_n: int = 5,
-    num_hashes: int = 8,
-    band_size: int = 2,
     max_bucket_df: int | None = None,
 ) -> DataFrame:
     """→ (id_a, id_b): LSH candidate pairs of an incoming batch vs the
@@ -835,12 +751,7 @@ def incremental_candidate_pairs(
         "band_idx", "band_sig", "sub_sig", "cnt"
     )
     new_m = minhash_band_memberships(
-        new_docs,
-        id_col=id_col,
-        text_col=text_col,
-        shingle_n=shingle_n,
-        num_hashes=num_hashes,
-        band_size=band_size,
+        new_docs, id_col=id_col, text_col=text_col
     ).localCheckpoint(eager=False)
 
     bkeys = ["band_idx", "band_sig"]
@@ -923,10 +834,7 @@ def incremental_dedup_pairs(
     table_prefix: str = "dedup_idx",
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle_n: int = 5,
     threshold: float = 0.5,
-    num_hashes: int = 8,
-    band_size: int = 2,
     max_bucket_df: int | None = None,
     in_pushdown_limit: int = 100_000,
 ) -> DataFrame:
@@ -959,9 +867,6 @@ def incremental_dedup_pairs(
         table_prefix=table_prefix,
         id_col=id_col,
         text_col=text_col,
-        shingle_n=shingle_n,
-        num_hashes=num_hashes,
-        band_size=band_size,
         max_bucket_df=max_bucket_df,
     ).localCheckpoint(eager=True)  # reused for the id fetch + verify join
     # exact verify over CANDIDATE texts only. Candidate ids are collected and
@@ -1001,23 +906,8 @@ def incremental_dedup_pairs(
     old_texts = old_texts.dropDuplicates(["id"])
     texts = old_texts.unionByName(
         new_docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
-    ).select("id", F.array_distinct(char_shingles(F.col("text"), shingle_n)).alias("sh"))
-    sa = texts.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    sb = texts.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter") / (F.size("sh_a") + F.size("sh_b") - F.col("inter")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
     )
+    return _verified_pairs(cand, texts, threshold)
 
 
 def incremental_cluster_losers(
@@ -1153,7 +1043,7 @@ def chunk_dedup(
     # a generator's non-attribute child at every consumer, so exploding the
     # chunk array re-evaluates the whole transform-lambda chain ~an order of
     # magnitude more than once (measured 4x wall on this query at sf0.1; same
-    # pathology minhash_lsh_buckets documents for shingles). sequence(0, -1)
+    # pathology _minhash_signatures documents for shingles). sequence(0, -1)
     # counts DOWN (the char_shingles trap) — gate on size; zero-word docs get
     # no chunk rows here and are restored by the ids left join below.
     ex = (
@@ -1286,7 +1176,7 @@ def contamination_stats(
     # materialized HOF-built gram array: codegen re-derives a generator's
     # non-attribute child at every consumer, re-running the whole gram-lambda
     # chain ~an order of magnitude more than once (measured: this query went
-    # 6.5 s → 0.6 s at sf0.1 from this restructure; minhash_lsh_buckets
+    # 6.5 s → 0.6 s at sf0.1 from this restructure; _minhash_signatures
     # documents the same pathology for shingles). sequence(1, 0) counts DOWN
     # (the char_shingles trap) — gate on the gram count.
     n = ngram_words

@@ -9,8 +9,8 @@ zero Python in the join path).
 Scale design:
 - polygons carry their edge arrays; the tile-cover explode keys each polygon into
   every tile its bbox touches — candidate pairs are bounded by tile granularity;
-- small polygon sides broadcast (``broadcast=True`` or Spark's auto threshold);
-  planet-scale sides shuffle on the tile key;
+- small polygon sides broadcast under Spark's auto threshold; planet-scale
+  sides shuffle on the tile key;
 - hot cells (dense urban tiles) get explicit **salting** (``nsalt=`` of
   :func:`point_in_polygon_join`) — AQE skew-split can divide a skewed
   *partition* but not a single hot *key*; salting can (SURVEY.md §4).
@@ -447,17 +447,21 @@ def tile_cover_bbox(
     return _bbox_keys(x_lo, x_hi, y0, y1, min_lon > max_lon, F.lit(1 << z), z)
 
 
+# adaptive cover: a polygon spans at most this many tiles per axis at its level
+ADAPTIVE_COVER_MAX_SIDE = 8
+
+
 def adaptive_cover_cols(
-    min_lat: Column, max_lat: Column, min_lon: Column, max_lon: Column,
-    z: int, max_side: int = 8,
+    min_lat: Column, max_lat: Column, min_lon: Column, max_lon: Column, z: int
 ) -> tuple[Column, Column]:
     """(lvl, ARRAY<BIGINT> tile keys at lvl): per-polygon multi-resolution cover.
 
-    A polygon whose bbox spans more than ``max_side`` tiles per axis at ``z`` is
-    covered at the coarser level where its span fits — so the cover is bounded
-    by ``max_side²`` keys per polygon REGARDLESS of polygon size. Without this,
-    one continent-sized relation polygon (a country boundary, a sea) explodes
-    into millions of z13 tiles and its cover dominates the whole join. Local
+    A polygon whose bbox spans more than ``ADAPTIVE_COVER_MAX_SIDE`` tiles per
+    axis at ``z`` is covered at the coarser level where its span fits — so the
+    cover is bounded by ``ADAPTIVE_COVER_MAX_SIDE²`` keys per polygon
+    REGARDLESS of polygon size. Without this, one continent-sized relation
+    polygon (a country boundary, a sea) explodes into millions of z13 tiles
+    and its cover dominates the whole join. Local
     polygons (the overwhelming majority) keep the full-resolution level — their
     candidate sets stay tight."""
     n = 1 << z
@@ -469,9 +473,10 @@ def adaptive_cover_cols(
     sx = F.when(crosses, F.lit(n) - x_lo + x_hi + 1).otherwise(x_hi - x_lo + 1)
     sy = y1 - y0 + 1
     span = F.greatest(sx, sy).cast("double")
+    max_side = F.lit(float(ADAPTIVE_COVER_MAX_SIDE))
     d = (
-        F.when(span <= F.lit(float(max_side)), F.lit(0.0))
-        .otherwise(F.ceil(F.log2(span / F.lit(float(max_side)))))
+        F.when(span <= max_side, F.lit(0.0))
+        .otherwise(F.ceil(F.log2(span / max_side)))
         .cast("int")
     )
     d = F.least(d, F.lit(z))
@@ -495,24 +500,21 @@ def point_in_polygon_join(
     polygons: DataFrame,
     *,
     zoom: int = 13,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    broadcast: bool = False,
     nsalt: int = 0,
     salt_id_col: str | None = None,
     adaptive_cover: bool = False,
-    max_cover_side: int = 8,
 ) -> DataFrame:
     """points × polygons → rows where the point lies inside the polygon.
 
-    ``polygons`` needs (id, edges, min_lat, max_lat, min_lon, max_lon) — from
-    :func:`polygons_with_edges` or :func:`assemble_multipolygons`.
+    ``points`` needs (lat, lon); ``polygons`` needs (id, edges, min_lat,
+    max_lat, min_lon, max_lon) — from :func:`polygons_with_edges` or
+    :func:`assemble_multipolygons`.
 
     Plan shape: polygon side exploded on tile cover (small ×cover_factor), point
-    side keyed by its single tile → hash equi-join on ``tile`` (broadcast when
-    requested) → exact ray cast as an ``aggregate`` HOF in codegen. A point maps
-    to exactly one tile and a polygon covers each tile once, so no post-dedup is
-    needed. ``nsalt > 0`` splits hot tiles across ``nsalt`` sub-keys.
+    side keyed by its single tile → hash equi-join on ``tile`` (broadcast under
+    Spark's auto threshold) → exact ray cast as an ``aggregate`` HOF in
+    codegen. A point maps to exactly one tile and a polygon covers each tile
+    once, so no post-dedup is needed. ``nsalt > 0`` splits hot tiles across ``nsalt`` sub-keys.
 
     Salt key: ``hash(salt_id_col)`` when given (the point's UNIQUE id, e.g.
     ``url``), else ``monotonically_increasing_id`` — never the coordinates. The
@@ -524,19 +526,26 @@ def point_in_polygon_join(
 
     ``adaptive_cover=True`` switches to the multi-resolution cover
     (:func:`adaptive_cover_cols`): polygons whose bbox exceeds
-    ``max_cover_side`` tiles per axis are covered at a coarser level (≤
-    ``max_cover_side²`` keys each — continent-sized relation polygons stop
-    exploding the cover), and each point emits one key per DISTINCT level
-    actually present on the polygon side. The level set stays INSIDE the plan:
-    the point side cross-joins a broadcast of ``distinct(_lvl)`` (a frame of at
-    most ``zoom+1`` rows computed from the small polygon dimension at execution
-    time), so plan construction runs zero Spark jobs — building the query never
-    re-scans the polygon side, and a cached polygon dimension makes the
-    level-discovery subjob read the cache. A point still meets each polygon in
+    ``ADAPTIVE_COVER_MAX_SIDE`` tiles per axis are covered at a coarser level
+    (≤ ``ADAPTIVE_COVER_MAX_SIDE²`` keys each — continent-sized relation
+    polygons stop exploding the cover), and each point emits one key per
+    DISTINCT level actually present on the polygon side. The level set stays
+    INSIDE the plan: the point side cross-joins a broadcast of
+    ``distinct(_lvl)`` (a frame of at most ``zoom+1`` rows computed from the
+    small polygon dimension at execution time), so plan construction runs
+    zero Spark jobs — building the query never re-scans the polygon side, and
+    a cached polygon dimension makes the level-discovery subjob read the
+    cache. A point still meets each polygon in
     exactly one (level, tile) bucket, so no post-dedup is needed.
+
+    The adaptive cover stays the caller's choice rather than replacing the
+    static one, because always using it measured slower: a prototype that
+    always used it cut the ``perfbench`` ``pip_hot`` workload (seed 201,
+    ``--seconds 10``, 2 complete pairs) from 7.21k/6.75k/7.34k to
+    5.24k/5.75k pages/s and raised its peak RSS by about 14%.
     """
-    lat = F.col(lat_col)
-    lon = F.col(lon_col)
+    lat = F.col("lat")
+    lon = F.col("lon")
     # NARROW polygon side through the tile shuffle: (polygon_id, bbox, tile).
     # Edge arrays never ride the tile-cover explode or the equi-join exchange —
     # shipping them per (tile × candidate point) materializes O(candidates ×
@@ -552,7 +561,7 @@ def point_in_polygon_join(
     if adaptive_cover:
         lvl, keys = adaptive_cover_cols(
             F.col("min_lat"), F.col("max_lat"), F.col("min_lon"), F.col("max_lon"),
-            z=zoom, max_side=max_cover_side,
+            z=zoom,
         )
         with_lvl = poly_base.withColumn("_lvl", lvl)
         poly_narrow = with_lvl.withColumn("tile", F.explode(keys)).drop("_lvl")
@@ -601,8 +610,7 @@ def point_in_polygon_join(
     else:
         join_keys = ["tile"]
 
-    poly_side = F.broadcast(poly_narrow) if broadcast else poly_narrow
-    cand = pts.join(poly_side, join_keys, "inner").filter(
+    cand = pts.join(poly_narrow, join_keys, "inner").filter(
         lat.between(F.col("min_lat"), F.col("max_lat"))
         # wrap-aware: a wrapped bbox (min_lon > max_lon) accepts the two arcs
         # beyond each bound — agrees with the cover's crosser convention
@@ -613,8 +621,7 @@ def point_in_polygon_join(
         "edges",
         *[c for c in polygons.columns if c not in ("id", "edges", "min_lat", "max_lat", "min_lon", "max_lon")],
     )
-    payload_side = F.broadcast(payload) if broadcast else payload
-    hit = cand.join(payload_side, "polygon_id", "inner").filter(
+    hit = cand.join(payload, "polygon_id", "inner").filter(
         geo.pip_crossings_col(lat, lon, F.col("edges"))
     )
     drop = ["tile", "edges", "min_lat", "max_lat", "min_lon", "max_lon"]

@@ -386,6 +386,9 @@ def q_doc_hll_distinct(spark, sf_dir):
 def _sql_hll_distinct() -> str:
     lit = repr(sketches._alpha_m2_scaled(9))
     big = 1 << 52
+    # s1..s32: the RUNNING smear of sketches.hll_registers; each shift ORs
+    # into the previous step's value, so 6 shifts cover all 51 bits below the
+    # MSB (a flat OR of shifts of the original w leaves gaps)
     return f"""
 with vals as (
   select lang,
@@ -395,12 +398,14 @@ with vals as (
 ), parts as (
   select lang, h >> 51 as bucket, h - ((h >> 51) << 51) as w
   from (select lang, ('0x' || substr(md5(v), 1, 15))::bigint as h from vals)
+), s1 as (select lang, bucket, w | (w >> 1) as s from parts
+), s2 as (select lang, bucket, s | (s >> 2) as s from s1
+), s4 as (select lang, bucket, s | (s >> 4) as s from s2
+), s8 as (select lang, bucket, s | (s >> 8) as s from s4
+), s16 as (select lang, bucket, s | (s >> 16) as s from s8
+), s32 as (select lang, bucket, s | (s >> 32) as s from s16
 ), regs as (
-  select lang, bucket, max(52 - bit_count(s)) as reg
-  from (select lang, bucket,
-          (w | (w>>1) | (w>>2) | (w>>4) | (w>>8) | (w>>16) | (w>>32)) as s
-        from parts)
-  group by 1, 2
+  select lang, bucket, max(52 - bit_count(s)) as reg from s32 group by 1, 2
 ), agg as (
   select lang, count(*) as nonempty,
     sum(cast(pow(2.0, 52 - reg) as bigint)) as sum_scaled
@@ -1232,7 +1237,8 @@ def q_doc_minhash_lsh(spark, sf_dir):
     return dedup.minhash_lsh_buckets(_load(spark, sf_dir, "documents"))
 
 
-def _sql_shingles(txt: str, n: int = 5) -> str:
+def _sql_shingles(txt: str) -> str:
+    n = dedup.SHINGLE_N
     norm = f"lower(regexp_replace(trim({txt}), '\\s+', ' ', 'g'))"
     return (
         f"list_transform(generate_series(1, greatest(length({norm}) - {n - 1}, 0)),"
@@ -1240,14 +1246,23 @@ def _sql_shingles(txt: str, n: int = 5) -> str:
     )
 
 
-def _sql_minhash_lsh() -> str:
-    P = dedup.MINHASH_PRIME
-    mh = ",\n  ".join(
-        f"min((h1 + {i + 1} * h2) % {P}) as mh{i}" for i in range(8)
+def _sql_minhash(i: int) -> str:
+    return f"min((h1 + {i + 1} * h2) % {dedup.MINHASH_PRIME}) as mh{i}"
+
+
+def _sql_band_sig(b: int, width: int) -> str:
+    """SQL twin of ``dedup._band_sig``."""
+    cols = " || '_' || ".join(
+        f"mh{(b * dedup.BAND_SIZE + j) % dedup.NUM_HASHES}::varchar" for j in range(width)
     )
+    return f"md5({cols})"
+
+
+def _sql_minhash_lsh() -> str:
+    mh = ",\n  ".join(_sql_minhash(i) for i in range(dedup.NUM_HASHES))
     bands = ", ".join(
-        f"struct_pack(band_idx := {b}, band_sig := md5(mh{2*b}::varchar || '_' || mh{2*b+1}::varchar))"
-        for b in range(4)
+        f"struct_pack(band_idx := {b}, band_sig := {_sql_band_sig(b, dedup.BAND_SIZE)})"
+        for b in range(dedup.N_BANDS)
     )
     return f"""
 with sh as (select doc_id, unnest({_sql_shingles('text')}) as s from documents),
@@ -1315,18 +1330,12 @@ def _sql_membership_ctes(source_table: str = "documents") -> str:
     SQL twin of ``dedup.minhash_band_memberships`` + ``_cap_bucket_df(cap=100,
     sub_col='sub_sig')``. Ends with ``bb(id, band_idx, band_sig, piece)`` and
     ``sh0(id, sh)`` available for the exact-Jaccard verify."""
-    P = dedup.MINHASH_PRIME
-    mh = ",\n  ".join(f"min((h1 + {i + 1} * h2) % {P}) as mh{i}" for i in range(8))
-
-    def sig(b: int, width: int) -> str:
-        cols = " || '_' || ".join(
-            f"mh{(2 * b + j) % 8}::varchar" for j in range(width)
-        )
-        return f"md5({cols})"
-
+    mh = ",\n  ".join(_sql_minhash(i) for i in range(dedup.NUM_HASHES))
+    w = dedup.BAND_SIZE
     bands = ", ".join(
-        f"struct_pack(band_idx := {b}, band_sig := {sig(b, 2)}, sub_sig := {sig(b, 4)})"
-        for b in range(4)
+        f"struct_pack(band_idx := {b}, band_sig := {_sql_band_sig(b, w)},"
+        f" sub_sig := {_sql_band_sig(b, 2 * w)})"
+        for b in range(dedup.N_BANDS)
     )
     return f"""
 sh0 as (
@@ -3821,7 +3830,7 @@ def q_pip_hits_multipolygon(spark, sf_dir):
     # adaptive cover: relation polygons include deliberately continent-scale
     # bboxes (outer+inner rings far apart) whose z13 cover would explode into
     # ~10^5 tiles each; the multi-resolution cover bounds every polygon to
-    # max_cover_side^2 keys
+    # ADAPTIVE_COVER_MAX_SIDE^2 keys
     hits = SJ.point_in_polygon_join(
         pts.select("url", "lat", "lon"), mp, zoom=ZOOM, nsalt=8, salt_id_col="url",
         adaptive_cover=True,

@@ -233,9 +233,6 @@ def novel_pages_stream(
     *,
     probe_sigs: DataFrame | None = None,
     text_col: str = "text",
-    shingle_n: int = 5,
-    num_hashes: int = 8,
-    band_size: int = 2,
     persist_handles: list | None = None,
 ) -> DataFrame:
     """STREAM-STATIC incremental-dedup PREFILTER: keep only pages whose MinHash
@@ -274,24 +271,18 @@ def novel_pages_stream(
     (1) the cached frames pin executor memory for the session — pass a list
     as ``persist_handles`` and unpersist them after the query stops (the
     ingest loop rebuilds the stream per extension cycle; without the handles
-    every rebuild would pin ``nbands`` more frames); (2) the index SNAPSHOT
+    every rebuild would pin ``N_BANDS`` more frames); (2) the index SNAPSHOT
     is frozen at first materialization — rows a concurrent
     ``extend_dedup_index`` adds are not probed until the stream is rebuilt,
     which the ingest loop does anyway after each extension."""
     if (index_memberships is None) == (probe_sigs is None):
         raise ValueError("pass exactly one of index_memberships / probe_sigs")
-    nbands = num_hashes // band_size
-    from openstreetmapio_jl_spark.operators.dedup import minhash_band_sig_cols
+    from openstreetmapio_jl_spark.operators.dedup import N_BANDS, minhash_band_sig_cols
 
-    sigs = minhash_band_sig_cols(
-        F.col(text_col),
-        shingle_n=shingle_n,
-        num_hashes=num_hashes,
-        band_size=band_size,
-    )
+    sigs = minhash_band_sig_cols(F.col(text_col))
     out = pages
     keep = F.lit(True)
-    for b in range(nbands):
+    for b in range(N_BANDS):
         out = out.withColumn(f"_sig{b}", sigs[b])
         if probe_sigs is not None:
             # pure scan + partition-pruned filter: no Aggregate in the
@@ -312,7 +303,7 @@ def novel_pages_stream(
             idx_b, out[f"_sig{b}"] == idx_b[f"_idx_sig{b}"], "left_outer"
         )
         keep = keep & F.col(f"_idx_sig{b}").isNull()
-    drop_cols = [c for b in range(nbands) for c in (f"_sig{b}", f"_idx_sig{b}")]
+    drop_cols = [c for b in range(N_BANDS) for c in (f"_sig{b}", f"_idx_sig{b}")]
     return out.filter(keep).drop(*drop_cols)
 
 
@@ -362,7 +353,13 @@ def reject_seen_urls_stream(
 
     ``bloom_words``: the (word, bits) frame from ``sketches.bloom_build``
     (BATCH — collected here). Rebuild/re-call on the index-compaction
-    cadence, like :func:`write_band_probe_table`."""
+    cadence, like :func:`write_band_probe_table`.
+
+    NULL policy: a page with a NULL url cannot be checked against the filter
+    and is dropped, whatever the filter holds — the same rule the batch gate
+    in ``jobs/corpus_pipeline_job.py`` applies (which also counts them).
+    Duplicate urls are judged row by row, so every copy of a novel url
+    stays."""
     from openstreetmapio_jl_spark.operators.sketches import (
         BLOOM_K_DEFAULT,
         BLOOM_M_DEFAULT,
@@ -373,9 +370,10 @@ def reject_seen_urls_stream(
     m = BLOOM_M_DEFAULT if m is None else m
     k = BLOOM_K_DEFAULT if k is None else k
     _check_bloom_params(m, k)
+    pages = pages.filter(F.col(url_col).isNotNull())
     words = {int(r.word): int(r.bits) for r in bloom_words.collect()}
     if not words:
-        return pages  # empty filter: nothing has been seen, keep everything
+        return pages  # empty filter: nothing has been seen, keep every url
     entries = []
     for w, bits in sorted(words.items()):
         entries.append(F.lit(w))

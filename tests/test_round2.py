@@ -428,7 +428,7 @@ def test_short_docs_have_no_shingles_or_signatures(spark):
         "doc_id", F.size(dedup.char_shingles(F.col("text"), 5)).alias("n")
     ).collect()
     assert {r.doc_id: r.n for r in sh} == {1: 0, 2: 0, 3: 1, 4: 1}
-    buckets = dedup.minhash_lsh_buckets(docs, shingle_n=5)
+    buckets = dedup.minhash_lsh_buckets(docs)
     assert {(r.min_id, r.max_id) for r in buckets.select("min_id", "max_id").collect()} == {(3, 4)}
 
 

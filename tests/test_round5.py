@@ -805,7 +805,7 @@ def test_novel_pages_stream_exposes_persist_handles(spark):
     )
     handles = []
     out = SP.novel_pages_stream(pages, idx_m, persist_handles=handles)
-    assert len(handles) == 4  # num_hashes=8 / band_size=2
+    assert len(handles) == 4  # N_BANDS
     out.count()
     for h in handles:
         assert h.storageLevel.useMemory  # actually persisted
@@ -813,30 +813,42 @@ def test_novel_pages_stream_exposes_persist_handles(spark):
     assert not handles[0].storageLevel.useMemory
 
 
-def test_minhash_rebalance_override(spark, tmp_path):
-    """rebalance=True/False overrides the inputFiles under-partition probe —
-    the escape hatch for its two blind spots (coalesced upstream: files
-    plentiful but runtime partitions few; single large splittable file:
-    1 file but many maxPartitionBytes splits)."""
-    p = str(tmp_path / "docs")
-    spark.createDataFrame(
+def test_minhash_rebalance_probe(spark, tmp_path):
+    """A 1-file parquet input (fewer files than cores) still plans the id
+    rebalance before shingling; an in-memory frame (no input files) does not.
+    The rebalance is a pure plan transform: both give the same buckets."""
+    rows = spark.createDataFrame(
         [(i, f"document number {i} with some repeated shingle text body") for i in range(50)],
         "doc_id long, text string",
-    ).coalesce(1).write.parquet(p)
-    docs = spark.read.parquet(p)  # 1 file < defaultParallelism => probe says rebalance
+    )
+    p = str(tmp_path / "docs")
+    rows.coalesce(1).write.parquet(p)
 
     def plan(df):
         return df._jdf.queryExecution().optimizedPlan().toString()
 
-    auto = dedup.minhash_lsh_buckets(docs, shingle_n=5)
-    forced_off = dedup.minhash_lsh_buckets(docs, shingle_n=5, rebalance=False)
-    assert "RepartitionByExpression" in plan(auto)
-    assert "RepartitionByExpression" not in plan(forced_off)
-    # override is a pure plan transform: results identical
-    key = lambda df: sorted(
-        (r.band_idx, r.band_sig, r.n_docs) for r in df.collect()
+    from_file = dedup.minhash_lsh_buckets(spark.read.parquet(p))
+    in_memory = dedup.minhash_lsh_buckets(rows)
+    assert "RepartitionByExpression" in plan(from_file)
+    assert "RepartitionByExpression" not in plan(in_memory)
+    key = lambda df: sorted(map(tuple, df.collect()))
+    assert key(from_file) == key(in_memory)
+
+
+def test_url_bloom_gate_null_and_duplicate_urls(spark):
+    """corpus_pipeline_job's bloom gate probes DISTINCT urls, so a url on k
+    pages comes back as k rows (not k²), and drops NULL urls by an explicit
+    filter."""
+    from openstreetmapio_jl_spark.operators.sketches import BLOOM_M_DEFAULT, bloom_build
+
+    job = _load_job_module()
+    pages = spark.createDataFrame(
+        [("seen", "a"), ("new", "b"), ("new", "c"), (None, "d")],
+        "url string, text string",
     )
-    assert key(auto) == key(forced_off)
+    bloom = bloom_build(spark.createDataFrame([("seen",)], "url string"), "url")
+    kept = job._url_bloom_gate(pages, bloom, m=BLOOM_M_DEFAULT)
+    assert sorted((r.url, r.text) for r in kept.collect()) == [("new", "b"), ("new", "c")]
 
 
 def test_multi_mention_oracle_immune_to_duplicate_identical_mentions(spark, tmp_path):

@@ -66,6 +66,37 @@ def test_nulls_are_skipped(spark):
     assert with_nulls == without
 
 
+def test_hll_oracle_matches_engine_above_linear_counting(spark, tmp_path):
+    """Above 2.5·m the estimate reads the register VALUES, not just the
+    empty-register count, so the DuckDB oracle must smear exactly as the
+    engine does. 20k and 30k distinct words per language, well past the
+    1280 linear-counting threshold."""
+    import duckdb
+
+    from openstreetmapio_jl_spark.plans import entry_queries as EQ
+
+    docs = spark.range(0, 50_000).select(
+        F.when(F.col("id") < 20_000, "en").otherwise("de").alias("lang"),
+        F.concat(F.lit("w"), F.col("id"), F.lit("x")).alias("word"),
+        (F.col("id") % 500).alias("doc"),
+    ).groupBy("lang", "doc").agg(
+        F.concat_ws(" ", F.collect_list("word")).alias("text")
+    )
+    docs.write.parquet(str(tmp_path / "documents.parquet"))
+    engine = {
+        r.lang: r.est_distinct
+        for r in EQ.q_doc_hll_distinct(spark, str(tmp_path)).collect()
+    }
+    con = duckdb.connect()
+    con.execute(
+        "create view documents as select * from "
+        f"read_parquet('{tmp_path}/documents.parquet/*.parquet')"
+    )
+    oracle = dict(con.execute(EQ._sql_hll_distinct()).fetchall())
+    assert min(float(v) for v in engine.values()) > 1280  # raw-estimate branch
+    assert engine == oracle
+
+
 def test_p_out_of_range_raises(spark):
     with pytest.raises(ValueError, match="p must be"):
         sketches.hll_registers(_vals(spark, 10), "v", p=2)
@@ -306,6 +337,23 @@ def test_bloom_reject_stream_empty_filter_keeps_all(spark, tmp_path):
         checkpoint_dir=str(tmp_path / "ckpt2"),
     )
     assert spark.table("bloom_kept_empty_t5").count() == 10
+
+
+def test_bloom_reject_stream_null_and_duplicate_urls(spark):
+    """The streaming rejector's NULL policy is an explicit filter: a NULL
+    url drops whether or not the filter is empty; a duplicated novel url
+    keeps every copy (the verdict is per row)."""
+    from openstreetmapio_jl_spark.streaming import pipelines as SP
+
+    pages = spark.createDataFrame(
+        [("seen", "a"), ("new", "b"), ("new", "c"), (None, "d")],
+        "url string, text string",
+    )
+    sk = bloom_build(spark.createDataFrame([("seen",)], "u string"), "u")
+    empty = bloom_build(_ids(spark, []), "v")
+    for bloom, want in ((sk, ["b", "c"]), (empty, ["a", "b", "c"])):
+        kept = SP.reject_seen_urls_stream(pages, bloom)
+        assert sorted(r.text for r in kept.collect()) == want
 
 
 # ---------------------------------------------------------------------------
