@@ -70,7 +70,7 @@ def main() -> None:
 
     lens = pages.select(F.length("text").cast("long").alias("n_chars"))
     quantiles = {
-        f"p{int(float(r.q) * 100)}": int(r.est)
+        f"p{int(r.q * 100)}": int(r.est)
         for r in hdr_quantile_sketch(
             lens, "n_chars", (0.5, 0.9, 0.99)
         ).collect()
@@ -84,7 +84,7 @@ def main() -> None:
             )
         ).alias("w")
     )
-    est_words = float(hll_distinct(words, "w").collect()[0][0])
+    est_words = hll_distinct(words, "w").collect()[0][0]
 
     pts = geocode.extract_geocodes(pages)
     raster = pts.select(
@@ -120,7 +120,7 @@ def main() -> None:
             {
                 "tile": r.tile,
                 "n_pages": r.n,
-                "gi_z": float(r.gi_z),
+                "gi_z": r.gi_z,
             }
             for r in hot
         ],

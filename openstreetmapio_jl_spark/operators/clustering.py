@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from openstreetmapio_jl_spark.functions.exact import exact_double
 from openstreetmapio_jl_spark.operators.graph import connected_components
 
 GRID_OFF = 1 << 21  # shifts floor indexes non-negative (|ix| ≤ 180/eps)
@@ -233,16 +234,12 @@ def grid_clusters(
             "cluster_id",
             F.col("n_cells").cast("int").alias("n_cells"),
             F.col("n_points").cast("long").alias("n_points"),
-            F.round(
+            exact_double(
                 F.col("slat7").cast("double") / 1e7 / F.col("n_points"), 6
-            )
-            .cast("decimal(18,6)")
-            .alias("avg_lat"),
-            F.round(
+            ).alias("avg_lat"),
+            exact_double(
                 F.col("slon7").cast("double") / 1e7 / F.col("n_points"), 6
-            )
-            .cast("decimal(18,6)")
-            .alias("avg_lon"),
+            ).alias("avg_lon"),
         )
     )
 

@@ -51,6 +51,8 @@ import re
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from openstreetmapio_jl_spark.functions.exact import exact_decimal, exact_double
+
 
 def ir_tokens(col: Column) -> Column:
     """ARRAY<STRING> of lowercase alphanumeric tokens — the IR tokenizer
@@ -143,16 +145,19 @@ def ranked_terms(
     running the same formula sorts bit-identical keys (the registry/oracle
     framing — equal (tf, df, dl) inputs give equal doubles per engine, and
     rounding collapses cross-engine ulp noise before it can reorder
-    near-ties); with ``round_dp=None`` the raw double ranks and is returned
-    (the library default)."""
+    near-ties); the returned score is that decimal as a double
+    (``functions/exact.py``). With ``round_dp=None`` the raw double ranks
+    and is returned (the library default)."""
     if scoring not in ("tfidf", "bm25"):
         raise ValueError(f"unknown scoring {scoring!r}")
     tf, totals = term_stats(docs, id_col=id_col, text_col=text_col)
     df_ = tf.groupBy("term").agg(F.count("*").alias("df"))
     scored = tf.join(df_, "term").crossJoin(F.broadcast(totals))
     score = _score_expr(scoring, k1, b)
+    out = F.col("score")
     if round_dp is not None:
-        score = F.round(score, round_dp).cast(f"decimal(18,{round_dp})")
+        score = exact_decimal(score, round_dp)
+        out = exact_double(out, round_dp)
     w = Window.partitionBy("id").orderBy(
         F.desc("score"), F.asc("term")
     )
@@ -160,7 +165,7 @@ def ranked_terms(
         scored.select("id", "term", score.alias("score"))
         .withColumn("pos", F.row_number().over(w).cast("int"))
         .filter(F.col("pos") <= top_k)
-        .select("id", "pos", "term", "score")
+        .select("id", "pos", "term", out.alias("score"))
     )
 
 
@@ -185,11 +190,14 @@ def _bm25_rank(
     TERM's score is rounded and cast to DECIMAL before the sum — decimal
     addition is exact and order-independent, so the per-doc total (and hence
     the ranking) is bit-identical regardless of row order or engine; a raw
-    double sum would depend on addition order."""
+    double sum would depend on addition order. The returned score is that
+    exact total as a double."""
     scored = hits.join(F.broadcast(df_), "term").crossJoin(F.broadcast(totals))
     score = _score_expr("bm25", k1, b)
+    out = F.col("score")
     if round_dp is not None:
-        score = F.round(score, round_dp).cast(f"decimal(18,{round_dp})")
+        score = exact_decimal(score, round_dp)
+        out = exact_double(out, round_dp)
     per_doc = scored.groupBy("id").agg(
         F.sum(score).alias("score"),
         F.count("*").alias("n_terms"),
@@ -203,7 +211,7 @@ def _bm25_rank(
     return top.select(
         F.row_number().over(w).cast("int").alias("rank"),
         "id",
-        "score",
+        out.alias("score"),
         F.col("n_terms").cast("int").alias("n_terms"),
     )
 

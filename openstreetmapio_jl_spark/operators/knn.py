@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from openstreetmapio_jl_spark.functions import geo
 from openstreetmapio_jl_spark.functions.cells import tile_keys_col, xyz_cols, xyz_tile_key_col
+from openstreetmapio_jl_spark.functions.exact import exact_double
 
 EQUATOR_M = 40_075_016.686
 
@@ -167,6 +168,7 @@ def knn_join(
 
 
 IDW_W_SCALE = 1e12  # weight scaling before the per-term DECIMAL rounding
+IDW_DP = 6  # decimals of each weight term and of the estimate
 
 
 def idw_interpolate(
@@ -177,7 +179,6 @@ def idw_interpolate(
     k: int = 3,
     power: int = 2,
     eps_m: float = 1.0,
-    round_dp: int = 6,
     zoom: int = 12,
     query_id: str = "query_id",
     corpus_id: str = "id",
@@ -242,16 +243,15 @@ def idw_interpolate(
     for _ in range(power - 1):
         denom = denom * d
     w = F.lit(IDW_W_SCALE) / denom
-    dec = f"decimal(38,{round_dp})"
+    # 38-digit sum terms: an S-scaled weight at 6 dp can exceed 18 digits
+    dec = f"decimal(38,{IDW_DP})"
     joined = nn.join(vals, "neighbor_id").select(
         query_id,
-        F.round(w, round_dp).cast(dec).alias("_w"),
-        F.round(w * F.col("_v"), round_dp).cast(dec).alias("_wv"),
+        F.round(w, IDW_DP).cast(dec).alias("_w"),
+        F.round(w * F.col("_v"), IDW_DP).cast(dec).alias("_wv"),
     )
-    est = F.round(
-        F.sum("_wv").cast("double") / F.sum("_w").cast("double"), round_dp
-    )
+    est = F.sum("_wv").cast("double") / F.sum("_w").cast("double")
     return joined.groupBy(query_id).agg(
         F.count("*").cast("int").alias("n_neighbors"),
-        est.cast(f"decimal(18,{round_dp})").alias("est"),
+        exact_double(est, IDW_DP).alias("est"),
     )

@@ -35,7 +35,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from openstreetmapio_jl_spark.functions.exact import exact_double
+
 HLL_P_DEFAULT = 9  # 512 registers → relative standard error ≈ 1.04/√512 ≈ 4.6%
+HLL_EST_DP = 2  # decimals of the emitted estimate (the oracle rounds the same)
 
 
 def _alpha_m2_scaled(p: int) -> float:
@@ -103,12 +106,12 @@ def hll_estimate(
     group_cols: tuple[str, ...] = (),
     *,
     p: int = HLL_P_DEFAULT,
-    round_dp: int = 2,
 ) -> DataFrame:
     """→ ``(*group_cols, est_distinct)``: the HLL estimate with the standard
     small-range linear-counting correction (E ≤ 2.5m with empty registers →
-    m·ln(m/V)). All register-sum arithmetic is exact BIGINT; see module
-    docstring for why the result is bit-identical cross-engine."""
+    m·ln(m/V)), a double rounded to ``HLL_EST_DP`` decimals. All
+    register-sum arithmetic is exact BIGINT; see module docstring for why
+    the result is bit-identical cross-engine."""
     m = 1 << p
     scale = 61 - p  # max rho = (60-p)+1 → max exponent scale-0 ≤ 2^(61-p)
     per_term = F.pow(F.lit(2.0), F.lit(scale) - F.col("reg")).cast("long")
@@ -124,8 +127,7 @@ def hll_estimate(
         (e_raw <= F.lit(2.5 * m)) & (v > 0),
         F.lit(float(m)) * F.log(F.lit(float(m)) / v.cast("double")),
     ).otherwise(e_raw)
-    out = F.round(est, round_dp).cast(f"decimal(18,{round_dp})")
-    return agg.select(*group_cols, out.alias("est_distinct"))
+    return agg.select(*group_cols, exact_double(est, HLL_EST_DP).alias("est_distinct"))
 
 
 def hll_distinct(
@@ -134,11 +136,10 @@ def hll_distinct(
     group_cols: tuple[str, ...] = (),
     *,
     p: int = HLL_P_DEFAULT,
-    round_dp: int = 2,
 ) -> DataFrame:
     """One-shot convenience: registers + estimate."""
     regs = hll_registers(df, value_col, group_cols, p=p)
-    return hll_estimate(regs, group_cols, p=p, round_dp=round_dp)
+    return hll_estimate(regs, group_cols, p=p)
 
 
 # ===========================================================================

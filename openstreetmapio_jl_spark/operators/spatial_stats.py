@@ -18,7 +18,7 @@ integers, so the global moments Σx and Σx² and every neighborhood sum are
 EXACT BIGINT aggregates — order-independent. The only float math is a fixed
 per-row expression tree over those exact integers (mean, variance, the Gi*
 ratio), identical IEEE ops in identical order in both engines, rounded to
-DECIMAL at the very end.
+6 decimals at the very end and emitted as a double (``functions/exact.py``).
 
 Statistical conventions, pinned: the universe is the OBSERVED tiles (empty
 tiles are not zero-valued observations — web-page geotags are sparse on the
@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from openstreetmapio_jl_spark.functions.cells import tile_key_offset
+from openstreetmapio_jl_spark.functions.exact import exact_double
 
 # the 3x3 neighborhood INCLUDING self, as XYZ-key deltas
 GI_DELTAS = [tile_key_offset(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
@@ -49,8 +50,8 @@ GI_DELTAS = [tile_key_offset(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
 def gi_star(tile_counts: DataFrame, *, key_col: str = "tile", x_col: str = "n") -> DataFrame:
     """→ ``(tile, n, w, neigh_sum, gi_z)``: per observed tile, its count, the
     observed 3×3 neighborhood size ``w`` (incl. self), the exact neighborhood
-    sum, and the Gi* z-score rounded to DECIMAL(18,6) (NULL where the
-    statistic degenerates). Input: one row per observed tile."""
+    sum, and the Gi* z-score as a double rounded to 6 decimals (NULL where
+    the statistic degenerates). Input: one row per observed tile."""
     t = tile_counts.select(
         F.col(key_col).cast("long").alias("tile"),
         F.col(x_col).cast("long").alias("n"),
@@ -90,13 +91,14 @@ def gi_star(tile_counts: DataFrame, *, key_col: str = "tile", x_col: str = "n") 
             # DISAGREE on NaN comparisons (DuckDB sorts NaN above all
             # values, Spark's NaN > 0 is false) — comparing before the sqrt
             # keeps both sides on ordinary ordered doubles
-            F.when(
-                (F.col("n_tiles") > 1)
-                & (s2 > 0.0)
-                & ((nt * w - w * w) > 0.0),
-                F.round(z, 6),
-            )
-            .cast("decimal(18,6)")
-            .alias("gi_z"),
+            exact_double(
+                F.when(
+                    (F.col("n_tiles") > 1)
+                    & (s2 > 0.0)
+                    & ((nt * w - w * w) > 0.0),
+                    z,
+                ),
+                6,
+            ).alias("gi_z"),
         )
     )

@@ -3,8 +3,11 @@
 
 Conventions that make the differential check robust:
 - every computed column is ALIASED IDENTICALLY in the Spark plan and the SQL;
-- money/metric aggregates go through DECIMAL(18,4/6) before summing (exact
-  arithmetic → bit-identical across engines), then cast to double;
+- one output-type rule (``functions/exact.py``): metrics are rounded to
+  DECIMAL(18,s) before they are summed or ranked (exact arithmetic →
+  bit-identical across engines), and every final column is DOUBLE or BIGINT,
+  never DECIMAL and never DuckDB's HUGEINT (``exact_double`` /
+  ``sql_exact_double`` / ``sql_exact_bigint``);
 - hashes are md5-based (portable), never engine-native hash();
 - timestamps in outputs are converted to epoch seconds (timezone-proof);
 - floating results are rounded (6 dp) and every top-k has a total tie-break.
@@ -24,6 +27,13 @@ from pyspark.sql import functions as F
 from openstreetmapio_jl_spark.fixtures import generator as G
 from openstreetmapio_jl_spark.functions import cells, geo
 from openstreetmapio_jl_spark.functions import text as textfn
+from openstreetmapio_jl_spark.functions.exact import (
+    exact_decimal,
+    exact_double,
+    sql_exact_bigint,
+    sql_exact_decimal,
+    sql_exact_double,
+)
 from openstreetmapio_jl_spark.operators import (
     clustering,
     dedup,
@@ -137,9 +147,7 @@ def _ofx(name: str) -> str:
     return f"{FIXTURE_ROOT}/{ORACLE_SF_NAME}/{name}"
 
 
-_DEC = "decimal(18,4)"
-_DEC2 = "decimal(18,2)"
-_DEC6 = "decimal(18,6)"
+_DEC = "decimal(18,4)"  # exact sum terms of the money columns
 
 
 # ===========================================================================
@@ -158,18 +166,18 @@ def q_agg_pricing_summary(spark, sf_dir):
             F.sum((d("l_extendedprice") * (F.lit(1).cast(_DEC) - d("l_discount"))).cast(_DEC))
             .cast("double")
             .alias("sum_disc_price"),
-            F.avg(d("l_quantity")).cast("double").alias("avg_qty"),
+            exact_double(F.avg(d("l_quantity")), 6).alias("avg_qty"),
             F.count("*").alias("n_rows"),
         )
     )
 
 
-SQL_AGG_PRICING = """
+SQL_AGG_PRICING = f"""
 select l_returnflag, l_linestatus,
   cast(sum(cast(l_quantity as decimal(18,4))) as double) as sum_qty,
   cast(sum(cast(l_extendedprice as decimal(18,4))) as double) as sum_base_price,
   cast(sum(cast(cast(l_extendedprice as decimal(18,4)) * (cast(1 as decimal(18,4)) - cast(l_discount as decimal(18,4))) as decimal(18,4))) as double) as sum_disc_price,
-  cast(avg(cast(l_quantity as decimal(18,4))) as double) as avg_qty,
+  {sql_exact_double("avg(cast(l_quantity as decimal(18,4)))", 6)} as avg_qty,
   count(*) as n_rows
 from lineitem group by l_returnflag, l_linestatus
 """
@@ -214,7 +222,8 @@ def q_window_top_orders(spark, sf_dir):
 
 SQL_WINDOW_TOP = """
 select o_custkey, o_orderkey, cast(o_totalprice as double) as totalprice,
-  row_number() over (partition by o_custkey order by o_totalprice desc, o_orderkey asc) as rn
+  cast(row_number() over (partition by o_custkey order by o_totalprice desc, o_orderkey asc)
+       as int) as rn
 from orders
 qualify rn <= 3
 """
@@ -348,19 +357,20 @@ _SQL_BM25 = (
 def _sql_ranked_terms(scoring: str) -> str:
     """DuckDB mirror of ir.ranked_terms: same tokenizer regex, same (tf, df,
     N, dl, avgdl) aggregates, same scoring arithmetic in the same operation
-    order, same round(6)→DECIMAL(18,6) before the ranking window."""
+    order, same round(6)→DECIMAL(18,6) ranking key, emitted as a double."""
     if scoring == "tfidf":
         score = "tf * (ln((n_docs + 1.0) / (df + 1.0)) + 1.0)"
     else:
         score = _SQL_BM25
     return f"""{_SQL_TERM_STATS}, scored as (
   select id, term,
-    cast(round({score}, 6) as decimal(18,6)) as score
+    {sql_exact_decimal(score, 6)} as score
   from tf
   join (select term, count(*) as df from tf group by term) using (term)
   cross join totals
 )
-select id as doc_id, cast(pos as int) as pos, term, score
+select id as doc_id, cast(pos as int) as pos, term,
+       {sql_exact_double("score", 6)} as score
 from (select id, term, score,
         row_number() over (partition by id
                            order by score desc, term asc) as pos
@@ -384,6 +394,7 @@ def q_doc_hll_distinct(spark, sf_dir):
 
 
 def _sql_hll_distinct() -> str:
+    est = "case when e <= 1280.0 and v > 0 then 512.0 * ln(512.0 / v) else e end"
     lit = repr(sketches._alpha_m2_scaled(9))
     big = 1 << 52
     # s1..s32: the RUNNING smear of sketches.hll_registers; each shift ORs
@@ -411,10 +422,7 @@ with vals as (
     sum(cast(pow(2.0, 52 - reg) as bigint)) as sum_scaled
   from regs group by 1
 )
-select lang,
-  cast(round(case when e <= 1280.0 and v > 0
-                  then 512.0 * ln(512.0 / v) else e end, 2)
-       as decimal(18,2)) as est_distinct
+select lang, {sql_exact_double(est, sketches.HLL_EST_DP)} as est_distinct
 from (select lang, 512 - nonempty as v,
         {lit} / cast(sum_scaled + (512 - nonempty) * {big}::bigint as double) as e
       from agg)
@@ -542,6 +550,7 @@ def q_doc_pii_scrub(spark, sf_dir):
 
 def _sql_doc_pii_scrub() -> str:
     email, phone = textfn.EMAIL_RE, textfn.PHONE_RE
+    digest = "sum(('0x' || substr(md5(s), 1, 8))::bigint)"
     return f"""
 with aug as (
   select lang, text
@@ -566,7 +575,7 @@ select lang,
   cast(sum(np) as bigint) as n_phones,
   cast(sum(case when contains(s, '@') then 1 else 0 end) as bigint)
     as n_leftover_at,
-  sum(('0x' || substr(md5(s), 1, 8))::bigint) as scrub_digest
+  {sql_exact_bigint(digest)} as scrub_digest
 from scrubbed group by 1
 """
 
@@ -611,6 +620,10 @@ def q_doc_train_chunks(spark, sf_dir):
 def _sql_doc_train_chunks() -> str:
     n, o = 64, 8
     stride = n - o
+    digest = (
+        "sum(('0x' || substr(md5(cast(id as varchar) || '|'"
+        " || cast(chunk_idx as varchar) || '|' || chunk_text), 1, 8))::bigint)"
+    )
     return f"""
 with toks as (
   select doc_id as id, lang,
@@ -633,9 +646,7 @@ chunks as (
 select lang,
   cast(count(*) as bigint) as n_chunks,
   cast(sum(chunk_tokens) as bigint) as total_tokens,
-  sum(('0x' || substr(md5(cast(id as varchar) || '|'
-        || cast(chunk_idx as varchar) || '|' || chunk_text), 1, 8))::bigint)
-    as chunk_digest
+  {sql_exact_bigint(digest)} as chunk_digest
 from chunks
 where chunk_tokens > 0
 group by 1
@@ -655,12 +666,7 @@ def q_doc_search_bm25(spark, sf_dir):
     100-TB path, result-equality pinned by test."""
     d = _load(spark, sf_dir, "documents")
     out = ir.search_bm25(d, SEARCH_QUERY, top_n=10, round_dp=6)
-    return out.select(
-        "rank",
-        F.col("id").alias("doc_id"),
-        F.col("score").cast(_DEC6).alias("score"),
-        "n_terms",
-    )
+    return out.select("rank", F.col("id").alias("doc_id"), "score", "n_terms")
 
 
 def _sql_search_bm25() -> str:
@@ -668,13 +674,13 @@ def _sql_search_bm25() -> str:
     return f"""{_SQL_TERM_STATS}, hits as (
   select * from tf where term in ({terms})
 ), scored as (
-  select id, cast(round({_SQL_BM25}, 6) as decimal(18,6)) as score
+  select id, {sql_exact_decimal(_SQL_BM25, 6)} as score
   from hits
   join (select term, count(*) as df from hits group by term) using (term)
   cross join totals
 )
 select cast(rank as int) as rank, id as doc_id,
-       cast(score as decimal(18,6)) as score, cast(n_terms as int) as n_terms
+       {sql_exact_double("score", 6)} as score, cast(n_terms as int) as n_terms
 from (select id, sum(score) as score, count(*) as n_terms,
         row_number() over (order by sum(score) desc, id asc) as rank
       from scored group by id)
@@ -697,7 +703,7 @@ def q_doc_len_hdr_quantiles(spark, sf_dir):
     )
     return out.select(
         "lang",
-        F.col("q").cast("decimal(4,2)").alias("q"),
+        exact_double("q", 2).alias("q"),
         F.col("est").cast("long").alias("est"),
     )
 
@@ -729,7 +735,7 @@ hits as (
   select lang, q, bucket from cum cross join qq
   where cum >= cast(ceil(q * cast(total as double)) as bigint)
 )
-select lang, cast(q as decimal(4,2)) as q,
+select lang, {sql_exact_double("q", 2)} as q,
   min(case when bucket < {b} then bucket
        else ({b} + bucket % {b}) * cast(pow(2.0, bucket // {b} - 1) as bigint)
             + (cast(pow(2.0, bucket // {b} - 1) as bigint) - 1) // 2
@@ -766,6 +772,7 @@ def _sql_doc_lang_rebalance() -> str:
     vals = ", ".join(
         f"('{k}', {v!r})" for k, v in sorted(REBALANCE_TARGETS.items())
     )
+    digest = "sum(('0x' || substr(md5(cast(doc_id as varchar)), 1, 8))::bigint)"
     return f"""
 with t(lang, target) as (values {vals}),
 counts as (
@@ -788,7 +795,7 @@ ranked as (
   from documents d join plan p using (lang)
 )
 select lang, count(*) as n_kept,
-  sum(('0x' || substr(md5(cast(doc_id as varchar)), 1, 8))::bigint) as sel_digest
+  {sql_exact_bigint(digest)} as sel_digest
 from ranked where rk <= n_keep
 group by 1
 """
@@ -817,17 +824,19 @@ def q_events_trailing_2min(spark, sf_dir):
     return e.select(
         "event_id",
         F.count("*").over(w).cast("int").alias("n_2min"),
-        (F.sum(cents).over(w).cast("double") / 100)
-        .cast(_DEC2)
-        .alias("sum_value_2min"),
+        exact_double(F.sum(cents).over(w).cast("double") / 100, 2).alias(
+            "sum_value_2min"
+        ),
     )
 
 
-SQL_EVENTS_TRAILING = """
+_SQL_CENTS_2MIN = (
+    "cast(sum(cast(round(value * 100, 0) as bigint)) over w as double) / 100"
+)
+SQL_EVENTS_TRAILING = f"""
 select event_id,
   cast(count(*) over w as int) as n_2min,
-  cast(cast(sum(cast(round(value * 100, 0) as bigint)) over w as double) / 100
-       as decimal(18,2)) as sum_value_2min
+  {sql_exact_double(_SQL_CENTS_2MIN, 2)} as sum_value_2min
 from events
 where event_type = 'click'
 window w as (
@@ -884,7 +893,7 @@ def q_events_rollup(spark, sf_dir):
         .rollup("event_type", "day")
         .agg(
             F.count("*").alias("n"),
-            F.sum(F.col("value").cast(_DEC6)).cast("double").alias("sum_value"),
+            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
         )
         .select(
             F.coalesce("event_type", F.lit("<all>")).alias("event_type"),
@@ -941,7 +950,7 @@ def q_events_tumbling(spark, sf_dir):
         )
         .agg(
             F.count("*").alias("n"),
-            F.sum(F.col("value").cast(_DEC6)).cast("double").alias("sum_value"),
+            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
         )
         .select(
             F.unix_timestamp(F.col("w.start")).alias("window_start"),
@@ -1174,11 +1183,14 @@ def q_events_asof(spark, sf_dir):
     return out.select(
         "p_id",
         "user_id",
-        F.round("view_value", 2).cast(_DEC2).alias("last_view_value"),
+        exact_double("view_value", 2).alias("last_view_value"),
     )
 
 
-SQL_EVENTS_ASOF = """
+_SQL_ASOF_VALUE = """case
+    when v.v_ts is not null and epoch(p.ts) - epoch(v.v_ts) <= 86400.0
+    then v.view_value end"""
+SQL_EVENTS_ASOF = f"""
 with p as (
   select event_id as p_id, user_id, ts
   from events where event_type = 'purchase'
@@ -1187,10 +1199,7 @@ with p as (
   from events where event_type = 'view'
   qualify row_number() over (partition by user_id, ts order by event_id desc) = 1
 )
-select p.p_id, p.user_id,
-  cast(round(case
-    when v.v_ts is not null and epoch(p.ts) - epoch(v.v_ts) <= 86400.0
-    then v.view_value end, 2) as decimal(18,2)) as last_view_value
+select p.p_id, p.user_id, {sql_exact_double(_SQL_ASOF_VALUE, 2)} as last_view_value
 from p asof left join v on p.user_id = v.user_id and p.ts >= v.v_ts
 """
 
@@ -2013,7 +2022,7 @@ def q_osm_way_lengths(spark, sf_dir):
     lens = SJ.way_lengths_m(hw, b.nodes).filter(F.col("n_pts") >= 2)
     return lens.groupBy("highway").agg(
         F.count("*").alias("n_ways"),
-        F.round(F.sum("length_m"), 2).cast(_DEC2).alias("total_m"),
+        exact_double(F.sum("length_m"), 2).alias("total_m"),
     )
 
 
@@ -2038,7 +2047,7 @@ with hw as (
   from j
 )
 select highway, count(distinct id) as n_ways,
-       cast(round(sum({hav}), 2) as decimal(18,2)) as total_m
+       {sql_exact_double(f"sum({hav})", 2)} as total_m
 from seg where lat2 is not null
 group by highway
 """
@@ -2064,7 +2073,7 @@ def q_osm_polygon_areas(spark, sf_dir):
         .groupBy("cls")
         .agg(
             F.count("*").alias("n_polys"),
-            F.round(F.sum("area_m2") / 1e6, 4).cast(_DEC).alias("total_km2"),
+            exact_double(F.sum("area_m2") / 1e6, 4).alias("total_km2"),
         )
     )
 
@@ -2091,7 +2100,7 @@ with p as (
   from p join sh using (id)
 )
 select w.cls, count(*) as n_polys,
-       cast(round(sum(a.area_m2) / 1e6, 4) as decimal(18,4)) as total_km2
+       {sql_exact_double("sum(a.area_m2) / 1e6", 4)} as total_km2
 from a join w using (id)
 where w.cls is not null
 group by w.cls
@@ -2141,20 +2150,20 @@ def q_osm_simplify_ways(spark, sf_dir):
             "highway",
             "n_pts",
             "n_kept",
-            F.round(geo.polyline_length_m_col(F.col("lats"), F.col("lons")), 6)
-            .cast(_DEC6)
-            .alias("orig_m"),
-            F.round(geo.polyline_length_m_col(F.col("s_lats"), F.col("s_lons")), 6)
-            .cast(_DEC6)
-            .alias("simp_m"),
+            exact_decimal(
+                geo.polyline_length_m_col(F.col("lats"), F.col("lons")), 6
+            ).alias("orig_m"),
+            exact_decimal(
+                geo.polyline_length_m_col(F.col("s_lats"), F.col("s_lons")), 6
+            ).alias("simp_m"),
         )
         .groupBy("highway")
         .agg(
             F.count("*").alias("n_ways"),
             F.sum("n_pts").cast("bigint").alias("orig_pts"),
             F.sum("n_kept").cast("bigint").alias("kept_pts"),
-            F.round(F.sum("orig_m"), 2).cast(_DEC2).alias("orig_m"),
-            F.round(F.sum("simp_m"), 2).cast(_DEC2).alias("simp_m"),
+            exact_double(F.sum("orig_m"), 2).alias("orig_m"),
+            exact_double(F.sum("simp_m"), 2).alias("simp_m"),
         )
     )
 
@@ -2210,8 +2219,8 @@ with hw as (
   from k where keep
 )
 select p.highway, p.n_ways, p.orig_pts, p.kept_pts,
-       cast(round(coalesce(lo.m, 0), 2) as decimal(18,2)) as orig_m,
-       cast(round(coalesce(ls.m, 0), 2) as decimal(18,2)) as simp_m
+       {sql_exact_double("coalesce(lo.m, 0)", 2)} as orig_m,
+       {sql_exact_double("coalesce(ls.m, 0)", 2)} as simp_m
 from (
   select highway, count(distinct id) as n_ways,
          count(*) as orig_pts,
@@ -2221,13 +2230,13 @@ from (
 left join (
   -- per-way round(6)->DECIMAL before the class sum, mirroring the Spark plan
   select highway, sum(m6) as m from (
-    select id, highway, cast(round(sum({hav}), 6) as decimal(18,6)) as m6
+    select id, highway, {sql_exact_decimal(f"sum({hav})", 6)} as m6
     from so where lat2 is not null group by id, highway
   ) group by highway
 ) lo using (highway)
 left join (
   select highway, sum(m6) as m from (
-    select id, highway, cast(round(sum({hav}), 6) as decimal(18,6)) as m6
+    select id, highway, {sql_exact_decimal(f"sum({hav})", 6)} as m6
     from ss where lat2 is not null group by id, highway
   ) group by highway
 ) ls using (highway)
@@ -2291,19 +2300,19 @@ def q_osm_simplify_rings(spark, sf_dir):
         "cls",
         "n_pts",
         "n_kept",
-        F.round(_area_m2(F.col("lats"), F.col("lons")) / 1e6, 6)
-        .cast(_DEC6)
-        .alias("orig_km2"),
-        F.round(_area_m2(F.col("s_lats"), F.col("s_lons")) / 1e6, 6)
-        .cast(_DEC6)
-        .alias("simp_km2"),
+        exact_decimal(_area_m2(F.col("lats"), F.col("lons")) / 1e6, 6).alias(
+            "orig_km2"
+        ),
+        exact_decimal(_area_m2(F.col("s_lats"), F.col("s_lons")) / 1e6, 6).alias(
+            "simp_km2"
+        ),
     )
     return per_ring.groupBy("cls").agg(
         F.count("*").alias("n_rings"),
         F.sum("n_pts").cast("bigint").alias("orig_pts"),
         F.sum("n_kept").cast("bigint").alias("kept_pts"),
-        F.round(F.sum("orig_km2"), 4).cast(_DEC).alias("orig_km2"),
-        F.round(F.sum("simp_km2"), 4).cast(_DEC).alias("simp_km2"),
+        exact_double(F.sum("orig_km2"), 4).alias("orig_km2"),
+        exact_double(F.sum("simp_km2"), 4).alias("simp_km2"),
     )
 
 
@@ -2313,6 +2322,11 @@ def _sql_osm_simplify_rings() -> str:
     tol = tiler.tile_tolerance_m2(_SIMPLIFY_Z, px_tol=1.0, ref_lat=_SIMPLIFY_REF_LAT)
     tol_cross = 2.0 * tol / (
         geo.M2_PER_DEG2 * math.cos(math.radians(_SIMPLIFY_REF_LAT))
+    )
+    km2 = (
+        "abs(sum((lon - min_lon) * (lat2 - min_lat)"
+        " - (lon2 - min_lon) * (lat - min_lat))) / 2"
+        f" * {geo.M2_PER_DEG2!r} * cos(radians((min_lat + max_lat) / 2)) / 1e6"
     )
     return f"""
 with p as (
@@ -2361,21 +2375,11 @@ with p as (
          lead(t.lon) over (partition by t.id order by t.seq) as lon2
   from t join p using (id)
 ), area_s as (
-  select id,
-         cast(round(abs(sum((lon - min_lon) * (lat2 - min_lat)
-                            - (lon2 - min_lon) * (lat - min_lat))) / 2
-           * {geo.M2_PER_DEG2!r}
-           * cos(radians((min_lat + max_lat) / 2)) / 1e6, 6)
-           as decimal(18,6)) as km2
+  select id, {sql_exact_decimal(km2, 6)} as km2
   from seg where lat2 is not null
   group by id, min_lat, max_lat
 ), area_o as (
-  select id,
-         cast(round(abs(sum((lon - min_lon) * (lat2 - min_lat)
-                            - (lon2 - min_lon) * (lat - min_lat))) / 2
-           * {geo.M2_PER_DEG2!r}
-           * cos(radians((min_lat + max_lat) / 2)) / 1e6, 6)
-           as decimal(18,6)) as km2
+  select id, {sql_exact_decimal(km2, 6)} as km2
   from sego where lat2 is not null
   group by id, min_lat, max_lat
 ), cnts as (
@@ -2388,8 +2392,8 @@ with p as (
 select w.cls, count(*) as n_rings,
        cast(sum(c.n_pts) as bigint) as orig_pts,
        cast(sum(c.n_kept) as bigint) as kept_pts,
-       cast(round(sum(ao.km2), 4) as decimal(18,4)) as orig_km2,
-       cast(round(sum(asx.km2), 4) as decimal(18,4)) as simp_km2
+       {sql_exact_double("sum(ao.km2)", 4)} as orig_km2,
+       {sql_exact_double("sum(asx.km2)", 4)} as simp_km2
 from cnts c
 join area_o ao using (id)
 join area_s asx using (id)
@@ -2423,14 +2427,12 @@ def q_osm_tile_road_density(spark, sf_dir):
         clipped.select(
             "x",
             "y",
-            F.round(F.col("seg_m") * F.col("clip_frac"), 6)
-            .cast(_DEC6)
-            .alias("road6"),
+            exact_decimal(F.col("seg_m") * F.col("clip_frac"), 6).alias("road6"),
         )
         .groupBy("x", "y")
         .agg(
             F.count("*").alias("n_segs"),
-            F.round(F.sum("road6"), 2).cast(_DEC2).alias("road_m"),
+            exact_double(F.sum("road6"), 2).alias("road_m"),
         )
         .select(
             F.lit(_SIMPLIFY_Z).cast("int").alias("z"), "x", "y", "n_segs", "road_m"
@@ -2531,13 +2533,13 @@ def _sql_osm_tile_road_density() -> str:
     return f"""
 {_sql_tile_clip_prefix()}, kept as (
   select xi % {nint} as x, y,
-         cast(round(({hav}) * (t1 - t0), 6) as decimal(18,6)) as road6
+         {sql_exact_decimal(f"({hav}) * (t1 - t0)", 6)} as road6
   from t where t1 - t0 > {eps!r}
     and (u2 - u1 != 0 or m2 - m1 != 0)
 )
 select cast({_SIMPLIFY_Z} as int) as z, x, y,
        count(*) as n_segs,
-       cast(round(sum(road6), 2) as decimal(18,2)) as road_m
+       {sql_exact_double("sum(road6)", 2)} as road_m
 from kept group by x, y
 """
 
@@ -2627,10 +2629,7 @@ def q_osm_road_sssp(spark, sf_dir):
     the Spark side iterates to convergence under a fail-loud cap."""
     _hw, edges = _road_graph(spark, sf_dir)
     d = routing.sssp_distances(edges, max_rounds=64)
-    return d.select(
-        F.col("node").alias("ref"),
-        F.round("dist_m", 2).cast(_DEC2).alias("dist_m"),
-    )
+    return d.select(F.col("node").alias("ref"), exact_double("dist_m", 2).alias("dist_m"))
 
 
 def _sql_relax_rounds(rounds: int) -> tuple[str, str]:
@@ -2716,7 +2715,7 @@ def _sql_osm_road_sssp(rounds: int = 24) -> str:
     return f"""{_sql_road_graph_ctes()}, d0 as (
   select min(u) as node, 0.0 as dist from u
 ){relax}
-select node as ref, cast(round(dist, 2) as decimal(18,2)) as dist_m from {prev}
+select node as ref, {sql_exact_double("dist", 2)} as dist_m from {prev}
 """
 
 
@@ -2745,10 +2744,7 @@ def q_osm_network_dist(spark, sf_dir):
     )
     seeds = verts.join(seed_refs, "node", "left_semi")
     d = routing.network_distances(edges, seeds, max_rounds=64)
-    return d.select(
-        F.col("node").alias("ref"),
-        F.round("dist_m", 2).cast(_DEC2).alias("dist_m"),
-    )
+    return d.select(F.col("node").alias("ref"), exact_double("dist_m", 2).alias("dist_m"))
 
 
 def _sql_osm_network_dist(rounds: int = 24) -> str:
@@ -2760,7 +2756,7 @@ def _sql_osm_network_dist(rounds: int = 24) -> str:
     select distinct unnest(refs) from hw where cls = 'residential'
   )
 ){relax}
-select node as ref, cast(round(dist, 2) as decimal(18,2)) as dist_m from {prev}
+select node as ref, {sql_exact_double("dist", 2)} as dist_m from {prev}
 """
 
 
@@ -2783,13 +2779,13 @@ def q_osm_road_pagerank(spark, sf_dir):
     )
     ranked = pr.select(
         F.col("node").alias("ref"),
-        F.round(F.col("rank") * 1000.0, 6).cast(_DEC6).alias("rank_k"),
+        exact_decimal(F.col("rank") * 1000.0, 6).alias("rank_k"),
     )
     w = Window.orderBy(F.desc("rank_k"), F.asc("ref"))
     return (
         ranked.withColumn("pos", F.row_number().over(w).cast("int"))
         .filter(F.col("pos") <= 20)
-        .select("pos", "ref", "rank_k")
+        .select("pos", "ref", exact_double("rank_k", 6).alias("rank_k"))
     )
 
 
@@ -2813,11 +2809,11 @@ p{i} as materialized (
 ), p0 as (
   select node, 1.0 / (select n from nv) as rank from degq
 ){rounds}
-select cast(pos as int) as pos, ref, rank_k from (
+select cast(pos as int) as pos, ref, {sql_exact_double("rank_k", 6)} as rank_k from (
   select row_number() over (order by rank_k desc, node) as pos,
          node as ref, rank_k
   from (
-    select node, cast(round(rank * 1000.0, 6) as decimal(18,6)) as rank_k
+    select node, {sql_exact_decimal("rank * 1000.0", 6)} as rank_k
     from {prev}
   )
 ) where pos <= 20
@@ -3574,10 +3570,8 @@ def _sql_geo_grid_clusters() -> str:
 select cluster as cluster_id,
   cast(count(*) as int) as n_cells,
   cast(sum(n_pts) as bigint) as n_points,
-  cast(round(cast(sum(sum_lat7) as double) / 1e7 / sum(n_pts), 6)
-       as decimal(18,6)) as avg_lat,
-  cast(round(cast(sum(sum_lon7) as double) / 1e7 / sum(n_pts), 6)
-       as decimal(18,6)) as avg_lon
+  {sql_exact_double("cast(sum(sum_lat7) as double) / 1e7 / sum(n_pts)", 6)} as avg_lat,
+  {sql_exact_double("cast(sum(sum_lon7) as double) / 1e7 / sum(n_pts)", 6)} as avg_lon
 from core join lbl using (cell)
 group by 1
 """
@@ -3603,11 +3597,11 @@ def q_geo_cluster_topics(spark, sf_dir):
     tf = toks.groupBy("cluster", "term").agg(F.count("*").alias("tf"))
     totals = tf.agg(F.countDistinct("cluster").alias("n_docs"))
     df_ = tf.groupBy("term").agg(F.count("*").alias("df"))
-    score = F.round(
+    score = exact_decimal(
         F.col("tf")
         * (F.log((F.col("n_docs") + 1.0) / (F.col("df") + 1.0)) + 1.0),
         6,
-    ).cast(_DEC6)
+    )
     w = Window.partitionBy("cluster_id").orderBy(
         F.desc("score"), F.asc("term")
     )
@@ -3619,7 +3613,7 @@ def q_geo_cluster_topics(spark, sf_dir):
         )
         .withColumn("pos", F.row_number().over(w).cast("int"))
         .filter(F.col("pos") <= 3)
-        .select("cluster_id", "pos", "term", "score")
+        .select("cluster_id", "pos", "term", exact_double("score", 6).alias("score"))
     )
 
 
@@ -3639,11 +3633,10 @@ totals as (select count(distinct cluster) as n_docs from tf),
 dfreq as (select term, count(*) as df from tf group by 1),
 scored as (
   select cluster as cluster_id, term,
-    cast(round(tf * (ln((n_docs + 1.0) / (df + 1.0)) + 1.0), 6)
-         as decimal(18,6)) as score
+    {sql_exact_decimal("tf * (ln((n_docs + 1.0) / (df + 1.0)) + 1.0)", 6)} as score
   from tf join dfreq using (term) cross join totals
 )
-select cluster_id, cast(pos as int) as pos, term, score
+select cluster_id, cast(pos as int) as pos, term, {sql_exact_double("score", 6)} as score
 from (
   select *, row_number() over (
     partition by cluster_id order by score desc, term asc) as pos
@@ -3666,11 +3659,11 @@ def q_osm_polygon_centroids(spark, sf_dir):
     )
     return polys.select(
         "id",
-        F.round(clat, 6).cast(_DEC6).alias("centroid_lat"),
-        F.round(clon, 6).cast(_DEC6).alias("centroid_lon"),
-        F.round(geo.polygon_perimeter_m_col(F.col("edges")), 1)
-        .cast(_DEC)
-        .alias("perimeter_m"),
+        exact_double(clat, 6).alias("centroid_lat"),
+        exact_double(clon, 6).alias("centroid_lon"),
+        exact_double(geo.polygon_perimeter_m_col(F.col("edges")), 1).alias(
+            "perimeter_m"
+        ),
     )
 
 
@@ -3697,11 +3690,11 @@ agg as (
   from terms group by id
 )
 select id,
-  cast(round(case when a2 != 0 then min_lat + sy / (3.0 * a2) end, 6)
-       as decimal(18,6)) as centroid_lat,
-  cast(round(case when a2 != 0 then min_lon + sx / (3.0 * a2) end, 6)
-       as decimal(18,6)) as centroid_lon,
-  cast(round(perim, 1) as decimal(18,4)) as perimeter_m
+  {sql_exact_double("case when a2 != 0 then min_lat + sy / (3.0 * a2) end", 6)}
+    as centroid_lat,
+  {sql_exact_double("case when a2 != 0 then min_lon + sx / (3.0 * a2) end", 6)}
+    as centroid_lon,
+  {sql_exact_double("perim", 1)} as perimeter_m
 from agg
 """
 
@@ -3736,7 +3729,8 @@ def q_osm_bbox_overlaps(spark, sf_dir):
 
 def _sql_osm_bbox_overlaps() -> str:
     return f"""
-select b.id as mp_id, count(*) as n_overlaps, sum(a.id) as way_id_digest
+select b.id as mp_id, count(*) as n_overlaps,
+  {sql_exact_bigint("sum(a.id)")} as way_id_digest
 from read_parquet('{_ofx("truth/polygons.parquet")}') a
 join read_parquet('{_ofx("truth/multipolygons.parquet")}') b
   on a.min_lat <= b.max_lat and b.min_lat <= a.max_lat
@@ -3756,7 +3750,7 @@ def q_geo_tile_hotspots(spark, sf_dir):
     Tile counts are integers, so every aggregate feeding the statistic
     (Σx, Σx², each neighborhood sum) is an EXACT BIGINT — the only float
     math is one fixed per-row expression over those integers, identical in
-    both engines, rounded to DECIMAL at the end. Neighborhoods are 9
+    both engines, rounded to 6 dp at the end. Neighborhoods are 9
     constant key deltas on the packed XYZ key (no spatial cross-join);
     degenerate tiles (zero variance / whole-universe neighborhoods) carry
     NULL, guarded on the pre-sqrt quantities so neither engine ever
@@ -3773,6 +3767,10 @@ def _sql_geo_tile_hotspots() -> str:
 
     key = xyz_tile_key_sql("plat", "plon", HOTSPOT_ZOOM)
     deltas = ", ".join(str(d) for d in GI_DELTAS)
+    gi_z = """case when n_tiles > 1 and s2 > 0.0 and (nt * wd - wd * wd) > 0.0
+       then (cast(neigh_sum as double) - xbar * wd)
+            / (sqrt(s2) * sqrt((nt * wd - wd * wd) / (nt - 1.0)))
+       end"""
     return f"""
 with g as (
   select
@@ -3807,11 +3805,8 @@ calc as (
     cast(nb.w as double) as wd
   from t join nb using (tile) cross join tot
 )
-select tile, n, w, neigh_sum,
-  cast(case when n_tiles > 1 and s2 > 0.0 and (nt * wd - wd * wd) > 0.0
-       then round((cast(neigh_sum as double) - xbar * wd)
-                  / (sqrt(s2) * sqrt((nt * wd - wd * wd) / (nt - 1.0))), 6)
-       end as decimal(18,6)) as gi_z
+select tile, n, w, {sql_exact_bigint("neigh_sum")} as neigh_sum,
+  {sql_exact_double(gi_z, 6)} as gi_z
 from calc
 """
 
@@ -3923,6 +3918,7 @@ def q_knn_idw_value(spark, sf_dir):
 
 def _sql_knn_idw() -> str:
     dist = geo.haversine_m_sql("q.plat", "q.plon", "c.lat", "c.lon")
+    dp = knn.IDW_DP
     return f"""
 with g as (
   select url,
@@ -3948,15 +3944,14 @@ nn as (
 ),
 t as (
   select query_id,
-    cast(round(1e12 / ((cast(dm as double) + 1.0) * (cast(dm as double) + 1.0)), 6)
-         as decimal(38,6)) as w,
-    cast(round((1e12 / ((cast(dm as double) + 1.0) * (cast(dm as double) + 1.0))) * v, 6)
-         as decimal(38,6)) as wv
+    cast(round(1e12 / ((cast(dm as double) + 1.0) * (cast(dm as double) + 1.0)), {dp})
+         as decimal(38,{dp})) as w,
+    cast(round((1e12 / ((cast(dm as double) + 1.0) * (cast(dm as double) + 1.0))) * v, {dp})
+         as decimal(38,{dp})) as wv
   from nn
 )
 select query_id, cast(count(*) as int) as n_neighbors,
-  cast(round(cast(sum(wv) as double) / cast(sum(w) as double), 6)
-       as decimal(18,6)) as est
+  {sql_exact_double("cast(sum(wv) as double) / cast(sum(w) as double)", dp)} as est
 from t group by 1
 """
 
@@ -3965,7 +3960,7 @@ def q_osm_page_density(spark, sf_dir):
     """Pages per km² per polygon — the analytic the whole engine exists to
     serve, composed from two in-window-certified pillars: the flagship PIP
     join (hit counts per polygon) ⋈ the geodesic shoelace area (per-polygon
-    km²). Only the join + ratio is new: area rounds → DECIMAL before the
+    km²). Only the join + ratio is new: area rounds to 4 dp before the
     division (the proven cross-engine tolerance of osm_polygon_areas), and
     the density is one double division + round of equal inputs."""
     _b, paths = _osm(spark, sf_dir)
@@ -3981,19 +3976,21 @@ def q_osm_page_density(spark, sf_dir):
     )
     areas = polys.select(
         F.col("id").alias("polygon_id"),
-        F.round(area_m2 / 1e6, 4).cast(_DEC).alias("area_km2"),
+        exact_double(area_m2 / 1e6, 4).alias("area_km2"),
     )
     return per_poly.join(areas, "polygon_id").select(
         "polygon_id",
         "n_hits",
         "area_km2",
-        F.round(F.col("n_hits") / F.col("area_km2").cast("double"), 4)
-        .cast(_DEC)
-        .alias("pages_per_km2"),
+        exact_double(F.col("n_hits") / F.col("area_km2"), 4).alias("pages_per_km2"),
     )
 
 
 def _sql_osm_page_density() -> str:
+    km2 = (
+        f"abs(sh.s2) / 2 * {geo.M2_PER_DEG2!r}"
+        " * cos(radians((p.min_lat + p.max_lat) / 2)) / 1e6"
+    )
     return f"""
 with hits as (select * from ({_sql_pip()})),
 p as (
@@ -4006,15 +4003,11 @@ p as (
   from (select id, min_lat, min_lon, unnest(edges) as ed from p) t
   group by id
 ), a as (
-  select p.id as polygon_id,
-         cast(round(abs(sh.s2) / 2 * {geo.M2_PER_DEG2!r}
-           * cos(radians((p.min_lat + p.max_lat) / 2)) / 1e6, 4)
-           as decimal(18,4)) as area_km2
+  select p.id as polygon_id, {sql_exact_double(km2, 4)} as area_km2
   from p join sh using (id)
 )
 select polygon_id, n_hits, area_km2,
-  cast(round(n_hits / cast(area_km2 as double), 4) as decimal(18,4))
-    as pages_per_km2
+  {sql_exact_double("n_hits / area_km2", 4)} as pages_per_km2
 from hits join a using (polygon_id)
 """
 
@@ -4065,7 +4058,7 @@ def q_osm_street_bearings(spark, sf_dir):
         .groupBy("bin")
         .agg(
             F.count("*").alias("n_segments"),
-            F.round(F.sum("len_m"), 1).cast(_DEC).alias("total_m"),
+            exact_double(F.sum("len_m"), 1).alias("total_m"),
         )
     )
 
@@ -4092,7 +4085,7 @@ seg as (
 )
 select cast(floor((((({brg}) % 180.0) + 180.0) % 180.0) / 10.0) as int) as bin,
   count(*) as n_segments,
-  cast(round(sum({hav}), 1) as decimal(18,4)) as total_m
+  {sql_exact_double(f"sum({hav})", 1)} as total_m
 from seg
 where lat2 is not null and (n_lat != lat2 or n_lon != lon2)
 group by 1

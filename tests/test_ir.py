@@ -88,12 +88,22 @@ def test_empty_and_punctuation_only_docs_produce_no_rows(spark):
     assert score["real"] == pytest.approx(1 * (math.log(4 / 2) + 1))
 
 
-def test_round_dp_gives_decimal_sort_keys(spark):
-    out = ir.ranked_terms(
+def test_round_dp_gives_double_scores_and_id_ordered_ties(spark):
+    # round_dp ranks on the rounded decimal but emits a double
+    # (functions/exact.py); equal rounded scores still rank by id ascending
+    terms = ir.ranked_terms(
         _docs(spark, CORPUS), id_col="doc_id", top_k=1, round_dp=6
     )
-    assert dict(out.dtypes)["score"] == "decimal(18,6)"
-    assert out.count() == 3
+    assert dict(terms.dtypes)["score"] == "double"
+    assert terms.count() == 3
+    hits = ir.search_bm25(
+        _docs(spark, [(i, "same text here") for i in (5, 3, 9)]),
+        "same here",
+        top_n=3,
+        round_dp=6,
+    )
+    assert dict(hits.dtypes)["score"] == "double"
+    assert [r.id for r in hits.orderBy("rank").collect()] == [3, 5, 9]
 
 
 def test_unknown_scoring_raises(spark):
