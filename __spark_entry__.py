@@ -8,12 +8,13 @@ SQL. The driver runs ``entry`` as a smoke check and each ``queries()[name]`` vs
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from openstreetmapio_jl_spark.plans import entry_queries as EQ
 

@@ -10,8 +10,8 @@ Reads the ``nodes/``/``ways/``/``relations/`` parquet directories the decode
 job writes (plus its ``_meta.json`` if present, for the header bbox), and
 writes an id-range-sharded ``.osm.pbf`` (or ``.osm`` XML) directory via the
 executor-side sinks (``sinks/``). Exported output re-ingests through the
-distributed multi-file readers, so decode → query → export → decode is a
-closed loop. A ``--filter`` SQL predicate (applied to every kind that has the
+multi-file readers (for PBF, one driver-built blob index over all shard
+files), so decode → query → export → decode is a closed loop. A ``--filter`` SQL predicate (applied to every kind that has the
 referenced columns) supports extract-style exports, e.g.
 ``--filter "tags['amenity'] IS NOT NULL"`` on nodes.
 

@@ -9,9 +9,8 @@ Semantics match the reference:
   unknown/empty arms rejected (``src/load_pbf.jl:172-185,213-274``).
 
 Spark-first design: :func:`scan_blob_index` is a cheap metadata pass (reads headers,
-seeks past payloads) run once per file — on a cluster, per-file in a parallelized
-mapper; the heavy payload decode happens later inside ``mapInArrow`` tasks that each
-read only their own byte ranges. This is what turns the reference's sequential loop
+seeks past payloads) run once per file on the driver; the heavy payload decode happens
+later inside ``mapInArrow`` tasks that each read only their own byte ranges. This is what turns the reference's sequential loop
 into embarrassing block parallelism (``osmformat.proto:39-44`` guarantees block
 independence).
 """
@@ -109,16 +108,6 @@ def scan_blob_index(path: str) -> list[BlobDescriptor]:
     if not out:
         raise ValueError(f"{path}: no blobs found (not a PBF file?)")
     return out
-
-
-def scan_first_blob(path: str) -> BlobDescriptor:
-    """Frame ONLY the OSMHeader blob (blob 0) — a few hundred bytes of reads.
-
-    The distributed index path needs per-file meta on the driver without paying
-    the full framing scan there; full framing then runs cluster-side
-    (one task per file in ``pbf_source.blob_index_df``)."""
-    with open(path, "rb") as f:
-        return _read_frame(f, path, 0, os.path.getsize(path))
 
 
 def read_blob_payload(path: str, offset: int, size: int) -> bytes:

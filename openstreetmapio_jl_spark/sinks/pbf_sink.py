@@ -1,161 +1,59 @@
 """Distributed sharded OSM PBF sink.
 
-Closes the source↔sink loop: the engine reads PBF three ways (3-scan,
-single-pass union, distributed multi-file index — ``sources/pbf_source.py``)
-but until now could only *write* PBF from driver-side dict lists
-(``pbf/writer.py:write_pbf``, used for fixtures). This sink writes the decoded
-entity DataFrames back out as a directory of shard ``.osm.pbf`` files, one per
-Spark partition, encoded entirely executor-side — no ``collect()``, no driver
-bottleneck. The reference has no write path at all (SURVEY.md §2 Table B
-"Scans/sources": in-memory dicts only), so this is new engine surface; the wire
-format matches what the reference reads
+Closes the source↔sink loop: the engine reads PBF (``sources/pbf_source.py``,
+one driver-built blob index for one file or many) but could otherwise only
+*write* PBF from driver-side dict lists (``pbf/writer.py:write_pbf``, used for
+fixtures). This sink writes the decoded entity DataFrames back out as a
+directory of shard ``.osm.pbf`` files, one per Spark partition, encoded
+entirely executor-side — no ``collect()``, no driver bottleneck. The reference
+has no write path at all (SURVEY.md §2 Table B "Scans/sources": in-memory dicts
+only), so this is new engine surface; the wire format matches what the
+reference reads
 (``/root/reference/generate/proto/{fileformat,osmformat}.proto``).
 
-Scale shape (100 TB): each kind is range-partitioned by ``id`` (OSM files are
-id-sorted per kind by convention; range shards also give each shard a tight
-``[min_id, max_id]`` span for the manifest) and sorted within partitions —
-both stay in Tungsten. The per-partition Arrow→encode→write kernel streams
-batches, so executor memory holds one shard's elements at a time. Shard files
-are written to a temp name and ``os.replace``d into place, so a retried task
-overwrites its own partial output idempotently (the local-FS stand-in for an
-object-store task-commit protocol; on HDFS/S3 you would swap ``_open_out`` for
-a committer-backed stream). The manifest (one row per shard: path, kind, rows,
-bytes, blob count, id span) returns to the driver — shard-count-sized, tiny.
+The sharding, temp-file commit and manifest live in
+:mod:`~openstreetmapio_jl_spark.sinks.shards`; this module supplies the PBF
+header blob and the per-batch ``OSMData`` blob encoding.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import uuid
-from datetime import timezone
-from typing import TYPE_CHECKING, Iterator
-
-import pyarrow as pa
+from typing import TYPE_CHECKING
 
 from openstreetmapio_jl_spark.pbf import blocks, writer
+from openstreetmapio_jl_spark.sinks.shards import ShardFormat, write_bundle, write_sharded
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame
 
-MANIFEST_DDL = (
-    "path string, kind string, rows bigint, bytes bigint, blobs bigint, "
-    "min_id bigint, max_id bigint"
-)
-
-_ENTITY_COLS = {
-    "nodes": ["id", "lat", "lon", "tags", "info"],
-    "ways": ["id", "refs", "tags", "info", "positions"],
-    "relations": ["id", "members", "tags", "info"],
-}
+ELEMENTS_PER_BLOCK = 8000
+DENSE = True
+COMPRESS = True
 
 
-def _epoch_seconds(ts) -> float | None:
-    """Arrow timestamp('us') round-trips to naive-UTC datetime; the encoder
-    (``pbf/writer.py:_encode_info``) wants epoch seconds."""
-    if ts is None:
-        return None
-    return ts.replace(tzinfo=timezone.utc).timestamp()
+def _header(meta: dict) -> bytes:
+    return blocks.frame_blob(
+        "OSMHeader", writer.encode_header_block(meta), compress=COMPRESS
+    )
 
 
-def _row_to_element(row: dict, kind: str) -> dict:
-    el: dict = {"id": row["id"]}
-    tags = row.get("tags")
-    # Arrow map -> list[(k, v)]; preserve NULL-vs-empty (the reference keeps
-    # no-tags as `nothing`, src/load_pbf.jl:558-560 — empty dict encodes the same)
-    el["tags"] = dict(tags) if tags else None
-    info = row.get("info")
-    if info is not None:
-        info = dict(info)
-        info["timestamp"] = _epoch_seconds(info.get("timestamp"))
-        el["info"] = info
-    if kind == "nodes":
-        el["lat"], el["lon"] = row["lat"], row["lon"]
-    elif kind == "ways":
-        el["refs"] = row["refs"]
-        pos = row.get("positions")
-        if pos:
-            el["positions"] = [(p["lat"], p["lon"]) for p in pos]
-    else:
-        el["members"] = row.get("members") or []
-    return el
-
-
-def _shard_kernel(
-    kind: str,
-    out_dir: str,
-    meta: dict,
-    elements_per_block: int,
-    dense: bool,
-    compress: bool,
-):
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        final = os.path.join(out_dir, f"{kind}-{pid:05d}.osm.pbf")
-        tmp = f"{final}.tmp-{uuid.uuid4().hex}"
-        rows = blobs = 0
-        min_id = max_id = None
-        f = None
-        try:
-            for rb in batches:
-                elements = [_row_to_element(r, kind) for r in rb.to_pylist()]
-                if not elements:
-                    continue
-                if f is None:
-                    f = open(tmp, "wb")
-                    f.write(
-                        blocks.frame_blob(
-                            "OSMHeader",
-                            writer.encode_header_block(meta),
-                            compress=compress,
-                        )
-                    )
-                # partitions are id-sorted (sortWithinPartitions), so per-batch
-                # min/max extend the running span monotonically
-                min_id = elements[0]["id"] if min_id is None else min_id
-                max_id = elements[-1]["id"]
-                rows += len(elements)
-                for i in range(0, len(elements), elements_per_block):
-                    chunk = elements[i : i + elements_per_block]
-                    kw = {kind: chunk}
-                    f.write(
-                        blocks.frame_blob(
-                            "OSMData",
-                            writer.encode_primitive_block(
-                                dense=dense, with_info=True, **kw
-                            ),
-                            compress=compress,
-                        )
-                    )
-                    blobs += 1
-            if f is None:  # empty range partition — no file
-                return
-            f.close()
-            f = None
-            size = os.path.getsize(tmp)
-            os.replace(tmp, final)  # idempotent under task retry
-        finally:
-            if f is not None:
-                f.close()
-            if os.path.exists(tmp):
-                os.remove(tmp)
-        yield pa.RecordBatch.from_pylist(
-            [
-                {
-                    "path": final,
-                    "kind": kind,
-                    "rows": rows,
-                    "bytes": size,
-                    "blobs": blobs,
-                    "min_id": min_id,
-                    "max_id": max_id,
-                }
-            ]
+def _encode(elements: list[dict], kind: str) -> tuple[bytes, int]:
+    frames = [
+        blocks.frame_blob(
+            "OSMData",
+            writer.encode_primitive_block(
+                dense=DENSE,
+                with_info=True,
+                **{kind: elements[i : i + ELEMENTS_PER_BLOCK]},
+            ),
+            compress=COMPRESS,
         )
+        for i in range(0, len(elements), ELEMENTS_PER_BLOCK)
+    ]
+    return b"".join(frames), len(frames)
 
-    return kernel
+
+PBF = ShardFormat(ext=".osm.pbf", header=_header, encode=_encode)
 
 
 def write_pbf_sharded(
@@ -164,22 +62,13 @@ def write_pbf_sharded(
     out_dir: str,
     *,
     shards: int | None = None,
-    elements_per_block: int = 8000,
-    dense: bool = True,
-    compress: bool = True,
     meta: dict | None = None,
 ) -> list[dict]:
     """Write one entity kind as ``{out_dir}/{kind}-NNNNN.osm.pbf`` shards.
 
     Returns the manifest rows (one per non-empty shard). ``shards`` defaults to
-    the DataFrame's current partition count.
-    """
-    if kind not in _ENTITY_COLS:
-        raise ValueError(f"kind must be one of {sorted(_ENTITY_COLS)}, got {kind!r}")
-    cols = [c for c in _ENTITY_COLS[kind] if c in df.columns]
-    if "id" not in cols:
-        raise ValueError(f"{kind} DataFrame needs an 'id' column; has {df.columns}")
-    if "info" in cols:
+    the session's default parallelism."""
+    if "info" in df.columns:
         # _epoch_seconds stamps tzinfo=UTC onto the naive datetimes Arrow hands
         # the kernel — only correct when the session zone IS UTC (a non-UTC
         # zone shifts exported info.timestamps falling in DST gaps); fail loud
@@ -187,65 +76,17 @@ def write_pbf_sharded(
         tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
         if tz not in ("UTC", "Etc/UTC", "GMT", "Z", "+00:00"):
             raise ValueError(
-                f"PBF/XML export of info.timestamp requires "
+                f"PBF export of info.timestamp requires "
                 f"spark.sql.session.timeZone=UTC (session has {tz!r})"
             )
-    plan = df.select(*cols)
-    # ALWAYS range-partition by id (see xml_sink: overlap-free shard id-spans).
-    # Default comes from defaultParallelism, NOT df.rdd.getNumPartitions():
-    # touching .rdd under AQE materializes the upstream query stages just to
-    # read a partition count, executing the input pipeline twice.
-    plan = plan.repartitionByRange(
-        shards
-        if shards is not None
-        else max(1, df.sparkSession.sparkContext.defaultParallelism),
-        "id",
-    )
-    plan = plan.sortWithinPartitions("id")
-    os.makedirs(out_dir, exist_ok=True)
-    kernel = _shard_kernel(
-        kind, out_dir, meta or {}, elements_per_block, dense, compress
-    )
-    manifest = plan.mapInArrow(kernel, MANIFEST_DDL).collect()
-    return [r.asDict() for r in manifest]
+    return write_sharded(df, kind, out_dir, PBF, shards=shards, meta=meta)
 
 
-def write_bundle_pbf(
-    bundle,
-    out_dir: str,
-    *,
-    shards: int | None = None,
-    elements_per_block: int = 8000,
-    dense: bool = True,
-    compress: bool = True,
-) -> list[dict]:
+def write_bundle_pbf(bundle, out_dir: str, *, shards: int | None = None) -> list[dict]:
     """Write an :class:`~openstreetmapio_jl_spark.sources.pbf_source.OSMBundle`
     as a sharded PBF directory plus a ``_manifest.json``.
 
-    The output directory reads back through the distributed multi-file index
-    path (``blob_index_df(distribute=True)`` — one framing task per shard), so
-    a written corpus re-ingests without any driver-side serialization.
-    """
-    meta = dict(bundle.meta or {})
-    meta.setdefault("writingprogram", "openstreetmapio_jl_spark sharded sink")
-    manifest: list[dict] = []
-    for kind, df in (
-        ("nodes", bundle.nodes),
-        ("ways", bundle.ways),
-        ("relations", bundle.relations),
-    ):
-        manifest.extend(
-            write_pbf_sharded(
-                df,
-                kind,
-                out_dir,
-                shards=shards,
-                elements_per_block=elements_per_block,
-                dense=dense,
-                compress=compress,
-                meta=meta,
-            )
-        )
-    with open(os.path.join(out_dir, "_manifest.json"), "w") as f:
-        json.dump({"meta_keys": sorted(meta), "shards": manifest}, f, indent=1)
-    return manifest
+    The shard files read back through the same driver-built blob index as a
+    single file (``blob_index_df``: one size-balanced decode task per core),
+    so a written corpus re-ingests without any driver-side serialization."""
+    return write_bundle(bundle, out_dir, write_pbf_sharded, shards=shards)

@@ -4,9 +4,11 @@ Mirror of :mod:`~openstreetmapio_jl_spark.sinks.pbf_sink` for the ``.osm`` XML
 format the reference's ``load_osm`` reads (``/root/reference/src/load_xml.jl``):
 entity DataFrames → ``{kind}-NNNNN.osm`` shard files, each a complete
 standalone OSM XML document (header + ``<bounds>`` + elements), encoded
-executor-side per partition. Same scale shape as the PBF sink: range-sharded +
-sorted by ``id``, streaming batch encode, temp-file + ``os.replace`` task-retry
-idempotence, shard-count-sized manifest back to the driver.
+executor-side per partition. It shares the PBF sink's one shard writer
+(:mod:`~openstreetmapio_jl_spark.sinks.shards`: range-sharded + sorted by
+``id``, streaming batch encode, temp-file + ``os.replace`` task-retry
+idempotence, shard-count-sized manifest back to the driver) and supplies only
+the document header, the per-batch element lines and the closing tag.
 
 Format notes (matching the engine's own XML reader and the reference's):
 
@@ -24,24 +26,14 @@ Format notes (matching the engine's own XML reader and the reference's):
 
 from __future__ import annotations
 
-import os
-import uuid
-from typing import TYPE_CHECKING, Iterator
+import re as _re
+from typing import TYPE_CHECKING
 from xml.sax.saxutils import escape as xml_escape
 
-import pyarrow as pa
-
-from openstreetmapio_jl_spark.sinks.pbf_sink import (
-    MANIFEST_DDL,
-    _ENTITY_COLS,
-    _row_to_element,
-)
+from openstreetmapio_jl_spark.sinks.shards import ShardFormat, write_bundle, write_sharded
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame
-
-
-import re as _re
 
 # C0 controls other than \t\n\r are unrepresentable in XML 1.0 (even as char
 # refs) — strip them; the PBF sink is the lossless path for such payloads
@@ -110,7 +102,7 @@ def _element_lines(el: dict, kind: str) -> list[str]:
     ]
 
 
-def _xml_header(meta: dict) -> str:
+def _header(meta: dict) -> bytes:
     lines = [
         '<?xml version="1.0" encoding="UTF-8"?>',
         '<osm version="0.6" generator="openstreetmapio_jl_spark sharded sink">',
@@ -121,63 +113,15 @@ def _xml_header(meta: dict) -> str:
             f'  <bounds minlat="{bb["bottom_lat"]}" minlon="{bb["left_lon"]}" '
             f'maxlat="{bb["top_lat"]}" maxlon="{bb["right_lon"]}"/>'
         )
-    return "\n".join(lines) + "\n"
+    return ("\n".join(lines) + "\n").encode("utf-8")
 
 
-def _shard_kernel(kind: str, out_dir: str, meta: dict):
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
+def _encode(elements: list[dict], kind: str) -> tuple[bytes, int]:
+    text = "\n".join(line for el in elements for line in _element_lines(el, kind))
+    return (text + "\n").encode("utf-8"), 0
 
-        pid = TaskContext.get().partitionId()
-        final = os.path.join(out_dir, f"{kind}-{pid:05d}.osm")
-        tmp = f"{final}.tmp-{uuid.uuid4().hex}"
-        rows = 0
-        min_id = max_id = None
-        f = None
-        try:
-            for rb in batches:
-                elements = [_row_to_element(r, kind) for r in rb.to_pylist()]
-                if not elements:
-                    continue
-                if f is None:
-                    f = open(tmp, "w", encoding="utf-8")
-                    f.write(_xml_header(meta))
-                min_id = elements[0]["id"] if min_id is None else min_id
-                max_id = elements[-1]["id"]
-                rows += len(elements)
-                f.write(
-                    "\n".join(
-                        line for el in elements for line in _element_lines(el, kind)
-                    )
-                    + "\n"
-                )
-            if f is None:
-                return
-            f.write("</osm>\n")
-            f.close()
-            f = None
-            size = os.path.getsize(tmp)
-            os.replace(tmp, final)
-        finally:
-            if f is not None:
-                f.close()
-            if os.path.exists(tmp):
-                os.remove(tmp)
-        yield pa.RecordBatch.from_pylist(
-            [
-                {
-                    "path": final,
-                    "kind": kind,
-                    "rows": rows,
-                    "bytes": size,
-                    "blobs": 1,  # XML has no blob framing; one document per shard
-                    "min_id": min_id,
-                    "max_id": max_id,
-                }
-            ]
-        )
 
-    return kernel
+XML = ShardFormat(ext=".osm", header=_header, encode=_encode, footer=b"</osm>\n")
 
 
 def write_xml_sharded(
@@ -189,42 +133,12 @@ def write_xml_sharded(
     meta: dict | None = None,
 ) -> list[dict]:
     """Write one entity kind as ``{out_dir}/{kind}-NNNNN.osm`` shards."""
-    if kind not in _ENTITY_COLS:
-        raise ValueError(f"kind must be one of {sorted(_ENTITY_COLS)}, got {kind!r}")
-    cols = [c for c in _ENTITY_COLS[kind] if c in df.columns]
-    if "id" not in cols:
-        raise ValueError(f"{kind} DataFrame needs an 'id' column; has {df.columns}")
-    plan = df.select(*cols)
-    # ALWAYS range-partition by id: with the incoming hash/arbitrary
-    # partitioning, shards would be internally sorted but their id-spans could
-    # overlap, breaking the manifest's tight-span property and the
-    # id-sorted-file OSM convention. Default from defaultParallelism, not
-    # df.rdd (which materializes AQE stages just to read a partition count).
-    plan = plan.repartitionByRange(
-        shards
-        if shards is not None
-        else max(1, df.sparkSession.sparkContext.defaultParallelism),
-        "id",
-    )
-    plan = plan.sortWithinPartitions("id")
-    os.makedirs(out_dir, exist_ok=True)
-    manifest = plan.mapInArrow(
-        _shard_kernel(kind, out_dir, meta or {}), MANIFEST_DDL
-    ).collect()
-    return [r.asDict() for r in manifest]
+    return write_sharded(df, kind, out_dir, XML, shards=shards, meta=meta)
 
 
 def write_bundle_xml(bundle, out_dir: str, *, shards: int | None = None) -> list[dict]:
-    """Write an ``OSMBundle`` as a sharded ``.osm`` directory; reads back via
+    """Write an ``OSMBundle`` as a sharded ``.osm`` directory plus a
+    ``_manifest.json``; reads back via
     :func:`~openstreetmapio_jl_spark.sources.xml_source.read_osm` (one parse
     task per shard)."""
-    manifest: list[dict] = []
-    for kind, df in (
-        ("nodes", bundle.nodes),
-        ("ways", bundle.ways),
-        ("relations", bundle.relations),
-    ):
-        manifest.extend(
-            write_xml_sharded(df, kind, out_dir, shards=shards, meta=bundle.meta or {})
-        )
-    return manifest
+    return write_bundle(bundle, out_dir, write_xml_sharded, shards=shards)

@@ -10,8 +10,8 @@ and runs the vectorized decode kernel — the reference's sequential loop
 (block independence guaranteed by ``osmformat.proto:39-44``).
 
 Scale notes:
-- Blob descriptors are tiny (5 fields/blob; a planet file is ~50k blobs), so a
-  single file's index is built on the driver as an Arrow local relation: a JVM
+- Blob descriptors are tiny (5 fields/blob; a planet file is ~50k blobs), so the
+  index of one file or of many is built on the driver as an Arrow local relation: a JVM
   ``LocalTableScan`` split into one partition per core
   (``min(n_blobs, defaultParallelism)``), rows ordered so each partition carries
   about the same compressed bytes. There is no Python index stage and no
@@ -72,54 +72,22 @@ def _header_meta(header: blocks.BlobDescriptor) -> dict:
     return decode.decode_header_block(payload)
 
 
-def blob_index_df(
-    spark: SparkSession,
-    paths: str | list[str],
-    *,
-    distribute: bool | None = None,
-) -> tuple[DataFrame, dict]:
+def blob_index_df(spark: SparkSession, paths: str | list[str]) -> tuple[DataFrame, dict]:
     """(data-blob descriptor DataFrame, merged meta from header blobs).
 
-    Single file (the common planet-extract case): framing runs on the driver —
-    ~50k metadata-only seeks, trivially cheap — and the descriptors go to Spark
-    as a ``pyarrow.Table``, i.e. a JVM ``LocalTableScan`` with no Python index
-    stage and no ``Exchange``. The scan splits its rows into
+    Framing runs on the driver for every file — metadata-only seeks, a few ms
+    even for a couple of hundred shard files — and the descriptors of all files
+    go to Spark as one ``pyarrow.Table``, i.e. a JVM ``LocalTableScan`` with no
+    Python index stage and no ``Exchange``. The scan splits its rows into
     ``min(n_blobs, defaultParallelism)`` contiguous partitions; the rows are
     ordered so each partition's ``data_size`` sum is balanced (largest blobs
-    placed first), giving one size-balanced decode task per core. One task per
-    core, not more: each Python task costs a fixed ~200 ms of worker start-up
-    CPU before the kernel runs (see the module docstring).
-
-    Multi-file corpora DISTRIBUTE the framing: one Spark task per file emits
-    that file's descriptors (``distribute`` defaults to ``len(paths) > 1``), so
-    the index pass scales with the cluster instead of serializing a 100-TB
-    corpus's framing on the driver. Per-file meta still comes from the driver,
-    but via :func:`blocks.scan_first_blob` — a few hundred bytes per file, not a
-    full framing scan. That path still hash-repartitions the descriptors."""
+    placed first), giving one size-balanced decode task per core whether the
+    blobs come from one file or many. One task per core, not more: each
+    Python task costs a fixed ~200 ms of worker start-up CPU before the kernel
+    runs (see the module docstring)."""
     if isinstance(paths, str):
         paths = [paths]
-    if distribute is None:
-        distribute = len(paths) > 1
     meta: dict = {}
-    if distribute:
-        for p in paths:
-            meta.update(_header_meta(blocks.scan_first_blob(p)))
-
-        def frame_file(batches):
-            for pdf in batches:
-                for p in pdf["path"]:
-                    descs = blocks.scan_blob_index(p)[1:]  # data blobs only
-                    yield _index_table(descs).to_pandas()
-
-        files = spark.createDataFrame([(p,) for p in paths], "path string")
-        df = files.repartition(len(paths), "path").mapInPandas(
-            frame_file, model.BLOB_INDEX_DDL
-        )
-        # spread blobs across decode tasks regardless of per-file blob counts
-        return (
-            df.repartition(spark.sparkContext.defaultParallelism * 2, "path", "blob_seq"),
-            meta,
-        )
     descs: list[blocks.BlobDescriptor] = []
     for p in paths:
         file_descs = blocks.scan_blob_index(p)
@@ -329,7 +297,6 @@ def read_pbf(
         nodes, ways, relations = split_union(union)
     else:
         union = None
-        index_df = index_df.cache()  # reused by all three scans
         nodes, ways, relations = (
             read_pbf_kind(spark, paths, kind, predicate=pred, transform=tf, index_df=index_df)
             for kind, pred, tf in zip(

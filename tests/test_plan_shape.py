@@ -8,9 +8,9 @@ pinned as tests so a refactor can't silently regress them.
 - The flagship PIP join ships the polygon side NARROW through the tile
   exchange: no ``edges`` column may appear in an Exchange below the final
   edges re-attach join.
-- A single-file PBF decode is one Spark job of one stage: the blob index is a
-  ``LocalTableScan`` under the decode's ``MapInArrow`` (no ``Exchange``),
-  split into one size-balanced partition per core.
+- A PBF decode, of one file or of several, is one Spark job of one stage: the
+  blob index is a ``LocalTableScan`` under the decode's ``MapInArrow`` (no
+  ``Exchange``), split into one size-balanced partition per core.
 """
 
 from __future__ import annotations
@@ -142,7 +142,7 @@ def test_bucketed_entity_tables_join_without_shuffle(spark, fixture_pbf):
 
 
 # ---------------------------------------------------------------------------
-# single-file PBF decode: one stage, one size-balanced Python task per core
+# PBF decode, one file or many: one stage, one size-balanced Python task per core
 # ---------------------------------------------------------------------------
 
 @pytest.fixture(scope="module")
@@ -157,44 +157,72 @@ def many_blob_pbf(tmp_path_factory, osm_data):
     return path
 
 
+@pytest.fixture(scope="module")
+def three_file_pbfs(tmp_path_factory, osm_data):
+    """The fixture's nodes split over three files (ways and relations in the
+    first), 19 data blobs in all — a multi-file corpus like sink output."""
+    from openstreetmapio_jl_spark.fixtures import generator as G
+
+    meta, nodes, ways, rels = osm_data
+    d = tmp_path_factory.mktemp("pbf3")
+    third = len(nodes) // 3
+    paths = []
+    for i in range(3):
+        p = str(d / f"part{i}.pbf")
+        chunk = nodes[i * third : (i + 1) * third] if i < 2 else nodes[2 * third :]
+        G.write_fixture_pbf(
+            p, meta, chunk, ways if i == 0 else [], rels if i == 0 else [],
+            nodes_per_block=40,
+        )
+        paths.append(p)
+    return paths
+
+
 def test_single_file_decode_plan_is_local_scan_with_balanced_partitions(
-    spark, many_blob_pbf
+    spark, many_blob_pbf, three_file_pbfs
 ):
     """The index is a JVM local relation under the decode's MapInArrow: no
     Exchange, no Python index stage. Its partitions are one per core, each
-    blob in exactly one of them, and balanced by compressed size."""
+    blob in exactly one of them, and balanced by compressed size. A
+    multi-file input gets the same index over all its files' blobs."""
     from pyspark.sql import functions as F
 
     from openstreetmapio_jl_spark.pbf import blocks
     from openstreetmapio_jl_spark.sources import pbf_source as PS
 
-    union, _ = PS.read_pbf_union(spark, many_blob_pbf)
-    plan = _plan(spark, union)
-    assert re.search(r"MapInArrow \(\d+\)\n\+- LocalTableScan \(\d+\)", plan), plan
-    assert "Exchange" not in plan, plan
-
-    sizes = {d.blob_seq: d.data_size for d in blocks.scan_blob_index(many_blob_pbf)[1:]}
-    n_parts = min(len(sizes), spark.sparkContext.defaultParallelism)
-    index_df, _ = PS.blob_index_df(spark, many_blob_pbf)
-    assert index_df.rdd.getNumPartitions() == n_parts
     # spark_partition_id above an opaque MapInArrow: the optimizer cannot fold
     # it into the local relation (where it would evaluate to 0 on the driver)
     def _same(batches):
         yield from batches
 
-    rows = (
-        index_df.mapInArrow(_same, index_df.schema)
-        .select(F.spark_partition_id().alias("part"), "blob_seq", "data_size")
-        .collect()
-    )
-    assert sorted(r.blob_seq for r in rows) == sorted(sizes)
-    assert all(r.data_size == sizes[r.blob_seq] for r in rows)
-    loads: dict[int, int] = {}
-    for r in rows:
-        loads[r.part] = loads.get(r.part, 0) + r.data_size
-    assert sorted(loads) == list(range(n_parts))
-    bound = sum(sizes.values()) / n_parts + max(sizes.values())
-    assert max(loads.values()) <= bound, (loads, bound)
+    for paths in (many_blob_pbf, three_file_pbfs):
+        union, _ = PS.read_pbf_union(spark, paths)
+        plan = _plan(spark, union)
+        assert re.search(r"MapInArrow \(\d+\)\n\+- LocalTableScan \(\d+\)", plan), plan
+        assert "Exchange" not in plan, plan
+
+        files = [paths] if isinstance(paths, str) else paths
+        sizes = {
+            (d.path, d.blob_seq): d.data_size
+            for p in files
+            for d in blocks.scan_blob_index(p)[1:]
+        }
+        n_parts = min(len(sizes), spark.sparkContext.defaultParallelism)
+        index_df, _ = PS.blob_index_df(spark, paths)
+        assert index_df.rdd.getNumPartitions() == n_parts
+        rows = (
+            index_df.mapInArrow(_same, index_df.schema)
+            .select(F.spark_partition_id().alias("part"), "path", "blob_seq", "data_size")
+            .collect()
+        )
+        assert sorted((r.path, r.blob_seq) for r in rows) == sorted(sizes)
+        assert all(r.data_size == sizes[(r.path, r.blob_seq)] for r in rows)
+        loads: dict[int, int] = {}
+        for r in rows:
+            loads[r.part] = loads.get(r.part, 0) + r.data_size
+        assert sorted(loads) == list(range(n_parts))
+        bound = sum(sizes.values()) / n_parts + max(sizes.values())
+        assert max(loads.values()) <= bound, (paths, loads, bound)
 
 
 def test_size_balanced_order_bound():
@@ -219,24 +247,27 @@ def test_size_balanced_order_bound():
     assert _size_balanced_order([], 0) == []
 
 
-def test_single_file_decode_write_is_one_spark_job(spark, many_blob_pbf, tmp_path):
-    """Decode → parquet of one file is ONE Spark job, whole or restricted to a
-    blob_seq range as ``jobs/decode_job.py`` chunks it — the Exchange-free
-    chunk query ``lineage.run_resumable`` counts on."""
+def test_single_file_decode_write_is_one_spark_job(
+    spark, many_blob_pbf, three_file_pbfs, tmp_path
+):
+    """Decode → parquet of one file, or of several, is ONE Spark job, whole or
+    restricted to a blob_seq range as ``jobs/decode_job.py`` chunks it — the
+    Exchange-free chunk query ``lineage.run_resumable`` counts on."""
     from pyspark.sql import functions as F
 
     from openstreetmapio_jl_spark.sources import pbf_source as PS
 
     sc = spark.sparkContext
-    index_df, _ = PS.blob_index_df(spark, many_blob_pbf)
-    chunk = index_df.filter(F.col("blob_seq").between(1, 5))
-    for i, kw in enumerate(({}, {"index_df": chunk})):
-        group = f"pbf-decode-write-{i}"
-        sc.setJobGroup(group, "decode write")
-        try:
-            union, _ = PS.read_pbf_union(spark, many_blob_pbf, **kw)
-            union.write.mode("overwrite").parquet(str(tmp_path / f"union{i}"))
-            jobs = list(sc.statusTracker().getJobIdsForGroup(group))
-        finally:
-            sc.setJobGroup("pbf-decode-post", "")
-        assert len(jobs) == 1, (kw, jobs)
+    for n, paths in enumerate((many_blob_pbf, three_file_pbfs)):
+        index_df, _ = PS.blob_index_df(spark, paths)
+        chunk = index_df.filter(F.col("blob_seq").between(1, 5))
+        for i, kw in enumerate(({}, {"index_df": chunk})):
+            group = f"pbf-decode-write-{n}-{i}"
+            sc.setJobGroup(group, "decode write")
+            try:
+                union, _ = PS.read_pbf_union(spark, paths, **kw)
+                union.write.mode("overwrite").parquet(str(tmp_path / f"union{n}-{i}"))
+                jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+            finally:
+                sc.setJobGroup("pbf-decode-post", "")
+            assert len(jobs) == 1, (paths, kw, jobs)

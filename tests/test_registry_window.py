@@ -78,3 +78,19 @@ def test_every_entry_has_spark_and_oracle():
     for name, (fn, sql) in r.items():
         assert callable(fn), name
         assert isinstance(sql, str) and "select" in sql.lower(), name
+
+
+def test_spark_entry_imports_from_its_own_checkout(tmp_path, monkeypatch):
+    """``__spark_entry__`` puts its own directory first on ``sys.path``, so a
+    copy of the repo imports its own package, not another checkout's."""
+    import importlib.util
+    import os
+    import sys
+
+    src = os.path.join(os.path.dirname(os.path.dirname(__file__)), "__spark_entry__.py")
+    copy = tmp_path / "__spark_entry__.py"
+    copy.write_text(open(src).read())
+    monkeypatch.setattr(sys, "path", list(sys.path))
+    spec = importlib.util.spec_from_file_location("_spark_entry_copy", copy)
+    spec.loader.exec_module(importlib.util.module_from_spec(spec))
+    assert sys.path[0] == str(tmp_path)

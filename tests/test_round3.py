@@ -257,14 +257,15 @@ def test_wrapped_bbox_from_far_pair_rings_and_both_cover_paths(spark):
 
 
 # ---------------------------------------------------------------------------
-# distributed blob-index pass (multi-file corpora)
+# blob-index pass over multi-file corpora
 # ---------------------------------------------------------------------------
 
-def test_multifile_blob_index_is_distributed_and_equal(spark, tmp_path):
-    """Multi-file inputs frame each file in a Spark task (mapInPandas over the
-    path list) instead of serially on the driver; descriptors and decoded
-    entity counts are identical to the driver-side path."""
+def test_multifile_blob_index_equals_per_file_scans(spark, tmp_path):
+    """A multi-file index holds exactly the data-blob descriptors of each
+    file's own ``scan_blob_index``, with the headers' meta merged in file
+    order, and a full read returns every file's entities."""
     from openstreetmapio_jl_spark.fixtures import generator as G
+    from openstreetmapio_jl_spark.pbf import blocks
     from openstreetmapio_jl_spark.sources import pbf_source as PS
 
     meta, nodes, ways, rels = G.make_osm()
@@ -276,31 +277,30 @@ def test_multifile_blob_index_is_distributed_and_equal(spark, tmp_path):
         G.write_fixture_pbf(p, meta, chunk, ways if i == 0 else [], rels if i == 0 else [])
         paths.append(p)
 
-    dist_df, dist_meta = PS.blob_index_df(spark, paths, distribute=True)
-    serial_df, serial_meta = PS.blob_index_df(spark, paths, distribute=False)
-    key = lambda r: (r.path, r.blob_seq)  # noqa: E731
-    assert sorted(map(key, dist_df.collect())) == sorted(map(key, serial_df.collect()))
-    assert dist_meta == serial_meta
-    assert "mapInPandas" in dist_df._jdf.queryExecution().analyzed().toString() or \
-        "MapInPandas" in dist_df._jdf.queryExecution().analyzed().toString()
+    index_df, index_meta = PS.blob_index_df(spark, paths)
+    per_file = [d for p in paths for d in blocks.scan_blob_index(p)[1:]]
+    key = lambda d: (d.path, d.blob_seq)  # noqa: E731
+    indexed = [blocks.BlobDescriptor(**r.asDict()) for r in index_df.collect()]
+    assert sorted(indexed, key=key) == sorted(per_file, key=key)
+    merged: dict = {}
+    for p in paths:
+        merged.update(PS.blob_index_df(spark, p)[1])
+    assert index_meta == merged
 
-    # the auto default: >1 file distributes; full read returns the same counts
     bundle = PS.read_pbf(spark, paths)
     assert bundle.nodes.count() == len(nodes)
     assert bundle.ways.count() == len(ways)
     assert bundle.relations.count() == len(rels)
-    assert bundle.meta == dist_meta
+    assert bundle.meta == index_meta
 
 
-def test_scan_first_blob_matches_full_scan_header(tmp_path):
+def test_scan_blob_index_rejects_truncated_header_blob(tmp_path):
     from openstreetmapio_jl_spark.fixtures import generator as G
     from openstreetmapio_jl_spark.pbf import blocks
 
     meta, nodes, ways, rels = G.make_osm()
     p = str(tmp_path / "one.pbf")
     G.write_fixture_pbf(p, meta, nodes, ways, rels)
-    assert blocks.scan_first_blob(p) == blocks.scan_blob_index(p)[0]
-    # truncated header payload still detected without a full scan
     cut = str(tmp_path / "cut.pbf")
     with open(p, "rb") as f:
         head = f.read(40)
@@ -308,8 +308,8 @@ def test_scan_first_blob_matches_full_scan_header(tmp_path):
         f.write(head[:20])
     import pytest as _pytest
 
-    with _pytest.raises(ValueError):
-        blocks.scan_first_blob(cut)
+    with _pytest.raises(ValueError, match="truncated"):
+        blocks.scan_blob_index(cut)
 
 
 # ---------------------------------------------------------------------------

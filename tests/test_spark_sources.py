@@ -145,6 +145,17 @@ def test_header_only_pbf_reads_empty(spark, tmp_path, osm_data):
             b.union.unpersist()
 
 
+def test_three_scan_read_caches_nothing(spark, fixture_pbf):
+    """The default three-scan ``read_pbf`` stays lazy: no entity frame's
+    optimized plan reads an ``InMemoryRelation``, which the caller could never
+    unpersist (``union`` is None on this path)."""
+    b = read_pbf(spark, fixture_pbf)
+    assert b.union is None
+    for df in (b.nodes, b.ways, b.relations):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "InMemoryRelation" not in plan, plan
+
+
 def test_blob_seq_range_chunks_cover_every_blob_once(spark, tmp_path, osm_data):
     """``jobs/decode_job.py`` splits the index into contiguous blob_seq ranges;
     over the size-ordered index the ranges still cover every blob, and every
