@@ -203,10 +203,12 @@ def main() -> None:
     from openstreetmapio_jl_spark.operators.dedup import fingerprint, jaccard_via_lsh
     from openstreetmapio_jl_spark.operators.graph import connected_components
     from openstreetmapio_jl_spark.plans import lineage
+    from openstreetmapio_jl_spark.session import QUERY_CONF
     from openstreetmapio_jl_spark.sources.pbf_source import read_pbf
 
     builder = (
         SparkSession.builder.appName("corpus-pipeline")
+        .config(map=QUERY_CONF)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -46,9 +46,11 @@ def main() -> None:
         hdr_quantile_sketch,
         hll_distinct,
     )
+    from openstreetmapio_jl_spark.session import QUERY_CONF
 
     spark = (
         SparkSession.builder.appName("corpus-report")
+        .config(map=QUERY_CONF)
         .config("spark.sql.adaptive.enabled", "true")
         .getOrCreate()
     )

@@ -39,10 +39,12 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from openstreetmapio_jl_spark.plans import lineage
+    from openstreetmapio_jl_spark.session import QUERY_CONF
     from openstreetmapio_jl_spark.sources import pbf_source as P
 
     spark = (
         SparkSession.builder.appName("osm-decode-to-parquet")
+        .config(map=QUERY_CONF)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")  # naive-UTC timestamp contract (sinks assert it)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

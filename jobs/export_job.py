@@ -38,10 +38,12 @@ def main() -> None:
     from pyspark.sql.utils import AnalysisException
 
     from openstreetmapio_jl_spark import sinks
+    from openstreetmapio_jl_spark.session import QUERY_CONF
     from openstreetmapio_jl_spark.sources.pbf_source import OSMBundle
 
     spark = (
         SparkSession.builder.appName("osm-export-sharded")
+        .config(map=QUERY_CONF)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")  # naive-UTC timestamp contract (sinks assert it)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -45,11 +45,13 @@ def main() -> None:
     from openstreetmapio_jl_spark.operators import geocode
     from openstreetmapio_jl_spark.operators import spatial_join as SJ
     from openstreetmapio_jl_spark.plans import lineage
+    from openstreetmapio_jl_spark.session import QUERY_CONF
     from openstreetmapio_jl_spark.sources.pbf_source import read_pbf
 
     # spark-submit owns master/deploy config; only set app-level SQL knobs here
     spark = (
         SparkSession.builder.appName("pip_join_job")
+        .config(map=QUERY_CONF)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()

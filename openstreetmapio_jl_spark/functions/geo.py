@@ -6,7 +6,10 @@ bbox trig in its tests (``test/test_load_overpass.jl:54-62``) is the pattern for
 :func:`radius_bbox`. PIP/polygon semantics are new engine surface (the reference
 stores multipolygon members raw; SURVEY.md §7 "hard parts").
 
-Each function has a NumPy form (kernels/tests) and a Column form (JVM, codegen).
+Each function has a NumPy form (kernels/tests) and a Column form (JVM, no Python).
+Column forms built on array higher-order functions (``aggregate``,
+``transform``) are ``CodegenFallback``: Spark interprets them per row, and the
+operator that holds one runs outside whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -53,7 +56,7 @@ def haversine_m_sql(lat1: str, lon1: str, lat2: str, lon2: str) -> str:
 def polyline_length_m_col(lats: Column, lons: Column) -> Column:
     """Geodesic polyline length (meters): consecutive vertices connected by
     haversine segments, folded left-to-right in array order. Pure array
-    expression — whole-stage codegen, no window, no Python. Arrays with < 2
+    expression (interpreted HOFs) — no window, no Python. Arrays with < 2
     vertices report 0.0 (the guard also keeps ``sequence(1, 0)`` from being
     built — Spark defaults the step to -1, so that range would DESCEND)."""
     seg = F.transform(
@@ -117,7 +120,10 @@ def points_in_ring(lats: np.ndarray, lons: np.ndarray, ring: np.ndarray) -> np.n
 
 def pip_crossings_col(lat: Column, lon: Column, edges: Column) -> Column:
     """Pure-Catalyst ray cast: ``edges`` is ARRAY<STRUCT<y1,x1,y2,x2>> (lat=y,
-    lon=x). Returns BOOLEAN inside. No Python in the join hot path.
+    lon=x). Returns BOOLEAN inside. No Python in the join hot path, but no
+    generated code either: ``aggregate`` is ``CodegenFallback``, so the
+    expression is interpreted per row and the operator that holds it drops
+    out of whole-stage codegen.
 
     Measured alternatives (36.5M candidate pairs, sf4 fixture, local[8]) — this
     HOF: ~20 s; a division-free reformulation: ~25 s (interpreted cost tracks
@@ -234,7 +240,7 @@ def polygon_area_m2_col(
     cancellation; shifted terms are O(extent²) so float64 keeps them exact),
     scaled by cos(mean_lat): the standard small-polygon equal-area
     approximation. Winding-direction independent (absolute value). Pure
-    column math — whole-stage codegen, no Python."""
+    column math (an interpreted ``aggregate``) — no Python."""
     shoelace2 = F.aggregate(
         edges,
         F.lit(0.0),
@@ -288,8 +294,8 @@ def polygon_centroid_cols(
     precision discipline: raw lon·lat products lose ~11 digits to
     cancellation), shifted back at the end. Winding-direction independent
     (the signed area cancels out of the ratio). Degenerate polygons
-    (zero signed area) yield NULL. Pure column math — whole-stage codegen,
-    no Python."""
+    (zero signed area) yield NULL. Pure column math (interpreted
+    ``aggregate`` HOFs) — no Python."""
     cross = lambda e: (  # noqa: E731 — local expression builder
         (e["x1"] - min_lon) * (e["y2"] - min_lat)
         - (e["x2"] - min_lon) * (e["y1"] - min_lat)

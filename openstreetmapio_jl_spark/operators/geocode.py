@@ -2,12 +2,12 @@
 
 Pages (``url, warc_ts, html, text, lang`` — BASELINE.json input_hint) carry
 deterministic geo mentions (``geo:<lat>,<lon>`` URIs, the public RFC 5870 scheme).
-Extraction is a JVM-side ``regexp_extract`` — no Python in this stage at all.
+Extraction is a JVM-side ``regexp_extract_all`` — no Python in this stage at all.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from openstreetmapio_jl_spark.functions import text as textfn
@@ -16,29 +16,44 @@ from openstreetmapio_jl_spark.functions.cells import xyz_tile_key_col
 GEO_RE = r"geo:(-?[0-9]+\.[0-9]+),(-?[0-9]+\.[0-9]+)"
 
 
+def _geocoded(pages: DataFrame, text_col: str, mentions: Column) -> DataFrame:
+    """One row per element of ``mentions`` (an array of ``geo:<lat>,<lon>``
+    strings) with its (lat, lon); out-of-range coordinates drop.
+
+    The mentions are exploded by a Generate, so the range filter, which reads
+    the generator's output, cannot be pushed below it: the regex inside
+    ``mentions`` runs once per row. With a plain ``regexp_extract`` alias the
+    optimizer inlines the regex into every predicate (6 ``Matcher.find`` calls
+    per row in the generated code instead of 1)."""
+    parts = F.split(F.substring(F.col("_m"), 5, 2_147_483_647), ",")
+    return (
+        pages.filter(F.col(text_col).contains("geo:"))
+        .withColumn("_m", F.explode(mentions))
+        # each "_m" is "geo:<lat>,<lon>": one split, no second regex pass
+        .withColumns({
+            "lat": F.element_at(parts, 1).cast("double"),
+            "lon": F.element_at(parts, 2).cast("double"),
+        })
+        .drop("_m")
+        .filter(F.col("lat").between(-90.0, 90.0) & F.col("lon").between(-180.0, 180.0))
+    )
+
+
+def _mentions(text_col: str) -> Column:
+    return F.regexp_extract_all(F.col(text_col), F.lit(GEO_RE), F.lit(0))
+
+
 def extract_geocodes(pages: DataFrame, *, text_col: str = "text") -> DataFrame:
     """pages → + (lat, lon) for rows with a geo mention (others dropped).
     FIRST mention per page; :func:`extract_geocodes_multi` keeps one row per
-    mention when multi-place multiplicity is wanted.
+    mention when multi-place multiplicity is wanted. A page whose first
+    mention is out of range drops, even if a later mention is valid.
 
     Hot-path shape: a cheap ``contains('geo:')`` substring prefilter gates the
     regex (on a real web corpus most pages carry no geo mention at all), and the
-    regex runs ONCE per surviving row (extract group 0, then split) instead of
-    once per capture group — at 10^12 documents the regex is the dominant cost
-    of this stage."""
-    m = F.regexp_extract(F.col(text_col), GEO_RE, 0)
-    out = (
-        pages.filter(F.col(text_col).contains("geo:"))
-        .withColumn("_m", m)
-        .filter(F.col("_m") != "")
-        # "_m" is "geo:<lat>,<lon>" — one split, no second regex pass
-        .withColumn("_parts", F.split(F.substring(F.col("_m"), 5, 2_147_483_647), ","))
-        .withColumn("lat", F.element_at("_parts", 1).cast("double"))
-        .withColumn("lon", F.element_at("_parts", 2).cast("double"))
-        .drop("_m", "_parts")
-        .filter(F.col("lat").between(-90.0, 90.0) & F.col("lon").between(-180.0, 180.0))
-    )
-    return out
+    regex runs ONCE per surviving row (see :func:`_geocoded`) — at 10^12
+    documents the regex is the dominant cost of this stage."""
+    return _geocoded(pages, text_col, F.slice(_mentions(text_col), 1, 1))
 
 
 def extract_geocodes_multi(pages: DataFrame, *, text_col: str = "text") -> DataFrame:
@@ -56,20 +71,7 @@ def extract_geocodes_multi(pages: DataFrame, *, text_col: str = "text") -> DataF
     output (original page columns + lat, lon) — dedup of repeated identical
     mentions within one page is deliberately NOT applied (multiplicity is the
     contract; wrap with ``.distinct()`` when one-hit-per-place is wanted)."""
-    out = (
-        pages.filter(F.col(text_col).contains("geo:"))
-        .withColumn(
-            "_m",
-            F.explode(F.regexp_extract_all(F.col(text_col), F.lit(GEO_RE), F.lit(0))),
-        )
-        # each "_m" is "geo:<lat>,<lon>" — one split, no second regex pass
-        .withColumn("_parts", F.split(F.substring(F.col("_m"), 5, 2_147_483_647), ","))
-        .withColumn("lat", F.element_at("_parts", 1).cast("double"))
-        .withColumn("lon", F.element_at("_parts", 2).cast("double"))
-        .drop("_m", "_parts")
-        .filter(F.col("lat").between(-90.0, 90.0) & F.col("lon").between(-180.0, 180.0))
-    )
-    return out
+    return _geocoded(pages, text_col, _mentions(text_col))
 
 
 def pages_with_cells(pages: DataFrame, *, zoom: int = 13) -> DataFrame:

@@ -3,8 +3,10 @@
 This is the engine's centerpiece (BASELINE.json north_star): geocoded points (web
 pages) are joined against OSM polygons via a **cell-keyed equi-join** (XYZ tile keys
 — Catalyst-native, SQL-expressible) with an exact ray-cast **point-in-polygon
-post-filter** evaluated as a higher-order-function expression (whole-stage codegen —
-zero Python in the join path).
+post-filter** evaluated as a higher-order-function expression (zero Python in the
+join path). The ray cast is interpreted, not compiled: ``aggregate`` is a
+``CodegenFallback`` expression, so the join that carries it runs outside
+whole-stage codegen.
 
 Scale design:
 - polygons carry their edge arrays; the tile-cover explode keys each polygon into
@@ -171,7 +173,7 @@ def way_lengths_m(ways: DataFrame, nodes: DataFrame) -> DataFrame:
     via ``first()`` on the groupBy path, untouched on the positions path.
     Output adds ``n_pts`` (resolved vertex count) and ``length_m``; ways with
     fewer than 2 resolved vertices report ``length_m = 0.0``. Everything is
-    whole-stage-codegen column math — no Python, no window.
+    column math (the length fold is an interpreted HOF) — no Python, no window.
     """
     carry = [c for c in ways.columns if c not in ("refs", "positions")]
     extra = [c for c in carry if c != "id"]
@@ -512,8 +514,11 @@ def point_in_polygon_join(
 
     Plan shape: polygon side exploded on tile cover (small ×cover_factor), point
     side keyed by its single tile → hash equi-join on ``tile`` (broadcast under
-    Spark's auto threshold) → exact ray cast as an ``aggregate`` HOF in
-    codegen. A point maps to exactly one tile and a polygon covers each tile
+    Spark's auto threshold) → exact ray cast as an ``aggregate`` HOF, the
+    condition of the ``polygon_id`` join that re-attaches the edges. That join
+    runs outside whole-stage codegen (no ``*`` in ``explain("formatted")``
+    after execution): the HOF is ``CodegenFallback`` and is interpreted per
+    candidate pair. A point maps to exactly one tile and a polygon covers each tile
     once, so no post-dedup is needed. ``nsalt > 0`` splits hot tiles across ``nsalt`` sub-keys.
 
     Salt key: ``hash(salt_id_col)`` when given (the point's UNIQUE id, e.g.

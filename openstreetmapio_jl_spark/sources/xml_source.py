@@ -42,14 +42,7 @@ def parse_osm_xml(path: str) -> dict:
     meta: dict = {}
     for el in root:
         try:
-            if el.tag == "bounds":
-                meta["bbox"] = {
-                    "bottom_lat": float(el.get("minlat")),
-                    "left_lon": float(el.get("minlon")),
-                    "top_lat": float(el.get("maxlat")),
-                    "right_lon": float(el.get("maxlon")),
-                }
-            elif el.tag == "node":
+            if el.tag == "node":
                 tags = _tags_of(el)
                 nodes.append(
                     {
@@ -72,10 +65,54 @@ def parse_osm_xml(path: str) -> dict:
                     {"id": int(el.get("id")), "members": members, "tags": _tags_of(el)}
                 )
             else:
-                meta[el.tag] = _unknown_element(el)
+                _add_meta(meta, el)
         except (TypeError, ValueError):
             continue  # element-level isolation (src/load_xml.jl:100-121)
     return {"nodes": nodes, "ways": ways, "relations": relations, "meta": meta}
+
+
+def _header_meta(path: str) -> dict:
+    """The ``meta`` of :func:`parse_osm_xml`, read from the file's header only:
+    the top-level elements before the first node, way or relation (``bounds``,
+    and e.g. Overpass's ``note``/``meta``). The scan stops there, so it costs
+    the header's bytes, not a tree of the whole file. A non-entity element
+    placed after the first entity is not in this meta."""
+    meta: dict = {}
+    osm_depth = None
+    depth = 0
+    with open(path, "rb") as f:
+        for event, el in ET.iterparse(f, events=("start", "end")):
+            if event == "start":
+                depth += 1
+                if osm_depth is None:
+                    if el.tag == "osm":
+                        osm_depth = depth
+                elif depth == osm_depth + 1 and el.tag in ("node", "way", "relation"):
+                    break
+                continue
+            depth -= 1
+            if osm_depth is None:
+                continue
+            if depth == osm_depth:  # a child of <osm> is complete
+                try:
+                    _add_meta(meta, el)
+                except (TypeError, ValueError):
+                    pass  # element-level isolation, as in parse_osm_xml
+            elif depth < osm_depth:  # </osm>
+                break
+    return meta
+
+
+def _add_meta(meta: dict, el) -> None:
+    if el.tag == "bounds":
+        meta["bbox"] = {
+            "bottom_lat": float(el.get("minlat")),
+            "left_lon": float(el.get("minlon")),
+            "top_lat": float(el.get("maxlat")),
+            "right_lon": float(el.get("maxlon")),
+        }
+    else:
+        meta[el.tag] = _unknown_element(el)
 
 
 def _tags_of(el) -> dict | None:
@@ -180,5 +217,5 @@ def read_osm(
     relations = path_df.mapInArrow(
         kernel_for("relations", model.RELATIONS_DDL), model.RELATIONS_DDL
     )
-    meta = parse_osm_xml(paths[0])["meta"] if paths else {}
+    meta = _header_meta(paths[0]) if paths else {}
     return OSMBundle(nodes=nodes, ways=ways, relations=relations, meta=meta)

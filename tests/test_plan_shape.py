@@ -11,6 +11,9 @@ pinned as tests so a refactor can't silently regress them.
 - A PBF decode, of one file or of several, is one Spark job of one stage: the
   blob index is a ``LocalTableScan`` under the decode's ``MapInArrow`` (no
   ``Exchange``), split into one size-balanced partition per core.
+- The flagship PIP query: a small pages file is scanned by one task per core,
+  building the join stays under a py4j round-trip budget, and the geo regex
+  runs once per row (one ``Matcher.find`` in the generated code).
 """
 
 from __future__ import annotations
@@ -271,3 +274,133 @@ def test_single_file_decode_write_is_one_spark_job(
             finally:
                 sc.setJobGroup("pbf-decode-post", "")
             assert len(jobs) == 1, (paths, kw, jobs)
+
+
+# ---------------------------------------------------------------------------
+# flagship PIP query: probe-side parallelism, build cost, one regex per row
+# ---------------------------------------------------------------------------
+
+@pytest.fixture(scope="module")
+def pages_1mb(tmp_path_factory):
+    """One ~1 MB parquet file of 8,000 geocodable pages in 8 row groups."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(7)
+    n = 8_000
+    lat = rng.uniform(-60.0, 60.0, n)
+    lon = rng.uniform(-170.0, 170.0, n)
+    noise = rng.integers(0, 2**63, (n, 6), dtype=np.int64)
+    urls = [f"https://ex.org/p{i}" for i in range(n)]
+    text = [
+        f"geo:{a:.5f},{b:.5f} " + "".join(f"{v:016x}" for v in row)
+        for a, b, row in zip(lat, lon, noise)
+    ]
+    path = str(tmp_path_factory.mktemp("pages") / "pages.parquet")
+    pq.write_table(pa.table({"url": urls, "text": text}), path, row_group_size=1_000)
+    return path
+
+
+def test_small_pages_file_is_scanned_on_every_core(spark, pages_1mb):
+    """A file below Spark's default ``openCostInBytes`` (4 MB) was one scan
+    task, so geocode, join and ray cast ran on one core; the session default
+    of 64 KB splits it into one task per core."""
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from openstreetmapio_jl_spark.operators.geocode import pages_with_cells
+
+    row_groups = pq.ParquetFile(pages_1mb).metadata.num_row_groups
+    assert row_groups >= 8 and 0.8e6 < os.path.getsize(pages_1mb) < 1.5e6
+    pts = pages_with_cells(spark.read.parquet(pages_1mb)).select(
+        "url", F.spark_partition_id().alias("pid")
+    )
+    rows = pts.collect()
+    assert len({r.pid for r in rows}) == min(
+        row_groups, spark.sparkContext.defaultParallelism
+    )
+    assert sorted(r.url for r in rows) == sorted(f"https://ex.org/p{i}" for i in range(8_000))
+
+
+def test_pip_query_build_round_trip_budget(spark, pages_1mb):
+    """Building the flagship join is bounded in py4j round trips. With
+    Spark's default ``spark.python.sql.dataFrameDebugging.enabled=true``
+    every Column operator adds a session lookup, a JVM class lookup, a conf
+    read and an origin set/clear: the same build took 2,499 round trips
+    with it on and 976 with the session default off; the budget is ~20%
+    above the latter."""
+    import gc
+
+    import py4j.clientserver as cs
+
+    from openstreetmapio_jl_spark.operators.geocode import pages_with_cells
+    from openstreetmapio_jl_spark.operators.spatial_join import point_in_polygon_join
+
+    pages = spark.read.parquet(pages_1mb)
+    polys = spark.createDataFrame(
+        [(1, [(0.0, 0.0, 1.0, 1.0)], 0.0, 1.0, 0.0, 1.0)],
+        "id long, edges array<struct<y1:double,x1:double,y2:double,x2:double>>, "
+        "min_lat double, max_lat double, min_lon double, max_lon double",
+    )
+    send = cs.ClientServerConnection.send_command
+    calls = [0]
+
+    def counted(self, *args, **kwargs):
+        calls[0] += 1
+        return send(self, *args, **kwargs)
+
+    gc.collect()
+    gc.disable()  # a collection mid-build would add py4j detach commands
+    cs.ClientServerConnection.send_command = counted
+    try:
+        joined = point_in_polygon_join(
+            pages_with_cells(pages), polys, nsalt=16, salt_id_col="url"
+        )
+    finally:
+        cs.ClientServerConnection.send_command = send
+        gc.enable()
+    assert "polygon_id" in joined.columns
+    assert calls[0] <= 1_170, calls[0]
+
+
+@pytest.mark.parametrize("fn", ["extract_geocodes", "extract_geocodes_multi"])
+def test_geocode_regex_runs_once_per_row(spark, fn):
+    """The geo regex is evaluated once per row: the generated code holds one
+    ``Matcher.find``. An aliased ``regexp_extract`` filtered on its output
+    had the regex inlined into every range predicate (6 calls)."""
+    from openstreetmapio_jl_spark.operators import geocode
+
+    pages = spark.createDataFrame([("u", "geo:1.0,2.0")], "url string, text string")
+    df = getattr(geocode, fn)(pages)
+    code = str(df._jdf.queryExecution().debug().codegenToSeq().mkString("\n"))
+    assert code.count(".find(") == 1
+
+
+def test_geocode_rows_on_crafted_pages(spark):
+    from openstreetmapio_jl_spark.operators import geocode
+
+    pages = spark.createDataFrame(
+        [
+            ("none", "no mention at all"),
+            ("bare", "geo: here, but geo:x,y has no numbers"),
+            ("null", None),
+            ("first_out", "geo:95.0,10.0 then geo:10.5,20.25"),
+            ("two", "geo:10.5,20.25 and geo:-33.1,151.2"),
+        ],
+        "url string, text string",
+    )
+
+    def rows(df):
+        assert df.columns == ["url", "text", "lat", "lon"]
+        return sorted((r.url, r.lat, r.lon) for r in df.collect())
+
+    # first mention only; an out-of-range first mention drops the page
+    assert rows(geocode.extract_geocodes(pages)) == [("two", 10.5, 20.25)]
+    assert rows(geocode.extract_geocodes_multi(pages)) == [
+        ("first_out", 10.5, 20.25),
+        ("two", -33.1, 151.2),
+        ("two", 10.5, 20.25),
+    ]

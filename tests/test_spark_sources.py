@@ -60,6 +60,33 @@ def test_bbox_meta(pbf_bundle, xml_bundle):
     ) or pbf_bundle.meta["bbox"] == xml_bundle.meta["bbox"]
 
 
+@pytest.mark.parametrize("layout", ["fixture", "no_bounds", "overpass_header"])
+def test_xml_header_meta_equals_full_parse(spark, tmp_path, fixture_xml, layout):
+    """``read_osm`` takes its meta from the header (an iterparse that stops at
+    the first entity), not from a tree of the whole first file; it must equal
+    the full parse's meta."""
+    import re
+
+    from openstreetmapio_jl_spark.sources.xml_source import parse_osm_xml
+
+    text = open(fixture_xml, encoding="utf-8").read()
+    if layout == "no_bounds":
+        text = re.sub(r"\s*<bounds[^>]*/>", "", text)
+    elif layout == "overpass_header":
+        text = re.sub(
+            r"(<osm [^>]*>)",
+            r'\1<note>ODbL</note><meta osm_base="2024-01-01T00:00:00Z"/>',
+            text,
+        )
+    path = tmp_path / f"{layout}.osm"
+    path.write_text(text, encoding="utf-8")
+    meta = read_osm(spark, str(path)).meta
+    assert meta == parse_osm_xml(str(path))["meta"]
+    assert ("bbox" in meta) == (layout != "no_bounds")
+    if layout == "overpass_header":
+        assert meta["meta"] == {"osm_base": "2024-01-01T00:00:00Z"}
+
+
 def test_kernel_predicate_equals_catalyst_filter(spark, fixture_pbf, pbf_bundle):
     """Kernel pushdown and declarative filter produce identical row sets —
     the filter-correctness contract (``test/test_load_pbf.jl:100-119``)."""
