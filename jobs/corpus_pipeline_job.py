@@ -209,9 +209,6 @@ def main() -> None:
     builder = (
         SparkSession.builder.appName("corpus-pipeline")
         .config(map=QUERY_CONF)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
     )
     if args.dedup_index or args.url_bloom:
         # the signature index / url bloom must outlive this invocation: the default
@@ -274,7 +271,6 @@ def main() -> None:
                 deduped,
                 table_prefix=args.dedup_index,
                 id_col="url",
-                text_col="text",
                 threshold=args.near_dup_threshold,
                 max_bucket_df=args.near_dup_max_bucket,
             )
@@ -290,13 +286,12 @@ def main() -> None:
 
             batch_urls = deduped.select(F.col("url").alias("id")).distinct()
             losers = incremental_cluster_losers(
-                pairs, batch_urls, id_col="url", handles=cc_handles
+                pairs, batch_urls, handles=cc_handles
             ).persist()
         else:
             pairs = jaccard_via_lsh(
                 deduped,
                 id_col="url",
-                text_col="text",
                 threshold=args.near_dup_threshold,
                 max_bucket_df=args.near_dup_max_bucket,
             )
@@ -320,10 +315,7 @@ def main() -> None:
 
         pre = deduped.persist()
         n_pre = pre.count()
-        deduped = chunk_clean(
-            pre, id_col="url", text_col="text",
-            words_per_chunk=args.chunk_dedup_words,
-        ).persist()
+        deduped = chunk_clean(pre, words_per_chunk=args.chunk_dedup_words).persist()
         n_chunk_boiler_dropped = n_pre - deduped.count()
         pre.unpersist()
 
@@ -354,7 +346,7 @@ def main() -> None:
         for part in args.rebalance.split(","):
             lang, _, frac = part.partition(":")
             targets[lang.strip()] = float(frac)
-        gated = rebalance(gated, targets, strata_col="lang", key_col="url")
+        gated = rebalance(gated, targets, key_col="url")
 
     # 3. geocode + LEFT spatial enrich: keep every gated page; attach the
     # containing polygon ids (array, may be empty) for geocoded ones
@@ -453,12 +445,11 @@ def main() -> None:
             fresh = survivors.join(indexed, "url", "left_anti")
             mode = extend_dedup_index(
                 spark, fresh, table_prefix=args.dedup_index,
-                id_col="url", text_col="text", batch_key=batch_id,
+                id_col="url", batch_key=batch_id,
             )
         else:
             build_dedup_index(
-                spark, survivors, table_prefix=args.dedup_index,
-                id_col="url", text_col="text",
+                spark, survivors, table_prefix=args.dedup_index, id_col="url"
             )
             mode = "built"
         stats["dedup_index"] = args.dedup_index

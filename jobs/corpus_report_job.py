@@ -51,7 +51,6 @@ def main() -> None:
     spark = (
         SparkSession.builder.appName("corpus-report")
         .config(map=QUERY_CONF)
-        .config("spark.sql.adaptive.enabled", "true")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")

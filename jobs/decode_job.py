@@ -45,9 +45,6 @@ def main() -> None:
     spark = (
         SparkSession.builder.appName("osm-decode-to-parquet")
         .config(map=QUERY_CONF)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")  # naive-UTC timestamp contract (sinks assert it)
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")

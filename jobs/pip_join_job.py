@@ -52,8 +52,6 @@ def main() -> None:
     spark = (
         SparkSession.builder.appName("pip_join_job")
         .config(map=QUERY_CONF)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")

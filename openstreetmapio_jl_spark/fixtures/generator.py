@@ -794,7 +794,7 @@ def _truth_cells(page_geo: pa.Table) -> pa.Table:
     return pa.table(
         {
             "url": page_geo.column("url"),
-            "s2_cell": pa.array(_cells.s2_cell_id(lat, lon, level=12), pa.int64()),
+            "s2_cell": pa.array(_cells.s2_cell_id(lat, lon), pa.int64()),
             "hex_cell": pa.array(_cells.hex_cell(lat, lon, res=9), pa.int64()),
             "hex_cell_r7": pa.array(_cells.hex_cell(lat, lon, res=7), pa.int64()),
         }

@@ -49,6 +49,7 @@ EARTH_RADIUS_M = 6_371_008.8
 # ---------------------------------------------------------------------------
 
 _MAX_LEVEL = 30
+S2_LEVEL = 12  # the engine's S2 join-key level, ~3-6 km cells
 _LOOKUP_BITS = 4
 _SWAP_MASK = 1
 _INVERT_MASK = 2
@@ -61,15 +62,13 @@ _POS_TO_ORIENTATION = np.array(
 )
 
 
-def _build_lookup() -> tuple[np.ndarray, np.ndarray]:
+def _build_lookup() -> np.ndarray:
     lookup_pos = np.zeros(1 << (2 * _LOOKUP_BITS + 2), dtype=np.int64)
-    lookup_ij = np.zeros(1 << (2 * _LOOKUP_BITS + 2), dtype=np.int64)
 
     def init(level, i, j, orig_orientation, pos, orientation):
         if level == _LOOKUP_BITS:
             ij = (i << _LOOKUP_BITS) + j
             lookup_pos[(ij << 2) + orig_orientation] = (pos << 2) + orientation
-            lookup_ij[(pos << 2) + orig_orientation] = (ij << 2) + orientation
             return
         level += 1
         i <<= 1
@@ -88,10 +87,10 @@ def _build_lookup() -> tuple[np.ndarray, np.ndarray]:
 
     for orientation in range(4):
         init(0, 0, 0, orientation, 0, orientation)
-    return lookup_pos, lookup_ij
+    return lookup_pos
 
 
-_LOOKUP_POS, _LOOKUP_IJ = _build_lookup()
+_LOOKUP_POS = _build_lookup()
 
 
 def _xyz_from_latlon(lat_deg: np.ndarray, lon_deg: np.ndarray):
@@ -139,14 +138,8 @@ def _st_from_uv(u: np.ndarray) -> np.ndarray:
     )
 
 
-def _uv_from_st(s: np.ndarray) -> np.ndarray:
-    return np.where(
-        s >= 0.5, (1.0 / 3.0) * (4.0 * s * s - 1.0), (1.0 / 3.0) * (1.0 - 4.0 * (1.0 - s) * (1.0 - s))
-    )
-
-
-def s2_cell_id(lat: np.ndarray, lon: np.ndarray, level: int = 12) -> np.ndarray:
-    """Vectorized S2 cell id at ``level`` (uint64 returned as int64 bit pattern)."""
+def s2_cell_id(lat: np.ndarray, lon: np.ndarray) -> np.ndarray:
+    """Vectorized S2 cell id at ``S2_LEVEL`` (uint64 returned as int64 bit pattern)."""
     lat = np.asarray(lat, dtype=np.float64)
     lon = np.asarray(lon, dtype=np.float64)
     x, y, z = _xyz_from_latlon(lat, lon)
@@ -166,81 +159,9 @@ def s2_cell_id(lat: np.ndarray, lon: np.ndarray, level: int = 12) -> np.ndarray:
         n |= (bits >> np.int64(2)).astype(np.uint64) << np.uint64(k * 2 * _LOOKUP_BITS)
         bits &= _SWAP_MASK | _INVERT_MASK
     id_level30 = n * np.uint64(2) + np.uint64(1)
-    if level >= _MAX_LEVEL:
-        return id_level30.view(np.int64)
-    lsb = np.uint64(1) << np.uint64(2 * (_MAX_LEVEL - level))
+    lsb = np.uint64(1) << np.uint64(2 * (_MAX_LEVEL - S2_LEVEL))
     parent = (id_level30 & (~(lsb - np.uint64(1)) & np.uint64(0xFFFFFFFFFFFFFFFF))) | lsb
     return parent.view(np.int64)
-
-
-def s2_cell_center(cell_id: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Inverse: cell id → (lat, lon) of the cell center (for round-trip tests and
-    cell-ring geometry). Decodes the Hilbert position back to (face, i, j)."""
-    cid = np.asarray(cell_id).view(np.uint64)
-    # layout: 3 face bits at 61-63, 60 Hilbert-position bits, 1 trailing marker
-    face = (cid >> np.uint64(61)).astype(np.int64)
-    lsb = cid & (~cid + np.uint64(1))
-    pos = (cid & ((np.uint64(1) << np.uint64(61)) - np.uint64(1))) >> np.uint64(1)
-    i = np.zeros(len(cid), dtype=np.int64)
-    j = np.zeros(len(cid), dtype=np.int64)
-    bits = (face & _SWAP_MASK).astype(np.int64)
-    for k in range(7, -1, -1):
-        nbits = _LOOKUP_BITS  # all rounds use 4 bits in this layout
-        mask = (1 << (2 * nbits)) - 1
-        bits += (((pos >> np.uint64(k * 2 * _LOOKUP_BITS)) & np.uint64(mask)).astype(np.int64)) << 2
-        bits = _LOOKUP_IJ[bits]
-        i += (bits >> (_LOOKUP_BITS + 2)) << (k * _LOOKUP_BITS)
-        j += ((bits >> 2) & ((1 << _LOOKUP_BITS) - 1)) << (k * _LOOKUP_BITS)
-        bits &= _SWAP_MASK | _INVERT_MASK
-    # center correction: cell center at (i,j) + half cell size
-    shift_arr = np.zeros(len(cid), dtype=np.uint64)
-    lsb_bitlen = np.zeros(len(cid), dtype=np.int64)
-    tmp = lsb.copy()
-    for b in range(61):
-        m = tmp > np.uint64(1)
-        if not m.any():
-            break
-        lsb_bitlen[m] += 1
-        tmp[m] >>= np.uint64(1)
-    level = _MAX_LEVEL - lsb_bitlen // 2
-    cell_size = np.int64(1) << (2 * (_MAX_LEVEL - level) // 2)
-    # i,j decoded above include sub-level bits from the trailing 1000.. pattern;
-    # zero them and add half cell
-    i = (i & ~(cell_size - 1)) + cell_size // 2
-    j = (j & ~(cell_size - 1)) + cell_size // 2
-    s = (i.astype(np.float64) + 0.5) / (1 << _MAX_LEVEL)
-    t = (j.astype(np.float64) + 0.5) / (1 << _MAX_LEVEL)
-    u = _uv_from_st(s)
-    v = _uv_from_st(t)
-    x = np.empty_like(u)
-    y = np.empty_like(u)
-    z = np.empty_like(u)
-    # exact inverse of the forward table in _face_uv
-    for f, fn in enumerate(
-        [
-            lambda u, v: (np.ones_like(u), u, v),
-            lambda u, v: (-u, np.ones_like(u), v),
-            lambda u, v: (-u, -v, np.ones_like(u)),
-            lambda u, v: (-np.ones_like(u), -v, -u),
-            lambda u, v: (v, -np.ones_like(u), -u),
-            lambda u, v: (v, -u, -np.ones_like(u)),
-        ]
-    ):
-        m = face == f
-        if m.any():
-            xx, yy, zz = fn(u[m], v[m])
-            x[m], y[m], z[m] = xx, yy, zz
-    lat = np.degrees(np.arctan2(z, np.sqrt(x * x + y * y)))
-    lon = np.degrees(np.arctan2(y, x))
-    return lat, lon
-
-
-def s2_parent(cell_id: np.ndarray, level: int) -> np.ndarray:
-    cid = np.asarray(cell_id).view(np.uint64)
-    lsb = np.uint64(1) << np.uint64(2 * (_MAX_LEVEL - level))
-    return ((cid & (~(lsb - np.uint64(1)) & np.uint64(0xFFFFFFFFFFFFFFFF))) | lsb).view(
-        np.int64
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -468,20 +389,6 @@ def hex_cell(lat: np.ndarray, lon: np.ndarray, res: int = 9) -> np.ndarray:
     return (np.int64(res) << np.int64(52)) | (qi << np.int64(26)) | ri
 
 
-def hex_cell_center(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Fallback-hex inverse (center lat/lon) — for ring geometry and tests."""
-    cell = np.asarray(cell, dtype=np.int64)
-    res = (cell >> np.int64(52)).astype(np.int64)
-    q = ((cell >> np.int64(26)) & np.int64((1 << 26) - 1)) - (1 << 25)
-    r = (cell & np.int64((1 << 26) - 1)) - (1 << 25)
-    size = np.array([_H3_EDGE_M[int(rr)] for rr in res])
-    x = size * 1.5 * q
-    y = size * (math.sqrt(3) / 2 * q + math.sqrt(3) * r)
-    lon = np.degrees(x / EARTH_RADIUS_M)
-    lat = np.degrees(2 * np.arctan(np.exp(y / EARTH_RADIUS_M)) - math.pi / 2)
-    return lat, lon
-
-
 def hex_ring(cell: int, k: int) -> list[int]:
     """All fallback-hex cells at exactly distance k (k=0 → [cell]) — the cell-ring
     primitive for expanding kNN."""
@@ -511,11 +418,13 @@ def hex_ring(cell: int, k: int) -> list[int]:
 # ---------------------------------------------------------------------------
 
 GEOHASH32 = "0123456789bcdefghjkmnpqrstuvwxyz"
+GEOHASH_PRECISION = 7  # characters; ~153 m x 153 m cells
 
 
-def _geohash_plan(precision: int):
+def _geohash_plan():
     """Shared bit plan: per character, the 5 (source, bit-from-msb) pairs.
     Global bit g (MSB-first) takes lon when g is even, lat when odd."""
+    precision = GEOHASH_PRECISION
     bits = 5 * precision
     lon_bits = (bits + 1) // 2
     lat_bits = bits // 2
@@ -532,13 +441,13 @@ def _geohash_plan(precision: int):
     return lon_bits, lat_bits, plan
 
 
-def geohash_col(lat: Column, lon: Column, precision: int = 7) -> Column:
+def geohash_col(lat: Column, lon: Column) -> Column:
     """Geohash as a whole-stage-codegen Column expression — no UDF, no Python:
     scale lat/lon to fixed-point ints, interleave bits (lon first, MSB-first),
     emit base32 characters via element_at on a literal char array. The DuckDB
     twin (:func:`geohash_sql`) re-derives the identical arithmetic, so the
     differential needs no truth file."""
-    lon_bits, lat_bits, plan = _geohash_plan(precision)
+    lon_bits, lat_bits, plan = _geohash_plan()
     lon_i = F.least(
         F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(1 << lon_bits))),
         F.lit((1 << lon_bits) - 1),
@@ -561,9 +470,9 @@ def geohash_col(lat: Column, lon: Column, precision: int = 7) -> Column:
     return F.concat(*out)
 
 
-def geohash_sql(lat_expr: str, lon_expr: str, precision: int = 7) -> str:
+def geohash_sql(lat_expr: str, lon_expr: str) -> str:
     """The identical arithmetic as an ANSI/DuckDB SQL expression."""
-    lon_bits, lat_bits, plan = _geohash_plan(precision)
+    lon_bits, lat_bits, plan = _geohash_plan()
     lon_i = (
         f"least(cast(floor(({lon_expr} + 180.0) / 360.0 * {float(1 << lon_bits)})"
         f" as bigint), {(1 << lon_bits) - 1})"
@@ -587,10 +496,11 @@ def geohash_sql(lat_expr: str, lon_expr: str, precision: int = 7) -> str:
 # Arrow-batched pandas UDF wrappers
 # ---------------------------------------------------------------------------
 
-def s2_cell_udf(level: int = 12):
+def s2_cell_udf():
+    """Arrow-batched :func:`s2_cell_id`."""
     @pandas_udf("long")
     def _f(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        return pd.Series(s2_cell_id(lat.to_numpy(), lon.to_numpy(), level))
+        return pd.Series(s2_cell_id(lat.to_numpy(), lon.to_numpy()))
 
     return _f
 

@@ -84,40 +84,6 @@ def radius_bbox(lat: float, lon: float, radius_m: float) -> tuple[float, float, 
 # point-in-polygon (ray casting, even-odd rule; lon=x, lat=y)
 # ---------------------------------------------------------------------------
 
-def point_in_ring(lat: float, lon: float, ring: np.ndarray) -> bool:
-    """Scalar reference implementation: ring is (n,2) array of (lat, lon), closed or
-    open (closure implied). Even-odd crossing rule; boundary behavior follows the
-    standard half-open convention."""
-    y, x = lat, lon
-    ys = ring[:, 0]
-    xs = ring[:, 1]
-    n = len(ring)
-    inside = False
-    j = n - 1
-    for i in range(n):
-        yi, xi = ys[i], xs[i]
-        yj, xj = ys[j], xs[j]
-        if (yi > y) != (yj > y) and x < (xj - xi) * (y - yi) / (yj - yi) + xi:
-            inside = not inside
-        j = i
-    return inside
-
-
-def points_in_ring(lats: np.ndarray, lons: np.ndarray, ring: np.ndarray) -> np.ndarray:
-    """Vectorized over points (one polygon): the kernel used by pandas-UDF PIP."""
-    y = np.asarray(lats, dtype=np.float64)[:, None]
-    x = np.asarray(lons, dtype=np.float64)[:, None]
-    yi = ring[None, :, 0]
-    xi = ring[None, :, 1]
-    yj = np.roll(ring[:, 0], 1)[None, :]
-    xj = np.roll(ring[:, 1], 1)[None, :]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        crosses = ((yi > y) != (yj > y)) & (
-            x < (xj - xi) * (y - yi) / (yj - yi) + xi
-        )
-    return (crosses.sum(axis=1) % 2).astype(bool)
-
-
 def pip_crossings_col(lat: Column, lon: Column, edges: Column) -> Column:
     """Pure-Catalyst ray cast: ``edges`` is ARRAY<STRUCT<y1,x1,y2,x2>> (lat=y,
     lon=x). Returns BOOLEAN inside. No Python in the join hot path, but no

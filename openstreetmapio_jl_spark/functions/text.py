@@ -171,19 +171,9 @@ def token_count_col(col: Column) -> Column:
     return F.regexp_count(col, F.lit(_TOKEN_PATTERN))
 
 
-def quality_score(text: str) -> float:
-    """Heuristic document quality in [0,1]: length band, alpha ratio, punct ratio,
-    mean word length band. Vectorized Column twin: :func:`quality_score_col`."""
-    n = len(text)
-    if n == 0:
-        return 0.0
-    alpha = sum(c.isalpha() for c in text) / n
-    punct = sum(c in ".,;:!?" for c in text) / n
-    length_band = min(n / 1000.0, 1.0)
-    return round(0.4 * alpha + 0.3 * length_band + 0.3 * (1.0 - min(punct * 10, 1.0)), 6)
-
-
 def quality_score_col(col: Column) -> Column:
+    """Heuristic document quality in [0,1]: alpha ratio, length band and
+    punctuation ratio, rounded to 6 places."""
     n = F.length(col)
     alpha = F.length(F.regexp_replace(col, r"[^\p{L}]", "")) / n
     punct = F.length(F.regexp_replace(col, r"[^.,;:!?]", "")) / n
@@ -196,19 +186,7 @@ def quality_score_col(col: Column) -> Column:
     return F.when(n == 0, F.lit(0.0)).otherwise(F.round(raw, 6))
 
 
-def fingerprint_col(col: Column) -> Column:
-    """Document fingerprint: md5 of whitespace-normalized lowercase text.
-
-    md5 is available in both Spark and DuckDB, so this is oracle-checkable and
-    stable across engines (unlike engine-native hash()).
-    """
-    normalized = F.lower(F.regexp_replace(F.trim(col), r"\s+", " "))
-    return F.md5(F.encode(normalized, "UTF-8"))
-
-
-def word_repetition_signals(
-    docs, *, id_col: str = "doc_id", text_col: str = "text"
-):
+def word_repetition_signals(docs):
     """→ (id, n_words, dup_word_frac, top_bigram, top_bigram_frac): the
     Gopher-style repetition quality signals a training-data pipeline filters
     on (Rae et al. 2021 §A1.1 "repetition removal" — fraction of duplicate
@@ -239,8 +217,8 @@ def word_repetition_signals(
     # only string (as [""]); the filter drops those rows and the left join
     # from the id base below restores such docs with n_words = 0
     w = docs.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("pos", "w"),
+        F.col("doc_id").alias("id"),
+        F.posexplode(F.split(F.trim(F.col("text")), r"\s+")).alias("pos", "w"),
     ).filter(F.col("w") != "")
     per_doc = Window.partitionBy("id").orderBy("pos")
     bg = w.withColumn("nxt", F.lead("w").over(per_doc)).filter(
@@ -257,9 +235,9 @@ def word_repetition_signals(
         F.count("*").alias("n_words"),
         F.countDistinct("w").alias("n_distinct"),
     )
-    base = docs.select(F.col(id_col).alias("id"))
+    base = docs.select(F.col("doc_id").alias("id"))
     return base.join(ww, "id", "left").join(top, "id", "left").select(
-        F.col("id").alias(id_col),
+        F.col("id").alias("doc_id"),
         F.coalesce(F.col("n_words"), F.lit(0).cast("long")).alias("n_words"),
         F.round(F.lit(1.0) - F.col("n_distinct") / F.col("n_words"), 6).alias(
             "dup_word_frac"
@@ -354,8 +332,6 @@ def chunk_documents(
     *,
     n_tokens: int = 128,
     overlap: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Split documents into fixed-size training chunks — the pack-into-
     context-windows stage of a training pipeline: whitespace tokens, chunks
@@ -376,7 +352,7 @@ def chunk_documents(
         )
     stride = n_tokens - overlap
     toks = F.filter(
-        F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != ""
+        F.split(F.trim(F.col("text")), r"\s+"), lambda t: t != ""
     )
     ln = F.size(toks)
     n_chunks = F.greatest(
@@ -388,7 +364,7 @@ def chunk_documents(
     )
     return (
         docs.select(
-            F.col(id_col).alias("id"),
+            F.col("doc_id").alias("id"),
             F.posexplode(chunks).alias("chunk_idx", "ctoks"),
         )
         .filter(F.size("ctoks") > 0)

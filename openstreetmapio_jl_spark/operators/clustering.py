@@ -80,8 +80,6 @@ def grid_core_cells(
     *,
     eps_deg: float = 1.0,
     min_pts: int = 3,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
 ) -> DataFrame:
     """→ ``(cell, n_pts, sum_lat7, sum_lon7)`` for CORE cells only (≥
     ``min_pts`` points). The one points-sized pass: a map-side-combined
@@ -91,7 +89,7 @@ def grid_core_cells(
     _check_eps(eps_deg)
     if min_pts < 1:
         raise ValueError(f"min_pts must be >= 1, got {min_pts}")
-    lat, lon = F.col(lat_col), F.col(lon_col)
+    lat, lon = F.col("lat"), F.col("lon")
     pts = points.filter(
         lat.isNotNull()
         & lon.isNotNull()
@@ -156,7 +154,6 @@ def core_cell_labels(
     core: DataFrame,
     *,
     algorithm: str = "auto",
-    max_iter: int = 30,
     local_threshold: int = LOCAL_CC_THRESHOLD,
 ) -> DataFrame:
     """→ ``(cell, cluster)``: every core cell labeled with the MIN cell key
@@ -194,7 +191,7 @@ def core_cell_labels(
         .join(cells.select(F.col("cell").alias("cell_b")), "cell_b")
     )
     labeled = connected_components(
-        edges, src="cell_a", dst="cell_b", algorithm=algorithm, max_iter=max_iter
+        edges, src="cell_a", dst="cell_b", algorithm=algorithm
     ).select(F.col("id").alias("cell"), F.col("component").alias("cluster"))
     singletons = cells.join(labeled.select("cell"), "cell", "left_anti").select(
         "cell", F.col("cell").alias("cluster")
@@ -207,10 +204,7 @@ def grid_clusters(
     *,
     eps_deg: float = 1.0,
     min_pts: int = 3,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
     algorithm: str = "auto",
-    max_iter: int = 30,
 ) -> DataFrame:
     """→ one row per cluster: ``(cluster_id, n_cells, n_points, avg_lat,
     avg_lon)`` — dense regions of the input points, cluster id = min member
@@ -218,9 +212,9 @@ def grid_clusters(
     (``round(sum/1e7/n, 6)`` — the only float ops after binning), so output
     is deterministic under any partitioning and any engine."""
     core = grid_core_cells(
-        points, eps_deg=eps_deg, min_pts=min_pts, lat_col=lat_col, lon_col=lon_col
+        points, eps_deg=eps_deg, min_pts=min_pts
     )
-    labels = core_cell_labels(core, algorithm=algorithm, max_iter=max_iter)
+    labels = core_cell_labels(core, algorithm=algorithm)
     return (
         core.join(labels, "cell")
         .groupBy(F.col("cluster").alias("cluster_id"))
@@ -249,20 +243,16 @@ def cluster_points(
     *,
     eps_deg: float = 1.0,
     min_pts: int = 3,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    algorithm: str = "auto",
-    max_iter: int = 30,
 ) -> DataFrame:
     """→ the input rows + a ``cluster`` column (min cell key of the dense
     region, NULL = noise: the point's cell is not core). The per-point cost
     is the cell-key expression + one key join against the (core-cells-sized)
     label table — the points are scanned once."""
     core = grid_core_cells(
-        points, eps_deg=eps_deg, min_pts=min_pts, lat_col=lat_col, lon_col=lon_col
+        points, eps_deg=eps_deg, min_pts=min_pts
     )
-    labels = core_cell_labels(core, algorithm=algorithm, max_iter=max_iter)
+    labels = core_cell_labels(core)
     keyed = points.withColumn(
-        "cell", cell_key_col(F.col(lat_col), F.col(lon_col), eps_deg)
+        "cell", cell_key_col(F.col("lat"), F.col("lon"), eps_deg)
     )
     return keyed.join(labels, "cell", "left").drop("cell")

@@ -103,7 +103,7 @@ def _band_sig(mh: list[Column], b: int, width: int) -> Column:
     )
 
 
-def _minhash_signatures(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def _minhash_signatures(docs: DataFrame, id_col: str) -> DataFrame:
     """→ (id, mh0, mh1, …): the batch MinHash signature of each doc.
 
     Explodes shingle POSITIONS (an int sequence) and slices inside the same
@@ -117,7 +117,7 @@ def _minhash_signatures(docs: DataFrame, id_col: str, text_col: str) -> DataFram
     explode→groupBy aggregates map-side, so the shuffle carries only
     NUM_HASHES longs per document."""
     sh = (
-        docs.select(F.col(id_col).alias("id"), normalized_text(F.col(text_col)).alias("t"))
+        docs.select(F.col(id_col).alias("id"), normalized_text(F.col("text")).alias("t"))
         .filter(F.length("t") >= SHINGLE_N)
         .select(
             "id",
@@ -183,21 +183,17 @@ def _verified_pairs(cand: DataFrame, texts: DataFrame, threshold: float) -> Data
 # operators
 # ---------------------------------------------------------------------------
 
-def exact_duplicates(
-    docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def exact_duplicates(docs: DataFrame) -> DataFrame:
     """→ (fp, n_docs, keep_id): one row per duplicate-group (n_docs >= 1), keeping
     the smallest id (deterministic survivor)."""
     return (
-        docs.select(F.col(id_col), fingerprint(F.col(text_col)).alias("fp"))
+        docs.select(F.col("doc_id"), fingerprint(F.col("text")).alias("fp"))
         .groupBy("fp")
-        .agg(F.count("*").alias("n_docs"), F.min(id_col).alias("keep_id"))
+        .agg(F.count("*").alias("n_docs"), F.min("doc_id").alias("keep_id"))
     )
 
 
-def minhash_lsh_buckets(
-    docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def minhash_lsh_buckets(docs: DataFrame) -> DataFrame:
     """→ (band_idx, band_sig, n_docs, min_id, max_id) for buckets with >= 2 docs —
     the LSH candidate-duplicate groups. Bands are md5 over ``BAND_SIZE``
     consecutive minhashes. At scale this is one explode + one groupBy shuffle keyed
@@ -225,8 +221,8 @@ def minhash_lsh_buckets(
     except Exception:  # non-file plans (streams, pure-local relations)
         n_files = 0
     if 0 < n_files < dp:
-        docs = docs.repartition(dp * 2, id_col)
-    bands = _band_rows(_minhash_signatures(docs, id_col, text_col), band_sig=BAND_SIZE)
+        docs = docs.repartition(dp * 2, "doc_id")
+    bands = _band_rows(_minhash_signatures(docs, "doc_id"), band_sig=BAND_SIZE)
     return (
         bands.groupBy("band_idx", "band_sig")
         .agg(
@@ -238,30 +234,34 @@ def minhash_lsh_buckets(
     )
 
 
-def simhash(docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text", bits: int = 32) -> DataFrame:
+SIMHASH_BITS = 32  # signature width
+SIMHASH_MAX_HAMMING = 3  # near-dup radius: 4 bands of 8 bits
+
+
+def simhash(docs: DataFrame) -> DataFrame:
     """→ (id, simhash): 32-bit SimHash. Token hash = first 8 hex digits of md5 →
     BIGINT; bit j of the signature is the sign of sum over tokens of ±1 on that
     bit. Near-dups have small Hamming distance. All-JVM: explode + 32 conditional
     sums + bit recombination."""
     toks = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), 0)
+            F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
         ).alias("tok"),
     ).withColumn("h", F.conv(F.substring(F.md5(F.col("tok")), 1, 8), 16, 10).cast("long"))
-    votes = toks.groupBy(id_col).agg(
+    votes = toks.groupBy("doc_id").agg(
         *[
             F.sum(
                 F.when(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
             ).alias(f"b{j}")
-            for j in range(bits)
+            for j in range(SIMHASH_BITS)
         ]
     )
     sig = None
-    for j in range(bits):
+    for j in range(SIMHASH_BITS):
         bit = F.when(F.col(f"b{j}") > 0, F.lit(2**j).cast("long")).otherwise(F.lit(0).cast("long"))
         sig = bit if sig is None else sig + bit
-    return votes.select(F.col(id_col), sig.alias("simhash"))
+    return votes.select(F.col("doc_id"), sig.alias("simhash"))
 
 
 def _cap_bucket_df(
@@ -314,9 +314,7 @@ def _cap_bucket_df(
     return m.join(cold, [*keys, "_piece"])
 
 
-def minhash_band_memberships(
-    docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def minhash_band_memberships(docs: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
     """→ (id, band_idx, band_sig, sub_sig): one row per (doc, LSH band).
 
     ``band_sig`` is md5 over the band's ``BAND_SIZE`` consecutive minhashes —
@@ -329,7 +327,7 @@ def minhash_band_memberships(
     Shared by :func:`jaccard_via_lsh` (self-join corpus dedup) and the
     incremental path (:func:`build_dedup_index` persists exactly these rows)."""
     return _band_rows(
-        _minhash_signatures(docs, id_col, text_col),
+        _minhash_signatures(docs, id_col),
         band_sig=BAND_SIZE,
         sub_sig=2 * BAND_SIZE,
     )
@@ -339,7 +337,6 @@ def jaccard_via_lsh(
     docs: DataFrame,
     *,
     id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.5,
     max_bucket_df: int | None = None,
 ) -> DataFrame:
@@ -360,7 +357,7 @@ def jaccard_via_lsh(
     see :func:`_cap_bucket_df`. Without the guard one degenerate bucket
     produces O(n²) pairs at corpus scale."""
     bands = _cap_bucket_df(
-        minhash_band_memberships(docs, id_col=id_col, text_col=text_col),
+        minhash_band_memberships(docs, id_col=id_col),
         ["band_idx", "band_sig"],
         max_bucket_df,
         sub_col="sub_sig",
@@ -377,25 +374,21 @@ def jaccard_via_lsh(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    texts = docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
+    texts = docs.select(F.col(id_col).alias("id"), F.col("text"))
     return _verified_pairs(cand, texts, threshold)
 
 
 def simhash_neardup_pairs(
     docs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    bits: int = 32,
     max_bucket_df: int | None = None,
 ) -> DataFrame:
     """→ (id_a, id_b, hamming) for pairs with SimHash Hamming distance ≤
-    ``max_hamming`` (id_a < id_b).
+    ``SIMHASH_MAX_HAMMING`` (id_a < id_b).
 
-    Candidate generation by the pigeonhole banding trick: the ``bits``-bit
-    signature splits into ``max_hamming + 1`` bands — two signatures within
-    distance ``max_hamming`` MUST agree exactly on at least one band, so
+    Candidate generation by the pigeonhole banding trick: the 32-bit
+    signature splits into ``SIMHASH_MAX_HAMMING + 1`` bands — two signatures
+    within that distance MUST agree exactly on at least one band, so
     candidates are the union of per-band equi-join buckets (never all-pairs).
     Exact verify = ``bit_count(xor)`` on the full signature; a pair matching in
     several bands is deduped by grouping before the verify.
@@ -407,11 +400,9 @@ def simhash_neardup_pairs(
     hot-bucket pair must then agree on two adjacent bands (≥ 2·band_bits
     matching bits) — diverse hot buckets scatter, near-identical pairs stay;
     pieces still over cap (identical signatures) are dropped."""
-    n_bands = max_hamming + 1
-    band_bits = bits // n_bands
-    sig = simhash(docs, id_col=id_col, text_col=text_col, bits=bits).select(
-        F.col(id_col).alias("id"), "simhash"
-    )
+    n_bands = SIMHASH_MAX_HAMMING + 1
+    band_bits = SIMHASH_BITS // n_bands
+    sig = simhash(docs).select(F.col("doc_id").alias("id"), "simhash")
 
     def _band_val(b: int) -> Column:
         return F.shiftright(F.col("simhash"), (b % n_bands) * band_bits).bitwiseAND(
@@ -460,7 +451,7 @@ def simhash_neardup_pairs(
             "hamming",
             F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).cast("int"),
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .select("id_a", "id_b", "hamming")
     )
 
@@ -468,8 +459,6 @@ def simhash_neardup_pairs(
 def ngram_jaccard_pairs(
     docs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.5,
     max_shingle_df: int | None = None,
 ) -> DataFrame:
@@ -487,8 +476,8 @@ def ngram_jaccard_pairs(
     over the filtered sets (a documented stopword-shingle semantics, applied
     identically in the DuckDB oracle). ``None`` disables the guard."""
     sh = docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(char_shingles(F.col(text_col)))).alias("s"),
+        F.col("doc_id").alias("id"),
+        F.explode(F.array_distinct(char_shingles(F.col("text")))).alias("s"),
     )
     if max_shingle_df is not None:
         # One extra groupBy on the shingle key; the join back is on the same key
@@ -552,7 +541,6 @@ def build_dedup_index(
     table_prefix: str = "dedup_idx",
     n_buckets: int = 16,
     id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> None:
     """Persist a corpus's MinHash signature INDEX as bucketed tables so that
     incoming batches dedup against it WITHOUT rescanning the corpus
@@ -596,7 +584,7 @@ def build_dedup_index(
         loc = os.path.join(warehouse, name)
         if os.path.isdir(loc):
             shutil.rmtree(loc, ignore_errors=True)
-    m = minhash_band_memberships(corpus_docs, id_col=id_col, text_col=text_col)
+    m = minhash_band_memberships(corpus_docs, id_col=id_col)
     (
         m.write.mode("overwrite")
         .bucketBy(n_buckets, "band_sig")
@@ -617,7 +605,7 @@ def build_dedup_index(
         .saveAsTable(f"{table_prefix}_bucket_stats")
     )
     (
-        corpus_docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
+        corpus_docs.select(F.col(id_col).alias("id"), F.col("text"))
         .write.mode("overwrite")
         .bucketBy(n_buckets, "id")
         .sortBy("id")
@@ -637,7 +625,6 @@ def extend_dedup_index(
     table_prefix: str = "dedup_idx",
     n_buckets: int = 16,
     id_col: str = "doc_id",
-    text_col: str = "text",
     batch_key: str | None = None,
 ) -> str:
     """Append a processed batch to an existing signature index — the
@@ -681,7 +668,7 @@ def extend_dedup_index(
     # append) and the stats aggregate below reuses the checkpoint instead of
     # recomputing the minhash pass over the batch text
     m = minhash_band_memberships(
-        docs, id_col=id_col, text_col=text_col
+        docs, id_col=id_col
     ).localCheckpoint(eager=False)
     (
         m.write.mode("append")
@@ -691,7 +678,7 @@ def extend_dedup_index(
         .saveAsTable(f"{table_prefix}_memberships")
     )
     (
-        docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
+        docs.select(F.col(id_col).alias("id"), F.col("text"))
         .write.mode("append")
         .bucketBy(n_buckets, "id")
         .sortBy("id")
@@ -732,7 +719,6 @@ def incremental_candidate_pairs(
     *,
     table_prefix: str = "dedup_idx",
     id_col: str = "doc_id",
-    text_col: str = "text",
     max_bucket_df: int | None = None,
 ) -> DataFrame:
     """→ (id_a, id_b): LSH candidate pairs of an incoming batch vs the
@@ -751,7 +737,7 @@ def incremental_candidate_pairs(
         "band_idx", "band_sig", "sub_sig", "cnt"
     )
     new_m = minhash_band_memberships(
-        new_docs, id_col=id_col, text_col=text_col
+        new_docs, id_col=id_col
     ).localCheckpoint(eager=False)
 
     bkeys = ["band_idx", "band_sig"]
@@ -833,7 +819,6 @@ def incremental_dedup_pairs(
     *,
     table_prefix: str = "dedup_idx",
     id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.5,
     max_bucket_df: int | None = None,
     in_pushdown_limit: int = 100_000,
@@ -866,7 +851,6 @@ def incremental_dedup_pairs(
         new_docs,
         table_prefix=table_prefix,
         id_col=id_col,
-        text_col=text_col,
         max_bucket_df=max_bucket_df,
     ).localCheckpoint(eager=True)  # reused for the id fetch + verify join
     # exact verify over CANDIDATE texts only. Candidate ids are collected and
@@ -905,7 +889,7 @@ def incremental_dedup_pairs(
     # (candidate-bounded) fetch so the verify join emits one row per pair
     old_texts = old_texts.dropDuplicates(["id"])
     texts = old_texts.unionByName(
-        new_docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
+        new_docs.select(F.col(id_col).alias("id"), F.col("text"))
     )
     return _verified_pairs(cand, texts, threshold)
 
@@ -914,10 +898,9 @@ def incremental_cluster_losers(
     pairs: DataFrame,
     batch_ids: DataFrame,
     *,
-    id_col: str = "url",
     handles: list | None = None,
 ) -> DataFrame:
-    """→ single-column (``id_col``) frame of BATCH members to drop, given the
+    """→ single-column (``url``) frame of BATCH members to drop, given the
     batch-touching near-dup ``pairs`` (id_a, id_b — from
     :func:`incremental_dedup_pairs`, so every pair has ≥ 1 batch endpoint) and
     the batch's id set (one column named ``id``).
@@ -951,7 +934,7 @@ def incremental_cluster_losers(
         .filter(
             F.col("_poisoned").isNotNull() | (F.col("id") != F.col("component"))
         )
-        .select(F.col("id").alias(id_col))
+        .select(F.col("id").alias("url"))
         .distinct()
     )
 
@@ -959,8 +942,6 @@ def incremental_cluster_losers(
 def duplicate_clusters(
     docs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.5,
     max_bucket_df: int | None = None,
     handles: list | None = None,
@@ -983,8 +964,6 @@ def duplicate_clusters(
 
     pairs = jaccard_via_lsh(
         docs,
-        id_col=id_col,
-        text_col=text_col,
         threshold=threshold,
         max_bucket_df=max_bucket_df,
     )
@@ -998,13 +977,14 @@ def duplicate_clusters(
 # chunk-level (CCNet-style) boilerplate dedup
 # ---------------------------------------------------------------------------
 
+BOILER_DOC_THRESHOLD = 2  # a chunk in >= 2 distinct documents is boilerplate
+
+
 def chunk_dedup(
     docs: DataFrame,
     *,
     id_col: str = "doc_id",
-    text_col: str = "text",
     words_per_chunk: int = 8,
-    boiler_doc_threshold: int = 2,
     emit_text: bool = False,
 ) -> DataFrame:
     """CCNet-style chunk-level dedup: drop chunks shared across documents.
@@ -1018,7 +998,7 @@ def chunk_dedup(
     ``\\s+``-tokenized text (the fixture corpus is single-line; a newline
     corpus would split on ``\\n`` instead — same pipeline).
 
-    A chunk is boilerplate when its md5 appears in ``>= boiler_doc_threshold``
+    A chunk is boilerplate when its md5 appears in ``>= BOILER_DOC_THRESHOLD``
     DISTINCT documents. Returns one row per input document, always:
     ``(id, n_chunks, n_boiler, clean_hash)`` where ``clean_hash`` is the md5 of
     the surviving chunks rejoined in original order (md5('') when everything —
@@ -1035,7 +1015,7 @@ def chunk_dedup(
     corpus, no driver collect — the same shape CCNet runs sharded over 30 TB.
     """
     w = F.lit(words_per_chunk)
-    words = word_tokens(F.col(text_col))  # the ONE corpus tokenization rule
+    words = word_tokens(F.col("text"))  # the ONE corpus tokenization rule
     n_chunks = F.ceil(F.size("words") / w).cast("int")
     wdf = docs.select(F.col(id_col).alias("id"), words.alias("words"))
     # Explode chunk POSITIONS (an int sequence) and slice AFTER the explode —
@@ -1067,7 +1047,7 @@ def chunk_dedup(
     )
     freq = ex.groupBy("h").agg(F.countDistinct("id").alias("ndocs"))
     joined = ex.join(freq, "h")
-    boiler = F.col("ndocs") >= boiler_doc_threshold
+    boiler = F.col("ndocs") >= BOILER_DOC_THRESHOLD
     agg = joined.groupBy("id").agg(
         F.count("*").cast("long").alias("n_chunks"),
         F.sum(F.when(boiler, 1).otherwise(0)).cast("long").alias("n_boiler"),
@@ -1097,41 +1077,36 @@ def chunk_dedup(
 def chunk_clean(
     docs: DataFrame,
     *,
-    id_col: str = "url",
-    text_col: str = "text",
     words_per_chunk: int = 8,
-    boiler_doc_threshold: int = 2,
 ) -> DataFrame:
-    """Pipeline form of :func:`chunk_dedup`: rewrite ``text_col`` to its
+    """Pipeline form of :func:`chunk_dedup`: rewrite ``text`` to its
     chunk-deduped remainder and DROP documents that were pure boilerplate.
 
     Returns the input frame with the SAME schema (all other columns pass
     through untouched) — documents whose every chunk repeats corpus-wide
     (exact clones, pure site chrome) are removed entirely; the rest keep the
     surviving chunks in original order. The join back to the input is a
-    single equi-join on ``id_col``, so the stage composes with the corpus
+    single equi-join on ``url``, so the stage composes with the corpus
     pipeline's later quality/geocode stages without reshaping anything.
 
-    Requires ``id_col`` values to be unique (the corpus pipeline runs this
+    Requires ``url`` values to be unique (the corpus pipeline runs this
     AFTER exact dedup, whose survivor rule guarantees url uniqueness).
     """
     cleaned = chunk_dedup(
         docs,
-        id_col=id_col,
-        text_col=text_col,
+        id_col="url",
         words_per_chunk=words_per_chunk,
-        boiler_doc_threshold=boiler_doc_threshold,
         emit_text=True,
-    ).select(id_col, "n_chunks", "clean_text")
+    ).select("url", "n_chunks", "clean_text")
     # drop ONLY true boilerplate (had chunks, none survived); an empty /
     # whitespace-only doc has NO chunks, shares nothing with anything, and
     # passes through (text rewritten to '') to reach the same downstream
     # quality gate it reaches with this stage disabled
     keep = (F.col("clean_text") != "") | (F.col("n_chunks") == 0)
     out = (
-        docs.drop(text_col)
-        .join(cleaned.filter(keep).drop("n_chunks"), id_col)
-        .withColumnRenamed("clean_text", text_col)
+        docs.drop("text")
+        .join(cleaned.filter(keep).drop("n_chunks"), "url")
+        .withColumnRenamed("clean_text", "text")
     )
     return out.select(*docs.columns)  # original column order preserved
 
@@ -1150,8 +1125,6 @@ def contamination_stats(
     corpus: DataFrame,
     benchmark: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     ngram_words: int = 8,
 ) -> DataFrame:
     """Train/test decontamination: per-corpus-document overlap with a
@@ -1188,10 +1161,10 @@ def contamination_stats(
         F.encode(F.array_join(F.slice(F.col("words"), F.col("i"), n), " "), "UTF-8")
     )
     wdf = corpus.select(
-        F.col(id_col).alias("id"), word_tokens(F.col(text_col)).alias("words")
+        F.col("doc_id").alias("id"), word_tokens(F.col("text")).alias("words")
     )
     bench = (
-        benchmark.select(word_tokens(F.col(text_col)).alias("words"))
+        benchmark.select(word_tokens(F.col("text")).alias("words"))
         .select(F.explode(positions).alias("i"), "words")
         .select(gram_md5.alias("g"))
         .distinct()
@@ -1208,7 +1181,7 @@ def contamination_stats(
         "id", F.greatest(n_grams, F.lit(0)).cast("long").alias("n_grams")
     )
     return totals.join(hits, "id", "left").select(
-        F.col("id").alias(id_col),
+        F.col("id").alias("doc_id"),
         "n_grams",
         F.coalesce(F.col("n_contaminated"), F.lit(0)).cast("long").alias(
             "n_contaminated"

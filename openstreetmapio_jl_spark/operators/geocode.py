@@ -10,41 +10,41 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from openstreetmapio_jl_spark.functions import text as textfn
 from openstreetmapio_jl_spark.functions.cells import xyz_tile_key_col
 
 GEO_RE = r"geo:(-?[0-9]+\.[0-9]+),(-?[0-9]+\.[0-9]+)"
 
 
-def _geocoded(pages: DataFrame, text_col: str, mentions: Column) -> DataFrame:
+def _geocoded(pages: DataFrame, mentions: Column) -> DataFrame:
     """One row per element of ``mentions`` (an array of ``geo:<lat>,<lon>``
     strings) with its (lat, lon); out-of-range coordinates drop.
 
-    The mentions are exploded by a Generate, so the range filter, which reads
-    the generator's output, cannot be pushed below it: the regex inside
-    ``mentions`` runs once per row. With a plain ``regexp_extract`` alias the
-    optimizer inlines the regex into every predicate (6 ``Matcher.find`` calls
-    per row in the generated code instead of 1)."""
-    parts = F.split(F.substring(F.col("_m"), 5, 2_147_483_647), ",")
+    Both the mentions and each mention's parsed ``[lat, lon]`` come out of a
+    Generate, and the range filter, which reads a generator's output, cannot
+    be pushed below it: the regex inside ``mentions`` and the split + cast of
+    a mention run once per row. With plain aliases the optimizer inlines them
+    into every range predicate (6 ``Matcher.find`` calls per row in the
+    generated code for a ``regexp_extract`` alias; 5 ``split`` calls for the
+    ``lat``/``lon`` projection)."""
+    # each "_m" is "geo:<lat>,<lon>": one split, no second regex pass
+    lat_lon = F.split(F.substring(F.col("_m"), 5, 2_147_483_647), ",").cast("array<double>")
     return (
-        pages.filter(F.col(text_col).contains("geo:"))
+        pages.filter(F.col("text").contains("geo:"))
         .withColumn("_m", F.explode(mentions))
-        # each "_m" is "geo:<lat>,<lon>": one split, no second regex pass
-        .withColumns({
-            "lat": F.element_at(parts, 1).cast("double"),
-            "lon": F.element_at(parts, 2).cast("double"),
-        })
-        .drop("_m")
+        .withColumn("_p", F.explode(F.array(lat_lon)))
+        .withColumns({"lat": F.element_at("_p", 1), "lon": F.element_at("_p", 2)})
+        .drop("_m", "_p")
         .filter(F.col("lat").between(-90.0, 90.0) & F.col("lon").between(-180.0, 180.0))
     )
 
 
-def _mentions(text_col: str) -> Column:
-    return F.regexp_extract_all(F.col(text_col), F.lit(GEO_RE), F.lit(0))
+def _mentions() -> Column:
+    return F.regexp_extract_all(F.col("text"), F.lit(GEO_RE), F.lit(0))
 
 
-def extract_geocodes(pages: DataFrame, *, text_col: str = "text") -> DataFrame:
-    """pages → + (lat, lon) for rows with a geo mention (others dropped).
+def extract_geocodes(pages: DataFrame) -> DataFrame:
+    """pages → + (lat, lon) for rows with a geo mention in ``text`` (others
+    dropped).
     FIRST mention per page; :func:`extract_geocodes_multi` keeps one row per
     mention when multi-place multiplicity is wanted. A page whose first
     mention is out of range drops, even if a later mention is valid.
@@ -53,10 +53,10 @@ def extract_geocodes(pages: DataFrame, *, text_col: str = "text") -> DataFrame:
     regex (on a real web corpus most pages carry no geo mention at all), and the
     regex runs ONCE per surviving row (see :func:`_geocoded`) — at 10^12
     documents the regex is the dominant cost of this stage."""
-    return _geocoded(pages, text_col, F.slice(_mentions(text_col), 1, 1))
+    return _geocoded(pages, F.slice(_mentions(), 1, 1))
 
 
-def extract_geocodes_multi(pages: DataFrame, *, text_col: str = "text") -> DataFrame:
+def extract_geocodes_multi(pages: DataFrame) -> DataFrame:
     """pages → one row PER geo mention: a page citing several places yields
     one (lat, lon) row for each, so downstream containment joins hit EVERY
     polygon any mention falls in — the multiplicity the reference's per-element
@@ -71,7 +71,7 @@ def extract_geocodes_multi(pages: DataFrame, *, text_col: str = "text") -> DataF
     output (original page columns + lat, lon) — dedup of repeated identical
     mentions within one page is deliberately NOT applied (multiplicity is the
     contract; wrap with ``.distinct()`` when one-hit-per-place is wanted)."""
-    return _geocoded(pages, text_col, _mentions(text_col))
+    return _geocoded(pages, _mentions())
 
 
 def pages_with_cells(pages: DataFrame, *, zoom: int = 13) -> DataFrame:
@@ -82,11 +82,3 @@ def pages_with_cells(pages: DataFrame, *, zoom: int = 13) -> DataFrame:
     return geocoded.withColumn(
         "tile", xyz_tile_key_col(F.col("lat"), F.col("lon"), zoom)
     )
-
-
-def verify_text_invariant(pages: DataFrame) -> DataFrame:
-    """Per-row invariant (input_hint): stored ``text`` must equal the engine's
-    deterministic extraction of ``html`` byte-for-byte. Returns violating rows
-    (empty = pass)."""
-    recomputed = textfn.extract_text_col(F.decode(F.col("html"), "UTF-8"))
-    return pages.filter(F.col("text") != recomputed).select("url")

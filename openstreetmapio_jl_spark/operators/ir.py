@@ -53,6 +53,11 @@ from pyspark.sql import functions as F
 
 from openstreetmapio_jl_spark.functions.exact import exact_decimal, exact_double
 
+# Okapi BM25 tf saturation (k1) and document-length normalization (b), the
+# usual defaults. The registry's DuckDB oracles embed the same values.
+BM25_K1 = 1.2
+BM25_B = 0.75
+
 
 def ir_tokens(col: Column) -> Column:
     """ARRAY<STRING> of lowercase alphanumeric tokens — the IR tokenizer
@@ -64,9 +69,7 @@ def ir_tokens(col: Column) -> Column:
     )
 
 
-def term_stats(
-    docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
-) -> tuple[DataFrame, DataFrame]:
+def term_stats(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """The shared (tf, totals) aggregate pair every IR consumer builds on:
     ``tf`` = one row per (doc, term) with its in-doc count and the doc's
     token length ``dl``; ``totals`` = ONE row (n_docs, avgdl) over the whole
@@ -74,7 +77,7 @@ def term_stats(
     ones). Per-term document frequency is a plain COUNT over ``tf`` (the
     heavy distinct already happened in the tf aggregate)."""
     toks = docs.select(
-        F.col(id_col).alias("id"), ir_tokens(F.col(text_col)).alias("toks")
+        F.col("doc_id").alias("id"), ir_tokens(F.col("text")).alias("toks")
     )
     totals = toks.agg(
         F.count("*").alias("n_docs"),
@@ -102,7 +105,7 @@ def term_stats(
     return tf, totals
 
 
-def _score_expr(scoring: str, k1: float, b: float) -> Column:
+def _score_expr(scoring: str) -> Column:
     """Scoring arithmetic over the (tf, df, n_docs, dl, avgdl) columns —
     shared by ranked_terms and the search path so the formulas cannot
     drift."""
@@ -116,8 +119,11 @@ def _score_expr(scoring: str, k1: float, b: float) -> Column:
         )
         return idf * (
             F.col("tf")
-            * (k1 + 1.0)
-            / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl")))
+            * (BM25_K1 + 1.0)
+            / (
+                F.col("tf")
+                + BM25_K1 * (1.0 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
+            )
         )
     raise ValueError(f"unknown scoring {scoring!r}")
 
@@ -125,19 +131,15 @@ def _score_expr(scoring: str, k1: float, b: float) -> Column:
 def ranked_terms(
     docs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     top_k: int = 3,
     scoring: str = "tfidf",
-    k1: float = 1.2,
-    b: float = 0.75,
     round_dp: int | None = None,
 ) -> DataFrame:
     """→ ``(id, pos, term, score)``: the ``top_k`` highest-scoring terms per
     document under ``scoring`` ("tfidf" or "bm25"). ``pos`` is the 1-based
     rank; ties break on the term string ascending so the result is fully
     deterministic. Documents with no tokens produce no rows (there is nothing
-    to rank). ``docs`` rows must be unique by ``id_col`` (corpus tables are;
+    to rank). ``docs`` rows must be unique by ``doc_id`` (corpus tables are;
     N and avgdl are computed over rows).
 
     With ``round_dp`` set, the score is rounded to that many decimals and
@@ -150,10 +152,10 @@ def ranked_terms(
     and is returned (the library default)."""
     if scoring not in ("tfidf", "bm25"):
         raise ValueError(f"unknown scoring {scoring!r}")
-    tf, totals = term_stats(docs, id_col=id_col, text_col=text_col)
+    tf, totals = term_stats(docs)
     df_ = tf.groupBy("term").agg(F.count("*").alias("df"))
     scored = tf.join(df_, "term").crossJoin(F.broadcast(totals))
-    score = _score_expr(scoring, k1, b)
+    score = _score_expr(scoring)
     out = F.col("score")
     if round_dp is not None:
         score = exact_decimal(score, round_dp)
@@ -181,8 +183,6 @@ def _bm25_rank(
     totals: DataFrame,
     *,
     top_n: int,
-    k1: float,
-    b: float,
     round_dp: int | None,
 ) -> DataFrame:
     """Shared scoring tail of both search paths: per-(doc, term) BM25 over
@@ -193,7 +193,7 @@ def _bm25_rank(
     double sum would depend on addition order. The returned score is that
     exact total as a double."""
     scored = hits.join(F.broadcast(df_), "term").crossJoin(F.broadcast(totals))
-    score = _score_expr("bm25", k1, b)
+    score = _score_expr("bm25")
     out = F.col("score")
     if round_dp is not None:
         score = exact_decimal(score, round_dp)
@@ -220,11 +220,7 @@ def search_bm25(
     docs: DataFrame,
     query: str,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     top_n: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
     round_dp: int | None = None,
 ) -> DataFrame:
     """→ ``(rank, id, score, n_terms)``: the ``top_n`` documents by summed
@@ -241,11 +237,11 @@ def search_bm25(
     terms = query_terms(query)
     if not terms:
         raise ValueError("query has no tokens")
-    tf, totals = term_stats(docs, id_col=id_col, text_col=text_col)
+    tf, totals = term_stats(docs)
     hits = tf.filter(F.col("term").isin(terms))
     df_ = hits.groupBy("term").agg(F.count("*").alias("df"))
     return _bm25_rank(
-        hits, df_, totals, top_n=top_n, k1=k1, b=b, round_dp=round_dp
+        hits, df_, totals, top_n=top_n, round_dp=round_dp
     )
 
 
@@ -254,8 +250,6 @@ def build_term_index(
     docs: DataFrame,
     table_prefix: str,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_buckets: int = 16,
 ) -> dict:
     """Persist the inverted index three ways (the ``build_dedup_index``
@@ -287,7 +281,7 @@ def build_term_index(
         loc = os.path.join(warehouse, name)
         if os.path.isdir(loc):
             shutil.rmtree(loc, ignore_errors=True)
-    tf, totals = term_stats(docs, id_col=id_col, text_col=text_col)
+    tf, totals = term_stats(docs)
     (
         tf.select("term", "id", "tf", "dl")
         .write.format("parquet")
@@ -326,9 +320,6 @@ def search_bm25_indexed(
     table_prefix: str,
     query: str,
     *,
-    top_n: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
     round_dp: int | None = None,
 ) -> DataFrame:
     """Index-backed twin of ``search_bm25``: probes ``<prefix>_postings`` /
@@ -345,5 +336,5 @@ def search_bm25_indexed(
     df_ = spark.table(f"{table_prefix}_df").filter(F.col("term").isin(terms))
     totals = spark.table(f"{table_prefix}_totals")
     return _bm25_rank(
-        hits, df_, totals, top_n=top_n, k1=k1, b=b, round_dp=round_dp
+        hits, df_, totals, top_n=10, round_dp=round_dp
     )

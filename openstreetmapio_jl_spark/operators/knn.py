@@ -60,12 +60,7 @@ def knn_join(
     k: int,
     *,
     zoom: int = 12,
-    query_id: str = "query_id",
-    corpus_id: str = "id",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
     max_rounds: int = 5,
-    broadcast_queries: bool = False,
     handles: list | None = None,
 ) -> DataFrame:
     """→ (query columns…, neighbor_id, dist_m, rank) with rank ∈ [1, k].
@@ -86,11 +81,11 @@ def knn_join(
     2×|queries| REGARDLESS of round count — flat in bytes, O(rounds) only in
     handle count, and ``max_rounds`` is small by construction (the ring radius
     doubles per round)."""
-    q_lat, q_lon = F.col(f"q.{lat_col}"), F.col(f"q.{lon_col}")
+    q_lat, q_lon = F.col("q.lat"), F.col("q.lon")
     c = corpus.select(
-        F.col(corpus_id).alias("neighbor_id"),
-        F.col(lat_col).alias("c_lat"),
-        F.col(lon_col).alias("c_lon"),
+        F.col("id").alias("neighbor_id"),
+        F.col("lat").alias("c_lat"),
+        F.col("lon").alias("c_lon"),
     ).withColumn("tile", xyz_tile_key_col(F.col("c_lat"), F.col("c_lon"), zoom))
     c = c.persist()
     if handles is not None:
@@ -108,17 +103,17 @@ def knn_join(
             .join(c, "tile", "inner")
             .withColumn("dist_m", geo.haversine_m_col(q_lat, q_lon, F.col("c_lat"), F.col("c_lon")))
         )
-        w = Window.partitionBy(f"q.{query_id}").orderBy("dist_m", "neighbor_id")
+        w = Window.partitionBy("q.query_id").orderBy("dist_m", "neighbor_id")
         topk = (
             cand.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .withColumn(
                 "n_found",
-                F.count("*").over(Window.partitionBy(f"q.{query_id}")),
+                F.count("*").over(Window.partitionBy("q.query_id")),
             )
             .withColumn(
                 "kth_dist",
-                F.max("dist_m").over(Window.partitionBy(f"q.{query_id}")),
+                F.max("dist_m").over(Window.partitionBy("q.query_id")),
             )
             .withColumn(
                 "resolved",
@@ -130,13 +125,13 @@ def knn_join(
             "tile", "c_lat", "c_lon", "n_found", "kth_dist"
         )
         resolved_parts.append(done)
-        done_ids = topk.filter(F.col("resolved")).select(f"q.{query_id}").distinct()
+        done_ids = topk.filter(F.col("resolved")).select("q.query_id").distinct()
         # persist each round's survivor set: the isEmpty() action below (and every
         # later round, and the final union) would otherwise re-execute the whole
         # accumulated join lineage — including the caller's upstream plan (e.g. a
         # PBF decode) — once per round. Kept persisted until the caller is done
         # (see docstring: mid-run unpersist triggers recacheByPlan re-execution).
-        remaining = remaining.join(done_ids, query_id, "left_anti").persist()
+        remaining = remaining.join(done_ids, "query_id", "left_anti").persist()
         if handles is not None:
             handles.append(remaining)
         if remaining.isEmpty():
@@ -154,7 +149,7 @@ def knn_join(
                 geo.haversine_m_col(q_lat, q_lon, F.col("c_lat"), F.col("c_lon")),
             )
         )
-        w = Window.partitionBy(f"q.{query_id}").orderBy("dist_m", "neighbor_id")
+        w = Window.partitionBy("q.query_id").orderBy("dist_m", "neighbor_id")
         resolved_parts.append(
             cand.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
@@ -169,6 +164,7 @@ def knn_join(
 
 IDW_W_SCALE = 1e12  # weight scaling before the per-term DECIMAL rounding
 IDW_DP = 6  # decimals of each weight term and of the estimate
+IDW_K = 3  # neighbors per estimate
 
 
 def idw_interpolate(
@@ -176,12 +172,8 @@ def idw_interpolate(
     corpus: DataFrame,
     *,
     value_col: str,
-    k: int = 3,
     power: int = 2,
     eps_m: float = 1.0,
-    zoom: int = 12,
-    query_id: str = "query_id",
-    corpus_id: str = "id",
     max_rounds: int = 5,
     handles: list | None = None,
 ) -> DataFrame:
@@ -222,18 +214,9 @@ def idw_interpolate(
         raise ValueError(f"power must be an integer in [1, 4], got {power}")
     if eps_m <= 0:
         raise ValueError(f"eps_m must be > 0, got {eps_m}")
-    nn = knn_join(
-        queries,
-        corpus,
-        k,
-        zoom=zoom,
-        query_id=query_id,
-        corpus_id=corpus_id,
-        max_rounds=max_rounds,
-        handles=handles,
-    )
+    nn = knn_join(queries, corpus, IDW_K, max_rounds=max_rounds, handles=handles)
     vals = corpus.select(
-        F.col(corpus_id).alias("neighbor_id"),
+        F.col("id").alias("neighbor_id"),
         F.col(value_col).cast("double").alias("_v"),
     )
     d = F.round(F.col("dist_m"), 0).cast("long").cast("double") + F.lit(
@@ -246,12 +229,12 @@ def idw_interpolate(
     # 38-digit sum terms: an S-scaled weight at 6 dp can exceed 18 digits
     dec = f"decimal(38,{IDW_DP})"
     joined = nn.join(vals, "neighbor_id").select(
-        query_id,
+        "query_id",
         F.round(w, IDW_DP).cast(dec).alias("_w"),
         F.round(w * F.col("_v"), IDW_DP).cast(dec).alias("_wv"),
     )
     est = F.sum("_wv").cast("double") / F.sum("_w").cast("double")
-    return joined.groupBy(query_id).agg(
+    return joined.groupBy("query_id").agg(
         F.count("*").cast("int").alias("n_neighbors"),
         exact_double(est, IDW_DP).alias("est"),
     )

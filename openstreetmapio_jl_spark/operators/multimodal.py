@@ -54,7 +54,7 @@ def _decode_media_payload(payload: bytes) -> tuple[str, int, int, int] | None:
     return kind, int(m.group(2)), int(m.group(3)), int(m.group(4))
 
 
-def extract_media_metadata(df: DataFrame, *, payload_col: str = "payload") -> DataFrame:
+def extract_media_metadata(df: DataFrame) -> DataFrame:
     """+ ``meta STRUCT<kind,width,height,n_frames,byte_len,sha1>`` (null when the
     payload doesn't decode). Arrow-batched mapInPandas; all other columns pass
     through unchanged."""
@@ -68,7 +68,7 @@ def extract_media_metadata(df: DataFrame, *, payload_col: str = "payload") -> Da
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             metas = []
-            for payload in pdf[payload_col]:
+            for payload in pdf["payload"]:
                 raw = bytes(payload) if payload is not None else b""
                 dec = _decode_media_payload(raw)
                 if dec is None:
@@ -96,8 +96,6 @@ def resize_images(
     df: DataFrame,
     target_w: int,
     target_h: int,
-    *,
-    payload_col: str = "payload",
 ) -> DataFrame:
     """Image resize stage: rewrites the payload header to the target geometry and
     subsamples the body deterministically (area-ratio byte count) — the fake
@@ -106,7 +104,7 @@ def resize_images(
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out_payloads = []
-            for payload in pdf[payload_col]:
+            for payload in pdf["payload"]:
                 raw = bytes(payload) if payload is not None else b""
                 dec = _decode_media_payload(raw)
                 if dec is None or dec[0] != "image":
@@ -120,7 +118,7 @@ def resize_images(
                     f"FAKEimg:{target_w}x{target_h}x{nf}:".encode() + body[:n_keep]
                 )
             out = pdf.copy()
-            out[payload_col] = out_payloads
+            out["payload"] = out_payloads
             yield out
 
     return df.mapInPandas(fn, df.schema)
@@ -129,20 +127,17 @@ def resize_images(
 def sample_video_frames(
     df: DataFrame,
     every_n: int,
-    *,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
 ) -> DataFrame:
     """Frame sampling: one OUTPUT ROW per kept frame (row-explosion inside
     mapInPandas — batch shape changes, which is why this is mapInPandas and not a
     scalar pandas UDF). Frame payload is a deterministic slice keyed by frame
     index; a real build would extract the actual frame."""
-    out_schema = f"`{id_col}` bigint, frame_idx int, frame_sha1 string"
+    out_schema = "`media_id` bigint, frame_idx int, frame_sha1 string"
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, idxs, hashes = [], [], []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
+            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 raw = bytes(payload) if payload is not None else b""
                 dec = _decode_media_payload(raw)
                 if dec is None or dec[0] != "video":
@@ -155,7 +150,7 @@ def sample_video_frames(
                     hashes.append(
                         hashlib.sha1(body + fi.to_bytes(4, "big")).hexdigest()
                     )
-            yield pd.DataFrame({id_col: ids, "frame_idx": idxs, "frame_sha1": hashes})
+            yield pd.DataFrame({"media_id": ids, "frame_idx": idxs, "frame_sha1": hashes})
 
     return df.mapInPandas(fn, out_schema)
 

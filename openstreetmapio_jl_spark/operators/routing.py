@@ -42,9 +42,6 @@ from .graph import CheckpointHandle
 def contract_road_graph(
     ways: DataFrame,
     nodes: DataFrame,
-    *,
-    id_col: str = "id",
-    refs_col: str = "refs",
 ) -> DataFrame:
     """→ undirected weighted edge list ``(src, dst, w_m)`` of the contracted
     road graph: vertices are way ENDPOINTS and JUNCTIONS (refs occurring
@@ -66,7 +63,7 @@ def contract_road_graph(
     driver action.
     """
     e = ways.select(
-        F.col(id_col).alias("way_id"), F.posexplode(refs_col).alias("pos", "ref")
+        F.col("id").alias("way_id"), F.posexplode("refs").alias("pos", "ref")
     )
     # TOTAL occurrence count, not distinct-way count: a ref repeated WITHIN
     # one way (self-intersecting / lollipop way) is a junction too — counting
@@ -250,7 +247,6 @@ def network_distances(
     edges: DataFrame,
     seeds: DataFrame,
     *,
-    max_rounds: int = 64,
     handles: list | None = None,
 ) -> DataFrame:
     """→ ``(node, dist_m)``: network distance from every reachable vertex to
@@ -262,7 +258,8 @@ def network_distances(
     cost (defaults to 0.0; duplicates keep the min). Seeds absent from the
     graph's vertex set are kept at their starting cost but relax nothing —
     callers who want graph-members-only should semi-join first. Same
-    synchronous relaxation, determinism, fail-loud ``max_rounds``, and
+    synchronous relaxation, determinism, fail-loud round cap (64, the
+    ``sssp_distances`` default), and
     checkpoint ``handles`` contract as :func:`sssp_distances`; the round
     bound is the max hop count from any vertex to its nearest seed, which
     multi-source seeding only ever SHRINKS vs the single-source diameter.
@@ -278,15 +275,22 @@ def network_distances(
         .groupBy("node")
         .agg(F.min("dist_m").alias("dist_m"))
     )
-    return _relax_to_fixpoint(bidir, dist, max_rounds, handles)
+    return _relax_to_fixpoint(bidir, dist, 64, handles)
+
+
+PAGERANK_DAMPING = 0.85  # the classic random-surfer damping factor
+# An eager localCheckpoint cut every 4 rounds (and always after the last)
+# instead of every round: each un-cut round adds only one join+agg layer, so
+# a depth-4 plan stays cheap to optimize while HALVING the measured wall time
+# vs per-round cuts (each eager cut is a blocking Spark job; sf0.1: 2.9 s/pass
+# → 1.6 s/pass).
+PAGERANK_CHECKPOINT_EVERY = 4
 
 
 def pagerank(
     edges: DataFrame,
     *,
-    damping: float = 0.85,
     iterations: int = 12,
-    checkpoint_every: int = 4,
     handles: list | None = None,
 ) -> DataFrame:
     """→ ``(node, rank)``: PageRank over the undirected graph's TOPOLOGY
@@ -300,7 +304,7 @@ def pagerank(
 
     FIXED iteration count, not a convergence test: the power iteration is
     damping-contractive, so ``iterations`` bounds the error at
-    ``damping^iterations`` (0.85^12 ≈ 0.14 of the initial residual —
+    ``PAGERANK_DAMPING^iterations`` (0.85^12 ≈ 0.14 of the initial residual —
     callers wanting tighter results raise it); a fixed count also makes the
     computation exactly mirrorable by a fixed-round SQL oracle. The
     out-degree is attached to the edge list ONCE up front (``(src, dst,
@@ -310,12 +314,8 @@ def pagerank(
     documented driver-side exception). Ranks sum to 1 every round (no
     dangling mass).
 
-    ``checkpoint_every`` bounds lineage depth: an eager ``localCheckpoint``
-    cut every k rounds (and always after the last) instead of every round —
-    each un-cut round adds only one join+agg layer, so a depth-4 plan stays
-    cheap to optimize while HALVING the measured wall time vs per-round
-    cuts (each eager cut is a blocking Spark job; sf0.1: 2.9 s/pass → 1.6
-    s/pass). The re-computation window on executor loss is k rounds."""
+    ``PAGERANK_CHECKPOINT_EVERY`` bounds lineage depth (see its comment);
+    the re-computation window on executor loss is that many rounds."""
     bidir = _bidirectional(edges, handles)
     deg = bidir.groupBy("u").agg(F.count("*").alias("deg"))
     # (src, dst, deg_src) — one widened edge list instead of a per-round
@@ -332,7 +332,7 @@ def pagerank(
     n_v = vertices.count()
     if n_v == 0:
         return vertices.select("node", F.lit(0.0).alias("rank"))
-    teleport = (1.0 - damping) / n_v
+    teleport = (1.0 - PAGERANK_DAMPING) / n_v
     ranks = vertices.select("node", F.lit(1.0 / n_v).alias("rank"))
     for i in range(iterations):
         contrib = ranks.join(adj, F.col("node") == F.col("src")).select(
@@ -340,9 +340,11 @@ def pagerank(
             (F.col("rank") / F.col("deg")).alias("share"),
         )
         ranks = contrib.groupBy("node").agg(
-            (F.lit(teleport) + F.lit(damping) * F.sum("share")).alias("rank")
+            (F.lit(teleport) + F.lit(PAGERANK_DAMPING) * F.sum("share")).alias(
+                "rank"
+            )
         )
-        if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
+        if (i + 1) % PAGERANK_CHECKPOINT_EVERY == 0 or i == iterations - 1:
             ranks = ranks.localCheckpoint(eager=True)
             if handles is not None:
                 handles.append(CheckpointHandle(ranks))

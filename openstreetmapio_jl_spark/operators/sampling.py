@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _targets_df(docs: DataFrame, targets: dict, strata_col: str) -> DataFrame:
+def _targets_df(docs: DataFrame, targets: dict) -> DataFrame:
     if not targets:
         raise ValueError("targets must be non-empty")
     tot = sum(targets.values())
@@ -51,21 +51,20 @@ def _targets_df(docs: DataFrame, targets: dict, strata_col: str) -> DataFrame:
     spark = docs.sparkSession
     return spark.createDataFrame(
         [(k, float(v)) for k, v in sorted(targets.items())],
-        f"{strata_col} string, target double",
+        "lang string, target double",
     )
 
 
-def rebalance_plan(
-    docs: DataFrame, targets: dict, *, strata_col: str = "lang"
-) -> DataFrame:
-    """→ ``(stratum, n_in, target, n_keep)``: the downsample-only plan.
+def rebalance_plan(docs: DataFrame, targets: dict) -> DataFrame:
+    """→ ``(lang, n_in, target, n_keep)``: the downsample-only plan per
+    ``lang`` stratum.
     Raises if a targeted stratum has no rows (the target mix is then
     unreachable)."""
-    tdf = _targets_df(docs, targets, strata_col)
-    counts = docs.groupBy(strata_col).agg(F.count("*").alias("n_in"))
-    joined = tdf.join(counts, strata_col, "left")
+    tdf = _targets_df(docs, targets)
+    counts = docs.groupBy("lang").agg(F.count("*").alias("n_in"))
+    joined = tdf.join(counts, "lang", "left")
     missing = [
-        r[strata_col] for r in joined.filter(F.col("n_in").isNull()).collect()
+        r["lang"] for r in joined.filter(F.col("n_in").isNull()).collect()
     ]
     if missing:
         raise ValueError(
@@ -77,7 +76,7 @@ def rebalance_plan(
     return (
         joined.crossJoin(F.broadcast(m))
         .select(
-            strata_col,
+            "lang",
             "n_in",
             "target",
             F.floor(F.col("target") * F.col("m")).cast("long").alias("n_keep"),
@@ -89,20 +88,17 @@ def rebalance(
     docs: DataFrame,
     targets: dict,
     *,
-    strata_col: str = "lang",
     key_col: str = "doc_id",
 ) -> DataFrame:
     """→ the surviving rows (original columns): per stratum, the ``n_keep``
     documents with the smallest ``md5(key)`` — a deterministic,
     engine-independent selection. Rows whose stratum is not targeted drop."""
-    plan = rebalance_plan(docs, targets, strata_col=strata_col).select(
-        strata_col, "n_keep"
-    )
-    w = Window.partitionBy(strata_col).orderBy(
+    plan = rebalance_plan(docs, targets).select("lang", "n_keep")
+    w = Window.partitionBy("lang").orderBy(
         F.md5(F.col(key_col).cast("string")), F.col(key_col)
     )
     return (
-        docs.join(F.broadcast(plan), strata_col)
+        docs.join(F.broadcast(plan), "lang")
         .withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") <= F.col("n_keep"))
         .drop("_rk", "n_keep")

@@ -41,24 +41,14 @@ def cosine_col(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def cosine_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = True,
-) -> DataFrame:
+def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
     """→ (query_id, neighbor_id, cos, rank). Broadcast the query side; corpus
     streams through — one pass, no shuffle until the top-k window."""
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
     )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
-    pairs = F.broadcast(q).crossJoin(c)
-    if exclude_self:
-        pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id"))
+    c = corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec"))
+    pairs = F.broadcast(q).crossJoin(c).filter(F.col("query_id") != F.col("neighbor_id"))
     scored = pairs.select(
         "query_id",
         "neighbor_id",
@@ -77,6 +67,20 @@ def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     return rng.standard_normal((n_planes, dim))
 
 
+# The LSH shape of lsh_cosine_topk (table 0) and embedding_near_duplicates
+# (all tables); the registry's DuckDB oracles build their buckets from the
+# same arrays.
+EMBED_DIM = 64  # width of the fixture embeddings
+LSH_PLANES = 8  # sign bits per bucket: single-table recall ~(1-θ/π)^8
+LSH_TABLES = 2  # independent tables whose candidates are unioned
+LSH_SUB_PLANES = 4  # extra planes that sub-split an over-cap bucket
+PLANE_TABLES = [hyperplanes(EMBED_DIM, LSH_PLANES, seed=42 + t) for t in range(LSH_TABLES)]
+SUB_PLANE_TABLES = [
+    hyperplanes(EMBED_DIM, LSH_SUB_PLANES, seed=4242 + t) for t in range(LSH_TABLES)
+]
+IVF_NPROBE = 2  # inverted lists probed per query
+
+
 def lsh_signature_col(vec: Column, planes: np.ndarray) -> Column:
     """Sign-bit bucket id: bit p set iff plane_p · vec > 0. Planes enter the plan
     as array literals — evaluated in codegen, no Python."""
@@ -90,34 +94,21 @@ def lsh_signature_col(vec: Column, planes: np.ndarray) -> Column:
     return sig
 
 
-def lsh_cosine_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-    exclude_self: bool = True,
-) -> DataFrame:
+def lsh_cosine_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's LSH bucket, exact
     cosine re-rank within. → (query_id, neighbor_id, cos, rank)."""
-    planes = hyperplanes(dim, n_planes, seed)
+    planes = PLANE_TABLES[0]
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        lsh_signature_col(F.col(vec_col), planes).alias("bucket"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
+        lsh_signature_col(F.col("embedding"), planes).alias("bucket"),
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        lsh_signature_col(F.col(vec_col), planes).alias("bucket"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
+        lsh_signature_col(F.col("embedding"), planes).alias("bucket"),
     )
-    pairs = q.join(c, "bucket", "inner")
-    if exclude_self:
-        pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id"))
+    pairs = q.join(c, "bucket", "inner").filter(F.col("query_id") != F.col("neighbor_id"))
     scored = pairs.select(
         "query_id",
         "neighbor_id",
@@ -127,13 +118,13 @@ def lsh_cosine_topk(
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def centroids(dim: int, n_lists: int, seed: int = 7) -> np.ndarray:
+def centroids(dim: int, n_lists: int) -> np.ndarray:
     """Deterministic coarse-quantizer centroids (seeded standard normal). A
     production build would k-means these on a sample; fixed seeded centroids
     keep the operator fully deterministic and oracle-checkable while exercising
     the identical plan shape (the join structure doesn't care how centroids
     were fit)."""
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(7)
     return rng.standard_normal((n_lists, dim))
 
 
@@ -174,35 +165,28 @@ def ivf_cosine_topk(
     corpus: DataFrame,
     k: int,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_lists: int = 8,
-    nprobe: int = 2,
     dim: int = 64,
-    seed: int = 7,
-    exclude_self: bool = True,
 ) -> DataFrame:
     """IVF approximate top-k — the second scale path next to hyperplane LSH:
     corpus vectors land in ONE inverted list (their nearest centroid); each
-    query probes its ``nprobe`` nearest lists; exact cosine re-rank within the
-    probed candidates. Candidate volume ≈ |C|·nprobe/n_lists per query (vs |C|
+    query probes its ``IVF_NPROBE`` nearest lists; exact cosine re-rank within
+    the probed candidates. Candidate volume ≈ |C|·nprobe/n_lists per query (vs |C|
     brute force); the join is a plain equi-join on the list id, so AQE/skew
     machinery applies. A pair can meet at most once (corpus rows have one list,
     probe lists are distinct) — no dedup needed."""
-    cents = centroids(dim, n_lists, seed)
+    cents = centroids(dim, n_lists)
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        ivf_list_col(F.col(vec_col), cents).alias("list"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
+        ivf_list_col(F.col("embedding"), cents).alias("list"),
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.explode(ivf_probe_lists_col(F.col(vec_col), cents, nprobe)).alias("list"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
+        F.explode(ivf_probe_lists_col(F.col("embedding"), cents, IVF_NPROBE)).alias("list"),
     )
-    pairs = q.join(c, "list", "inner")
-    if exclude_self:
-        pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id"))
+    pairs = q.join(c, "list", "inner").filter(F.col("query_id") != F.col("neighbor_id"))
     scored = pairs.select(
         "query_id",
         "neighbor_id",
@@ -216,17 +200,12 @@ def embedding_near_duplicates(
     vectors: DataFrame,
     threshold: float = 0.95,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    dim: int = 64,
-    n_tables: int = 2,
     max_bucket_df: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs (id_a < id_b, cos >= threshold) via multi-table LSH buckets
     + exact verify — the embedding analog of MinHash-LSH text dedup.
 
-    ``n_tables`` independent hash tables (planes seeded ``42+t``) union their
+    ``LSH_TABLES`` independent hash tables (planes seeded ``42+t``) union their
     candidate pairs before the exact re-rank: single-table recall at 8 planes is
     ~(1-θ/π)^8 and misses moderate-similarity pairs; each extra table multiplies
     the miss probability. Candidate ids are deduped BEFORE vectors are re-attached
@@ -236,18 +215,15 @@ def embedding_near_duplicates(
     self-join — one degenerate bucket (zero/near-zero embeddings all hashing
     to the same sign pattern) otherwise goes O(n²) at corpus scale; salting
     can't reduce the pair count, only bounding the bucket can. Over-cap
-    buckets SUB-SPLIT on ``n_sub_planes`` EXTRA hyperplanes (seeded apart from
+    buckets SUB-SPLIT on ``LSH_SUB_PLANES`` EXTRA hyperplanes (seeded apart from
     the bucket planes, ``operators/dedup.py:_cap_bucket_df``): a retained
-    hot-bucket pair must agree on n_planes + n_sub_planes sign bits, so
+    hot-bucket pair must agree on LSH_PLANES + LSH_SUB_PLANES sign bits, so
     genuinely-parallel near-dup vectors stay co-located while a diverse hot
     bucket scatters; pieces still over cap (identical sign patterns the extra
     planes can't separate either) are dropped — the residual hard bound."""
-    v = vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    n_sub_planes = 4
+    v = vectors.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
     parts = []
-    for t in range(n_tables):
-        planes = hyperplanes(dim, n_planes, seed=42 + t)
-        sub_planes = hyperplanes(dim, n_sub_planes, seed=4242 + t)
+    for t, (planes, sub_planes) in enumerate(zip(PLANE_TABLES, SUB_PLANE_TABLES)):
         parts.append(
             v.select(
                 "id",

@@ -134,12 +134,10 @@ def hll_distinct(
     df: DataFrame,
     value_col: str,
     group_cols: tuple[str, ...] = (),
-    *,
-    p: int = HLL_P_DEFAULT,
 ) -> DataFrame:
     """One-shot convenience: registers + estimate."""
-    regs = hll_registers(df, value_col, group_cols, p=p)
-    return hll_estimate(regs, group_cols, p=p)
+    regs = hll_registers(df, value_col, group_cols)
+    return hll_estimate(regs, group_cols)
 
 
 # ===========================================================================
@@ -270,12 +268,10 @@ def hdr_quantile_sketch(
     value_col: str,
     qs: tuple[float, ...],
     group_cols: tuple[str, ...] = (),
-    *,
-    k: int = HDR_K_DEFAULT,
 ) -> DataFrame:
     """One-shot convenience: buckets + quantile walk."""
-    b = hdr_buckets(df, value_col, group_cols, k=k)
-    return hdr_quantiles(b, qs, group_cols, k=k)
+    b = hdr_buckets(df, value_col, group_cols)
+    return hdr_quantiles(b, qs, group_cols)
 
 
 # ===========================================================================

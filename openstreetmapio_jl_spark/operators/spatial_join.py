@@ -642,7 +642,6 @@ def bbox_intersection_join(
     left_id: str = "left_id",
     right_id: str = "right_id",
     cell_deg: float = 1.0,
-    suffix: tuple[str, str] = ("_l", "_r"),
 ) -> DataFrame:
     """Rectangle×rectangle intersection join — the 2-D interval-overlap
     sibling of :func:`point_in_polygon_join` (containment) and
@@ -665,11 +664,11 @@ def bbox_intersection_join(
     ``min_lon <= max_lon``; wrapped boxes raise downstream-visible garbage,
     so split them upstream (the PIP cover's wrap handling shows how).
     Columns: each side needs ``min_lat, max_lat, min_lon, max_lon`` plus
-    its id; output carries both ids and both boxes with ``suffix``."""
+    its id; output carries both ids and both boxes suffixed ``_l`` / ``_r``."""
     if cell_deg <= 0:
         raise ValueError(f"cell_deg must be > 0, got {cell_deg}")
     eps = float(cell_deg)
-    sl, sr = suffix
+    sl, sr = "_l", "_r"
 
     def keyed(df: DataFrame, idc: str, sfx: str) -> DataFrame:
         cx = F.explode(

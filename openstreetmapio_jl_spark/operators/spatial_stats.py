@@ -47,14 +47,14 @@ from openstreetmapio_jl_spark.functions.exact import exact_double
 GI_DELTAS = [tile_key_offset(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
 
 
-def gi_star(tile_counts: DataFrame, *, key_col: str = "tile", x_col: str = "n") -> DataFrame:
+def gi_star(tile_counts: DataFrame) -> DataFrame:
     """→ ``(tile, n, w, neigh_sum, gi_z)``: per observed tile, its count, the
     observed 3×3 neighborhood size ``w`` (incl. self), the exact neighborhood
     sum, and the Gi* z-score as a double rounded to 6 decimals (NULL where
     the statistic degenerates). Input: one row per observed tile."""
     t = tile_counts.select(
-        F.col(key_col).cast("long").alias("tile"),
-        F.col(x_col).cast("long").alias("n"),
+        F.col("tile").cast("long").alias("tile"),
+        F.col("n").cast("long").alias("n"),
     )
     totals = t.agg(
         F.count("*").alias("n_tiles"),

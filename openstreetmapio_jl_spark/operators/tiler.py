@@ -4,9 +4,6 @@ Vector→raster: points binned into z/x/y tiles, counts aggregated per tile (spa
 representation — only occupied tiles carry rows, so shuffle volume stays
 proportional to them).
 
-Raster→vector: tiles back to bbox rings compatible with the PIP join's
-polygon format.
-
 Pyramid rollup: child→parent tile aggregation is pure integer arithmetic
 (x>>1, y>>1), a map-side-combinable groupBy per level — the classic tile-pyramid
 build, shuffle volume halves every level.
@@ -31,21 +28,21 @@ from openstreetmapio_jl_spark.functions.geo import M2_PER_DEG2
 WEBMERC_M_PER_PX_Z0 = 156543.03392804097
 
 
-def tile_tolerance_m2(z: int, *, px_tol: float = 1.0, ref_lat: float = 0.0) -> float:
+def tile_tolerance_m2(z: int, *, ref_lat: float = 0.0) -> float:
     """Zoom-derived simplification tolerance (m²) for :func:`simplify_lines`:
-    the area of a ``px_tol``-sided SQUARE of rendered pixels at zoom ``z``
-    (equivalently a triangle of base ``2·px_tol`` and height ``px_tol``) —
+    the area of one rendered pixel at zoom ``z`` (equivalently a triangle of
+    base 2 px and height 1 px) —
     vertices whose neighbor triangle fits inside roughly a pixel cell move
     the line by less than a pixel and are invisible at that zoom. ``ref_lat``
     scales the Web-Mercator ground resolution (cos shrink toward the
     poles)."""
     m_per_px = WEBMERC_M_PER_PX_Z0 * math.cos(math.radians(ref_lat)) / (1 << z)
-    return (px_tol * m_per_px) ** 2
+    return m_per_px**2
 
 
-def tile_counts(points: DataFrame, z: int, *, lat_col="lat", lon_col="lon") -> DataFrame:
+def tile_counts(points: DataFrame, z: int) -> DataFrame:
     """Tile-level aggregation (no pixels): (z, x, y, n)."""
-    x, y = xyz_cols(F.col(lat_col), F.col(lon_col), z)
+    x, y = xyz_cols(F.col("lat"), F.col("lon"), z)
     return (
         points.select(F.lit(z).alias("z"), x.alias("x"), y.alias("y"))
         .groupBy("z", "x", "y")
@@ -78,31 +75,11 @@ def pyramid_rollup(tile_df: DataFrame, from_z: int, to_z: int) -> DataFrame:
     return out
 
 
-def vectorize_tiles(tile_df: DataFrame) -> DataFrame:
-    """Raster→vector: each (z,x,y) becomes a closed bbox ring in the polygon
-    format consumed by the PIP join (edges + bbox columns)."""
-    n = F.pow(F.lit(2.0), F.col("z"))
-    west = F.col("x") / n * 360.0 - 180.0
-    east = (F.col("x") + 1) / n * 360.0 - 180.0
-    north = F.degrees(F.atan(F.sinh(F.lit(math.pi) * (1 - 2 * F.col("y") / n))))
-    south = F.degrees(F.atan(F.sinh(F.lit(math.pi) * (1 - 2 * (F.col("y") + 1) / n))))
-    ring = F.array(
-        F.struct(south.alias("lat"), west.alias("lon")),
-        F.struct(south.alias("lat"), east.alias("lon")),
-        F.struct(north.alias("lat"), east.alias("lon")),
-        F.struct(north.alias("lat"), west.alias("lon")),
-        F.struct(south.alias("lat"), west.alias("lon")),
-    )
-    return tile_df.withColumn("ring", ring)
-
-
 def simplify_lines(
     df: DataFrame,
     *,
     tolerance_m2: float,
     ref_lat: float,
-    lats_col: str = "lats",
-    lons_col: str = "lons",
 ) -> DataFrame:
     """Single-pass effective-area line simplification (the Visvalingam–Whyatt
     criterion applied once, not iterated): an interior vertex survives iff the
@@ -129,7 +106,7 @@ def simplify_lines(
     calls once per band)."""
     # |cross|/2 * M2_PER_DEG2 * cos(ref_lat) >= tol  ⇔  |cross| >= tol_cross
     tol_cross = 2.0 * tolerance_m2 / (M2_PER_DEG2 * math.cos(math.radians(ref_lat)))
-    la, lo = F.col(lats_col), F.col(lons_col)
+    la, lo = F.col("lats"), F.col("lons")
     n = F.size(la)
 
     def _cross(i):
@@ -168,8 +145,6 @@ def simplify_rings(
     *,
     tolerance_m2: float,
     ref_lat: float,
-    lats_col: str = "lats",
-    lons_col: str = "lons",
     min_ring_pts: int = 4,
 ) -> DataFrame:
     """Closed-ring variant of :func:`simplify_lines` for polygon
@@ -189,16 +164,14 @@ def simplify_rings(
         df,
         tolerance_m2=tolerance_m2,
         ref_lat=ref_lat,
-        lats_col=lats_col,
-        lons_col=lons_col,
     )
     degenerate = F.col("n_kept") < min_ring_pts
     return (
         out.withColumn(
-            "s_lats", F.when(degenerate, F.col(lats_col)).otherwise(F.col("s_lats"))
+            "s_lats", F.when(degenerate, F.col("lats")).otherwise(F.col("s_lats"))
         )
         .withColumn(
-            "s_lons", F.when(degenerate, F.col(lons_col)).otherwise(F.col("s_lons"))
+            "s_lons", F.when(degenerate, F.col("lons")).otherwise(F.col("s_lons"))
         )
         .withColumn("n_kept", F.size("s_lats"))
     )
@@ -215,9 +188,6 @@ def clip_lines_to_tiles(
     df: DataFrame,
     z: int,
     *,
-    lats_col: str = "lats",
-    lons_col: str = "lons",
-    eps: float = CLIP_EPS,
     keep_params: bool = False,
 ) -> DataFrame:
     """Clip polylines to XYZ tile boundaries — the tile-cut step between
@@ -228,7 +198,7 @@ def clip_lines_to_tiles(
     test: pure +,-,*,/ and comparisons, whole-stage codegen, no Python, no
     shuffle. Output: one row per (input row, segment, tile) with ``seg``,
     ``x``, ``y``, ``seg_m`` (full geodesic segment length) and ``clip_frac``
-    (the parametric in-tile fraction, > ``eps``); in-tile length is
+    (the parametric in-tile fraction, > ``CLIP_EPS``); in-tile length is
     ``seg_m * clip_frac`` — the parametric fraction of the geodesic length,
     the standard planar approximation for tile-local analytics (segments are
     short relative to tile extent at rendering zooms).
@@ -262,7 +232,7 @@ def clip_lines_to_tiles(
     nint = 1 << z
     nmax2 = 2 * nint - 1  # shifted-frame x indices live in [0, 2n)
     nmax = nint - 1
-    la, lo = F.col(lats_col), F.col(lons_col)
+    la, lo = F.col("lats"), F.col("lons")
     segs = (
         df.filter(F.size(la) >= 2)
         .select(
@@ -275,7 +245,7 @@ def clip_lines_to_tiles(
             F.element_at(la, F.col("_seg") + 1).alias("_lat2"),
             F.element_at(lo, F.col("_seg") + 1).alias("_lon2"),
         )
-        .drop(lats_col, lons_col)
+        .drop("lats", "lons")
     )
     u1r, m1 = mercator_unit_cols(F.col("_lat1"), F.col("_lon1"), z)
     u2r, m2 = mercator_unit_cols(F.col("_lat2"), F.col("_lon2"), z)
@@ -349,7 +319,7 @@ def clip_lines_to_tiles(
     return (
         segs.select("*", (t1 - t0).alias("clip_frac"), *extra)
         .filter(
-            (F.col("clip_frac") > eps)
+            (F.col("clip_frac") > CLIP_EPS)
             & ((du != 0) | (dm != 0))  # drop zero-length editing artifacts
         )
         .select("*", (F.col("_xi") % F.lit(nint)).alias("x"))
@@ -417,7 +387,6 @@ def zonal_stats(
     tile_counts: DataFrame,
     *,
     zoom: int,
-    id_col: str = "id",
 ) -> DataFrame:
     """Zonal statistics — the raster→vector inverse of :func:`tile_counts`:
     per polygon, aggregate a tile raster over the tiles whose CENTER falls
@@ -436,7 +405,7 @@ def zonal_stats(
     from openstreetmapio_jl_spark.operators.spatial_join import tile_cover_bbox
 
     cover = polygons.select(
-        F.col(id_col).alias("polygon_id"),
+        F.col("id").alias("polygon_id"),
         "edges",
         F.explode(
             tile_cover_bbox(

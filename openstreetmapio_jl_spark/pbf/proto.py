@@ -109,15 +109,14 @@ def read_varint(buf, pos: int) -> tuple[int, int]:
             raise ValueError("varint too long (corrupt buffer)")
 
 
-def iter_fields(buf, start: int = 0, end: int | None = None):
+def iter_fields(buf):
     """Walk a message buffer, yielding ``(field_no, wire_type, value)``.
 
     value is an int for VARINT, a memoryview slice for LEN, raw little-endian
     ints for I32/I64 (skipped-through; OSM never writes them).
     """
-    if end is None:
-        end = len(buf)
-    pos = start
+    end = len(buf)
+    pos = 0
     while pos < end:
         key, pos = read_varint(buf, pos)
         field_no, wire_type = key >> 3, key & 7
@@ -182,8 +181,6 @@ def varints_zigzag(raw: np.ndarray) -> np.ndarray:
     return ((v >> np.uint64(1)).view(np.int64)) ^ -((v & np.uint64(1)).view(np.int64))
 
 
-def decode_packed(payload, *, zigzag: bool = False, signed: bool = True) -> np.ndarray:
+def decode_packed(payload, *, zigzag: bool = False) -> np.ndarray:
     raw = decode_varints(payload)
-    if zigzag:
-        return varints_zigzag(raw)
-    return varints_to_int64(raw) if signed else raw
+    return varints_zigzag(raw) if zigzag else varints_to_int64(raw)

@@ -54,10 +54,6 @@ FIXTURE_ROOT = os.path.join(REPO_ROOT, ".fixtures")
 ORACLE_SF_NAME = "sf0.01"  # the driver's correctness scale
 ZOOM = 13
 
-_PLANE_TABLES = [similarity.hyperplanes(64, 8, seed=42 + t) for t in range(2)]
-# extra hot-bucket sub-split planes (embedding_near_duplicates: seed 4242+t)
-_SUB_PLANE_TABLES = [similarity.hyperplanes(64, 4, seed=4242 + t) for t in range(2)]
-
 
 def _sf_name(sf_dir: str) -> str:
     return os.path.basename(os.path.normpath(sf_dir))
@@ -349,8 +345,8 @@ with toks as (
 
 _SQL_BM25 = (
     "ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))"
-    " * (tf * (1.2 + 1.0)"
-    " / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl)))"
+    f" * (tf * ({ir.BM25_K1} + 1.0)"
+    f" / (tf + {ir.BM25_K1} * ({1.0 - ir.BM25_B} + {ir.BM25_B} * dl / avgdl)))"
 )
 
 
@@ -757,7 +753,7 @@ def q_doc_lang_rebalance(spark, sf_dir):
     mix the binding stratum is de (kept whole); en downsamples 218→84."""
     d = _load(spark, sf_dir, "documents")
     kept = sampling.rebalance(
-        d, REBALANCE_TARGETS, strata_col="lang", key_col="doc_id"
+        d, REBALANCE_TARGETS, key_col="doc_id"
     )
     digest = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
@@ -1791,17 +1787,9 @@ def q_er_customer_mentions(spark, sf_dir):
         mentions,
         entities,
         mention_id="o_orderkey",
-        mention_name="mention_name",
         entity_id="c_custkey",
-        entity_name="entity_name",
         max_block_df=100,
         min_jaccard=0.4,
-        # block index computed ONCE (lazy localCheckpoint), not rebuilt per
-        # consumer: 4 base-table scans instead of 12. Measured at sf0.1 the
-        # checkpoint costs ~5% wall (3.12 s vs 2.97 s) — the crossover is
-        # immediate at real scale, where each avoided rebuild is a full
-        # corpus scan and the checkpointed token frame stays tiny.
-        materialize_blocks=True,
     )
 
 
@@ -2137,7 +2125,7 @@ def q_osm_simplify_ways(spark, sf_dir):
         F.lit(None).cast("array<struct<lat:double,lon:double>>").alias("positions"),
     )
     lines = SJ.assemble_way_lines(hw, b.nodes).join(hw.select("id", "highway"), "id")
-    tol = tiler.tile_tolerance_m2(_SIMPLIFY_Z, px_tol=1.0, ref_lat=_SIMPLIFY_REF_LAT)
+    tol = tiler.tile_tolerance_m2(_SIMPLIFY_Z, ref_lat=_SIMPLIFY_REF_LAT)
     simp = tiler.simplify_lines(
         lines, tolerance_m2=tol, ref_lat=_SIMPLIFY_REF_LAT
     )
@@ -2174,7 +2162,7 @@ def _sql_osm_simplify_ways() -> str:
     # the SAME Python expressions simplify_lines evaluates — embedding repr()
     # round-trips the exact double, so the SQL comparison constant is
     # bit-identical to the Spark literal
-    tol = tiler.tile_tolerance_m2(_SIMPLIFY_Z, px_tol=1.0, ref_lat=_SIMPLIFY_REF_LAT)
+    tol = tiler.tile_tolerance_m2(_SIMPLIFY_Z, ref_lat=_SIMPLIFY_REF_LAT)
     tol_cross = 2.0 * tol / (
         geo.M2_PER_DEG2 * math.cos(math.radians(_SIMPLIFY_REF_LAT))
     )
@@ -2266,7 +2254,7 @@ def q_osm_simplify_rings(spark, sf_dir):
         F.transform("edges", lambda e: e["y1"]).alias("lats"),
         F.transform("edges", lambda e: e["x1"]).alias("lons"),
     ).filter(F.col("cls").isNotNull())
-    tol = tiler.tile_tolerance_m2(_SIMPLIFY_Z, px_tol=1.0, ref_lat=_SIMPLIFY_REF_LAT)
+    tol = tiler.tile_tolerance_m2(_SIMPLIFY_Z, ref_lat=_SIMPLIFY_REF_LAT)
     simp = tiler.simplify_rings(
         base,
         tolerance_m2=tol,
@@ -2319,7 +2307,7 @@ def q_osm_simplify_rings(spark, sf_dir):
 def _sql_osm_simplify_rings() -> str:
     import math
 
-    tol = tiler.tile_tolerance_m2(_SIMPLIFY_Z, px_tol=1.0, ref_lat=_SIMPLIFY_REF_LAT)
+    tol = tiler.tile_tolerance_m2(_SIMPLIFY_Z, ref_lat=_SIMPLIFY_REF_LAT)
     tol_cross = 2.0 * tol / (
         geo.M2_PER_DEG2 * math.cos(math.radians(_SIMPLIFY_REF_LAT))
     )
@@ -2743,7 +2731,7 @@ def q_osm_network_dist(spark, sf_dir):
         .distinct()
     )
     seeds = verts.join(seed_refs, "node", "left_semi")
-    d = routing.network_distances(edges, seeds, max_rounds=64)
+    d = routing.network_distances(edges, seeds)
     return d.select(F.col("node").alias("ref"), exact_double("dist_m", 2).alias("dist_m"))
 
 
@@ -3912,7 +3900,7 @@ def q_knn_idw_value(spark, sf_dir):
         "id", "lat", "lon", (F.col("id") % 1000).cast("double").alias("v")
     )
     return knn.idw_interpolate(
-        queries, poi, value_col="v", k=3, power=2, zoom=12, max_rounds=3
+        queries, poi, value_col="v", power=2, max_rounds=3
     )
 
 
@@ -4168,7 +4156,7 @@ def q_s2_cells_pages(spark, sf_dir):
     pages = _pages(spark, sf_dir)
     pts = geocode.extract_geocodes(pages)
     return pts.select(
-        "url", cells.s2_cell_udf(12)(F.col("lat"), F.col("lon")).alias("s2_cell")
+        "url", cells.s2_cell_udf()(F.col("lat"), F.col("lon")).alias("s2_cell")
     )
 
 
@@ -4244,12 +4232,12 @@ def q_geohash_cells_pages(spark, sf_dir):
     pages = _pages(spark, sf_dir)
     pts = geocode.extract_geocodes(pages)
     return pts.select(
-        "url", cells.geohash_col(F.col("lat"), F.col("lon"), 7).alias("gh")
+        "url", cells.geohash_col(F.col("lat"), F.col("lon")).alias("gh")
     )
 
 
 def _sql_geohash_cells() -> str:
-    gh = cells.geohash_sql("plat", "plon", 7)
+    gh = cells.geohash_sql("plat", "plon")
     return f"""
 with g as (
   select url,
@@ -4301,13 +4289,13 @@ def q_sim_ivf_topk(spark, sf_dir):
     break equality."""
     emb = _load(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 20)
-    return similarity.ivf_cosine_topk(q, emb, k=5, n_lists=8, nprobe=2)
+    return similarity.ivf_cosine_topk(q, emb, k=5, n_lists=8)
 
 
 def _sql_ivf_topk() -> str:
     import numpy as np
 
-    cents = similarity.centroids(64, 8, seed=7)
+    cents = similarity.centroids(similarity.EMBED_DIM, 8)
 
     def score(i, vec="embedding"):
         dot = (
@@ -4336,7 +4324,7 @@ with c as (select vec_id, embedding, cast({assign} as int) as list from embeddin
 q0 as (select vec_id, embedding from embeddings where vec_id < 20),
 probes as (
   select vec_id, embedding, list from ({probe_rows})
-  qualify row_number() over (partition by vec_id order by score desc, list asc) <= 2
+  qualify row_number() over (partition by vec_id order by score desc, list asc) <= {similarity.IVF_NPROBE}
 )
 select q.vec_id as query_id, c.vec_id as neighbor_id,
   round({dot} / ({nq} * {nc}), 6) as cos,
@@ -4354,7 +4342,7 @@ def q_emb_lsh_neardup(spark, sf_dir):
     pieces dropped; the oracle applies the same sub-split)."""
     emb = _load(spark, sf_dir, "embeddings")
     return similarity.embedding_near_duplicates(
-        emb, threshold=0.3, n_tables=2, max_bucket_df=100
+        emb, threshold=0.3, max_bucket_df=100
     )
 
 
@@ -4377,7 +4365,9 @@ def _sql_lsh_neardup() -> str:
     sig_parts = " union all ".join(
         f"select id, {t} as t, {_sql_bucket(planes, 'v')} as bucket,"
         f" ({_sql_bucket(sub, 'v')})::varchar as sub_bucket from v"
-        for t, (planes, sub) in enumerate(zip(_PLANE_TABLES, _SUB_PLANE_TABLES))
+        for t, (planes, sub) in enumerate(
+            zip(similarity.PLANE_TABLES, similarity.SUB_PLANE_TABLES)
+        )
     )
     dot_ab = (
         "list_aggregate(list_transform(list_zip(va.v, vb.v),"
@@ -4417,8 +4407,8 @@ def q_sim_lsh_topk(spark, sf_dir):
 
 
 def _sql_lsh_topk() -> str:
-    # same planes as lsh_cosine_topk's default (hyperplanes(64, 8, seed=42))
-    bucket = _sql_bucket(_PLANE_TABLES[0], "embedding")
+    # the planes lsh_cosine_topk buckets on
+    bucket = _sql_bucket(similarity.PLANE_TABLES[0], "embedding")
     dot = (
         "list_aggregate(list_transform(list_zip(q.embedding, c.embedding),"
         " p -> cast(p[1] as double) * cast(p[2] as double)), 'sum')"

@@ -3,9 +3,15 @@
 Tuned for the 100 TB target (AQE on, skew-join splitting, Arrow batching) while
 remaining correct on local[N]. All settings are plain public Spark confs.
 
-:data:`QUERY_CONF` holds the two defaults that every session of this package
-sets, :func:`get_spark` and the ``jobs/*.py`` builders alike:
+:data:`QUERY_CONF` holds the confs that every session of this package sets,
+:func:`get_spark` and the ``jobs/*.py`` builders alike:
 
+- ``spark.sql.adaptive.enabled = true``: AQE re-plans shuffles from runtime
+  statistics (see :func:`get_spark`).
+- ``spark.sql.session.timeZone = UTC``: timestamps are naive UTC; the PBF
+  sink refuses to write from a session in any other zone.
+- ``spark.sql.execution.arrow.pyspark.enabled = true``: Arrow for every
+  pandas hand-off.
 - ``spark.python.sql.dataFrameDebugging.enabled = false``. With it on (Spark's
   default), every PySpark Column operator also looks up the active session, a
   JVM class and a conf value, sets and clears a JVM call-site origin, and walks
@@ -33,6 +39,9 @@ import os
 from pyspark.sql import SparkSession
 
 QUERY_CONF: dict[str, str] = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.python.sql.dataFrameDebugging.enabled": "false",
     "spark.sql.files.openCostInBytes": "65536",
 }
@@ -66,14 +75,11 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.autoBroadcastJoinThreshold", "67108864")
-        .config("spark.sql.session.timeZone", "UTC")
         # local[N] runs all executor threads inside the driver JVM — size the heap
         # for 32 concurrent tasks' scan+shuffle buffers or GC pauses dominate
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))

@@ -113,15 +113,12 @@ def radius_query(
     lat: float,
     lon: float,
     radius_m: float,
-    *,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
 ) -> DataFrame:
     """Native ``around:radius,lat,lon``: cheap bbox prefilter (sargable — prunes
     on min/max parquet stats) + exact haversine. Adds ``dist_m``."""
     b, l, t, r = geo.radius_bbox(lat, lon, radius_m)
     pre = points.filter(
-        F.col(lat_col).between(b, t) & F.col(lon_col).between(l, r)
+        F.col("lat").between(b, t) & F.col("lon").between(l, r)
     )
-    dist = geo.haversine_m_col(F.lit(lat), F.lit(lon), F.col(lat_col), F.col(lon_col))
+    dist = geo.haversine_m_col(F.lit(lat), F.lit(lon), F.col("lat"), F.col("lon"))
     return pre.withColumn("dist_m", dist).filter(F.col("dist_m") <= radius_m)

@@ -45,17 +45,13 @@ def read_events_stream(
     return reader.parquet(path)
 
 
-def tumbling_counts_stream(
-    events: DataFrame,
-    *,
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Watermarked 5-minute tumbling counts per event type. Same output schema as
-    the batch ``q_events_tumbling`` so the two are directly comparable."""
+def tumbling_counts_stream(events: DataFrame) -> DataFrame:
+    """5-minute tumbling counts per event type under a 10-minute watermark.
+    Same output schema as the batch ``q_events_tumbling`` so the two are
+    directly comparable."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n"),
             F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
@@ -85,10 +81,13 @@ _SESS_OUT = StructType(
 )
 
 
-def sessionize_stream(events: DataFrame, *, gap_s: int = 1800) -> DataFrame:
+SESSION_GAP_S = 1800  # 30 min of inactivity ends a session (web-analytics convention)
+
+
+def sessionize_stream(events: DataFrame) -> DataFrame:
     """Custom stateful operator: per-user session counts via
     ``applyInPandasWithState`` (update mode). A new session starts when the gap
-    since the previous event exceeds ``gap_s`` (carried in state so sessions span
+    since the previous event exceeds ``SESSION_GAP_S`` (carried in state so sessions span
     micro-batches). Each batch emits the CUMULATIVE totals — totals are
     non-decreasing, so the final value is ``max()`` over emitted rows regardless
     of how input was split into batches. Within-batch events are sorted by
@@ -107,7 +106,7 @@ def sessionize_stream(events: DataFrame, *, gap_s: int = 1800) -> DataFrame:
             rows = pd.concat(frames).sort_values(["ts", "event_id"])
             for ts in rows["ts"]:
                 epoch = int(pd.Timestamp(ts).value // 1_000_000_000)
-                if last_ts is None or epoch - last_ts > gap_s:
+                if last_ts is None or epoch - last_ts > SESSION_GAP_S:
                     n_sessions += 1
                 last_ts = epoch
                 n_events += 1
@@ -190,13 +189,7 @@ def write_band_probe_table(spark, table_prefix: str) -> str:
     return name
 
 
-def dedup_exact_within_stream(
-    pages: DataFrame,
-    *,
-    ts_col: str = "warc_ts",
-    delay: str = "10 minutes",
-    text_col: str = "text",
-) -> DataFrame:
+def dedup_exact_within_stream(pages: DataFrame) -> DataFrame:
     """WITHIN-STREAM exact deduplication: drop later pages whose normalized
     text fingerprint already appeared in the stream within the watermark
     horizon — the stateful stream-side counterpart of
@@ -207,9 +200,9 @@ def dedup_exact_within_stream(
 
     Streaming-legal and state-BOUNDED: ``dropDuplicatesWithinWatermark`` keys
     state by fingerprint and evicts entries once the event-time watermark
-    (``ts_col`` minus ``delay``) passes them — state is sized by distinct
-    fingerprints per horizon, not by the stream's history. Pick ``delay`` as
-    the crawl-burst horizon; duplicates farther apart than it are the batch
+    (``warc_ts`` minus 10 minutes, the crawl-burst horizon) passes them —
+    state is sized by distinct fingerprints per horizon, not by the stream's
+    history. Duplicates farther apart than the horizon are the batch
     compactor's job (they meet again at the signature index). Near-dups within
     the stream stay out of scope by design — that requires stream-stream
     candidate state; the compactor resolves them exactly.
@@ -219,9 +212,9 @@ def dedup_exact_within_stream(
     the builder."""
     from openstreetmapio_jl_spark.operators.dedup import fingerprint
 
-    out = pages.withColumn("_fp", fingerprint(F.col(text_col)))
+    out = pages.withColumn("_fp", fingerprint(F.col("text")))
     if out.isStreaming:
-        out = out.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(["_fp"])
+        out = out.withWatermark("warc_ts", "10 minutes").dropDuplicatesWithinWatermark(["_fp"])
     else:
         out = out.dropDuplicates(["_fp"])
     return out.drop("_fp")
@@ -232,7 +225,6 @@ def novel_pages_stream(
     index_memberships: DataFrame | None = None,
     *,
     probe_sigs: DataFrame | None = None,
-    text_col: str = "text",
     persist_handles: list | None = None,
 ) -> DataFrame:
     """STREAM-STATIC incremental-dedup PREFILTER: keep only pages whose MinHash
@@ -279,7 +271,7 @@ def novel_pages_stream(
         raise ValueError("pass exactly one of index_memberships / probe_sigs")
     from openstreetmapio_jl_spark.operators.dedup import N_BANDS, minhash_band_sig_cols
 
-    sigs = minhash_band_sig_cols(F.col(text_col))
+    sigs = minhash_band_sig_cols(F.col("text"))
     out = pages
     keep = F.lit(True)
     for b in range(N_BANDS):
@@ -332,7 +324,6 @@ def reject_seen_urls_stream(
     pages: DataFrame,
     bloom_words: DataFrame,
     *,
-    url_col: str = "url",
     m: int = None,
     k: int = None,
 ) -> DataFrame:
@@ -370,7 +361,7 @@ def reject_seen_urls_stream(
     m = BLOOM_M_DEFAULT if m is None else m
     k = BLOOM_K_DEFAULT if k is None else k
     _check_bloom_params(m, k)
-    pages = pages.filter(F.col(url_col).isNotNull())
+    pages = pages.filter(F.col("url").isNotNull())
     words = {int(r.word): int(r.bits) for r in bloom_words.collect()}
     if not words:
         return pages  # empty filter: nothing has been seen, keep every url
@@ -379,7 +370,7 @@ def reject_seen_urls_stream(
         entries.append(F.lit(w))
         entries.append(F.lit(bits))
     wmap = F.create_map(*entries)
-    pos = _bloom_positions(F.col(url_col), m, k)
+    pos = _bloom_positions(F.col("url"), m, k)
     # per position p: is bit (p % 32) set in word (p div 32)?
     # pow(2, p%32) is a dyadic IEEE exact (< 2^32) — no variable shiftleft
     # needed inside the HOF lambda

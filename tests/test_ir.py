@@ -27,7 +27,7 @@ CORPUS = [
 
 def test_tfidf_golden_values(spark):
     out = ir.ranked_terms(
-        _docs(spark, CORPUS), id_col="doc_id", top_k=2, scoring="tfidf"
+        _docs(spark, CORPUS), top_k=2, scoring="tfidf"
     ).collect()
     got = {(r.id, r.pos): (r.term, r.score) for r in out}
     # doc 1: tf(the)=2, df(the)=2, N=3 → 2*(ln(4/3)+1); every other doc-1 term
@@ -47,7 +47,6 @@ def test_tfidf_tie_breaks_on_term_ascending(spark):
     # rank order must be the term string ascending
     out = ir.ranked_terms(
         _docs(spark, [(1, "zebra apple"), (2, "zebra apple")]),
-        id_col="doc_id",
         top_k=2,
     ).collect()
     for doc in (1, 2):
@@ -64,7 +63,7 @@ def test_bm25_length_normalization_and_idf(spark):
         (3, "word word word"),
     ]
     out = ir.ranked_terms(
-        _docs(spark, rows), id_col="doc_id", top_k=25, scoring="bm25"
+        _docs(spark, rows), top_k=25, scoring="bm25"
     ).collect()
     score = {(r.id, r.term): r.score for r in out}
     assert score[(1, "rare")] > score[(2, "rare")]
@@ -80,7 +79,7 @@ def test_empty_and_punctuation_only_docs_produce_no_rows(spark):
     # DESCENDING [0, -1] in Spark — without the size guard these docs would
     # emit NULL-term rows (and DuckDB's unnest-of-empty-list would not)
     rows = [(1, ""), (2, "!!! ... ???"), (3, "real words here")]
-    out = ir.ranked_terms(_docs(spark, rows), id_col="doc_id", top_k=5).collect()
+    out = ir.ranked_terms(_docs(spark, rows), top_k=5).collect()
     assert {r.id for r in out} == {3}
     assert all(r.term is not None for r in out)
     # but the empty docs still count toward N: df smoothing sees N=3
@@ -92,7 +91,7 @@ def test_round_dp_gives_double_scores_and_id_ordered_ties(spark):
     # round_dp ranks on the rounded decimal but emits a double
     # (functions/exact.py); equal rounded scores still rank by id ascending
     terms = ir.ranked_terms(
-        _docs(spark, CORPUS), id_col="doc_id", top_k=1, round_dp=6
+        _docs(spark, CORPUS), top_k=1, round_dp=6
     )
     assert dict(terms.dtypes)["score"] == "double"
     assert terms.count() == 3
@@ -157,7 +156,7 @@ def test_indexed_search_equals_direct(spark):
     assert stats["n_docs"] == 30 and stats["n_postings"] > 0
     q = "alpha gammax doc7"
     direct = ir.search_bm25(docs, q, top_n=10, round_dp=6)
-    indexed = ir.search_bm25_indexed(spark, "t5_ir", q, top_n=10, round_dp=6)
+    indexed = ir.search_bm25_indexed(spark, "t5_ir", q, round_dp=6)
     assert sorted(map(tuple, direct.collect())) == sorted(
         map(tuple, indexed.collect())
     )
@@ -170,7 +169,7 @@ def test_indexed_search_equals_direct(spark):
 def test_tokenizer_strips_punctuation_and_case(spark):
     # "The cat." and "the cat" must agree on both terms
     out = ir.ranked_terms(
-        _docs(spark, [(1, "The cat."), (2, "the cat")]), id_col="doc_id", top_k=5
+        _docs(spark, [(1, "The cat."), (2, "the cat")]), top_k=5
     ).collect()
     by_doc = {}
     for r in out:

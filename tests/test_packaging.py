@@ -192,7 +192,7 @@ def test_spark_submit_corpus_pipeline(pyfiles_zip, tmp_path, osm_data):
 def test_spark_submit_export_job(pyfiles_zip, tmp_path, osm_data, spark):
     """decode → export → re-read closes the loop via spark-submit: PBF to
     parquet tables, tables back to a sharded PBF directory, shards re-ingested
-    with the distributed multi-file reader at original counts."""
+    through the driver-built blob index at original counts."""
     from openstreetmapio_jl_spark.fixtures import generator as G
     from openstreetmapio_jl_spark.sources.pbf_source import read_pbf
 

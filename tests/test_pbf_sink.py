@@ -2,9 +2,9 @@
 
 The reference has no write path (sinks are in-memory dicts — SURVEY.md §2
 Table B); this is new engine surface, so the bar is self-consistency: a bundle
-written by the sink and re-read through the distributed multi-file index path
-must reproduce every entity bit-for-bit (ids, coords, tags, info, refs,
-positions, members).
+written by the sink and re-read through the blob index the driver builds over
+all shard files must reproduce every entity bit-for-bit (ids, coords, tags,
+info, refs, positions, members).
 """
 
 from __future__ import annotations

@@ -379,6 +379,19 @@ def test_geocode_regex_runs_once_per_row(spark, fn):
     assert code.count(".find(") == 1
 
 
+@pytest.mark.parametrize("fn", ["extract_geocodes", "extract_geocodes_multi"])
+def test_geocode_split_runs_once_per_row(spark, fn):
+    """A mention is split into (lat, lon) once per row: the generated code
+    holds one ``split``. With ``lat``/``lon`` aliased in a projection the
+    optimizer inlined the split into each range predicate (5 calls)."""
+    from openstreetmapio_jl_spark.operators import geocode
+
+    pages = spark.createDataFrame([("u", "geo:1.0,2.0")], "url string, text string")
+    df = getattr(geocode, fn)(pages)
+    code = str(df._jdf.queryExecution().debug().codegenToSeq().mkString("\n"))
+    assert code.count(".split(") == 1
+
+
 def test_geocode_rows_on_crafted_pages(spark):
     from openstreetmapio_jl_spark.operators import geocode
 

@@ -509,7 +509,7 @@ def test_ivf_pairs_unique_and_cos_exact(spark):
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
     q = df.filter(F.col("vec_id") < 6)
     ivf = similarity.ivf_cosine_topk(
-        q, df, k=3, n_lists=4, nprobe=2, dim=8, seed=7
+        q, df, k=3, n_lists=4, dim=8
     ).collect()
     pairs = [(r.query_id, r.neighbor_id) for r in ivf]
     assert len(pairs) == len(set(pairs))  # no duplicate meetings

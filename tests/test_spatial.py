@@ -148,12 +148,12 @@ def test_cell_udfs_match_numpy_kernels(spark, points):
     lat, lon = pdf["lat"].to_numpy(), pdf["lon"].to_numpy()
     out = points.select(
         "url",
-        cells.s2_cell_udf(12)(F.col("lat"), F.col("lon")).alias("s2"),
+        cells.s2_cell_udf()(F.col("lat"), F.col("lon")).alias("s2"),
         cells.hex_cell_udf(9)(F.col("lat"), F.col("lon")).alias("hex"),
     ).toPandas()
     merged = pdf.merge(out, on="url")
     exp_s2 = cells.s2_cell_id(
-        merged["lat"].to_numpy(), merged["lon"].to_numpy(), level=12
+        merged["lat"].to_numpy(), merged["lon"].to_numpy()
     )
     exp_hex = cells.hex_cell(
         merged["lat"].to_numpy(), merged["lon"].to_numpy(), res=9
@@ -172,7 +172,7 @@ def test_geohash_matches_canonical_values(spark):
     got = [
         r.gh
         for r in pts.select(
-            cells.geohash_col(F.col("lat"), F.col("lon"), 7).alias("gh")
+            cells.geohash_col(F.col("lat"), F.col("lon")).alias("gh")
         ).collect()
     ]
     # first two are the classic published geohash examples

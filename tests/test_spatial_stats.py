@@ -179,7 +179,7 @@ def test_idw_matches_replica(spark):
     got = {
         r.query_id: (r.n_neighbors, float(r.est))
         for r in K.idw_interpolate(
-            queries, corpus, value_col="v", k=3, zoom=12
+            queries, corpus, value_col="v"
         ).collect()
     }
     assert set(got) == set(want)
@@ -199,7 +199,7 @@ def test_idw_coincident_point_dominates(spark):
         [(1, 50.0, 8.0, 42.0), (2, 50.01, 8.01, 1000.0), (3, 50.02, 8.02, 1000.0)],
         "id long, lat double, lon double, v double",
     )
-    out = K.idw_interpolate(queries, corpus, value_col="v", k=3, zoom=12).collect()
+    out = K.idw_interpolate(queries, corpus, value_col="v").collect()
     assert len(out) == 1 and abs(float(out[0].est) - 42.0) < 0.01
 
 
